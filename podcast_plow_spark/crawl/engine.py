@@ -5,7 +5,8 @@ Each epoch mirrors one turn of the reference's worker poll loop
 
     dequeue batch (Q2 ordering + politeness cap)
       → fetch (feeds: parse+explode entries; images: payload join)
-      → canonicalize → robots gate → within-epoch dedup
+      → canonicalize + host + robots gate (ONE Python pass per row)
+      → within-epoch dedup
       → URL-seen filter (blocked Bloom fast path + exact anti-join)
       → enqueue new frontier rows (deterministic seq)
       → mark batch done → lineage rows → ATOMIC snapshot commit
@@ -29,6 +30,15 @@ Scale design notes (10^10 frontier — these are now code, not notes):
   part per epoch, history never re-read or re-written.
 - crawl_rank / seq windows run on ≤ K or ≤ fan-out(K) rows per epoch,
   never on the full frontier.
+- canonicalization, host extraction and the robots verdict run in
+  one opaque ``mapInPandas`` (``politeness.robots_filter``): each
+  candidate crosses the Arrow boundary once, and Catalyst cannot push
+  a ``url_canon`` filter below the feed⋈parent join and evaluate the
+  canonicalizer on both sides (tests/test_plans.py).
+- per-epoch caches (batch, dequeue prefix, probed candidates, new
+  rows) hold a few hundred rows; the session lets AQE coalesce the
+  shuffles inside them (``session.py``), so their plans run a
+  batch-sized number of tasks, not ``spark.sql.shuffle.partitions``.
 - the ``bytes`` image column is touched only by the payload join and
   the invariant job — column pruning keeps every other scan narrow.
 - the seen filter's Bloom is built once then maintained incrementally;
@@ -48,12 +58,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from podcast_plow_spark.functions.urls import (
-    canonicalize_url_udf,
-    extract_host_udf,
-    image_id_col,
-    url_kind_col,
-)
+from podcast_plow_spark.functions.urls import image_id_col, url_kind_col
 from podcast_plow_spark.operators import frontier as fr
 from podcast_plow_spark.operators.politeness import (
     parse_crawl_delay,
@@ -197,11 +202,7 @@ class CrawlEngine:
     def _project_candidates(self, raw: DataFrame) -> DataFrame:
         """(url, seq_key[, parent info]) → canonicalized, robots-passed,
         first-occurrence-deduped candidate rows ready for enqueue."""
-        c = raw.withColumn("url_canon", canonicalize_url_udf(F.col("url")))
-        c = c.where(F.col("url_canon").isNotNull())
-        c = c.withColumn("host", extract_host_udf(F.col("url_canon")))
-        c = robots_filter(c, self._robots(), self.cfg.user_agent)
-        c = c.where(F.col("robots_ok")).drop("robots_ok")
+        c = robots_filter(raw, self._robots(), self.cfg.user_agent)
         w = Window.partitionBy("url_canon").orderBy(F.col("seq_key").asc())
         c = c.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") == 1).drop("__rn")
         return c.withColumn("fingerprint", F.sha2(F.col("url_canon"), 256))
@@ -217,7 +218,7 @@ class CrawlEngine:
             max_attempts=self.cfg.max_attempts,
             num_partitions=self.cfg.num_partitions,
             seq_base=0,
-        )
+        ).cache()  # the count and the bucketed write share one evaluation
         n = rows.count()
         # frontier is BUCKETED by host_hash (Iceberg bucket(N, host)
         # analog) — epochs later rewrite only the buckets they touch —
@@ -253,6 +254,7 @@ class CrawlEngine:
             "fetched_images", self.spark.createDataFrame([], "image_id string, url_canon string, epoch long")
         )
         self.store.commit(0, {"epoch": 0, "next_seq": n + 1, "n_queued": n})
+        rows.unpersist()
 
     # -- one epoch ---------------------------------------------------------
 

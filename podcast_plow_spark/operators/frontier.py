@@ -58,7 +58,6 @@ __all__ = [
     "cluster_by_host",
     "runnable",
     "dequeue_batch",
-    "dequeue_batch_scalable",
     "dequeue_batch_polite",
     "mark_done",
     "mark_failed",
@@ -194,64 +193,6 @@ def dequeue_batch(
     return batch.withColumn("crawl_rank", F.row_number().over(w).cast("long"))
 
 
-def dequeue_batch_scalable(
-    frontier: DataFrame,
-    k: int,
-    now: dt.datetime,
-    sample_rows: int = 20_000,
-    safety: float = 1.3,
-    with_rank: bool = True,
-) -> DataFrame:
-    """Top-K dequeue for LARGE K (the 10^10-frontier path).
-
-    ``with_rank=False`` skips the global crawl_rank window (a
-    single-partition sort of K rows) when the caller only needs the
-    batch *set* — ordering is still fully determined by ``seq``.
-
-    ``orderBy().limit(k)`` compiles to TakeOrderedAndProject, which
-    merges up to partitions×k rows on the driver — fine for small
-    politeness batches, pathological for k in the hundreds of
-    thousands. This variant pre-filters with a sampled threshold:
-
-    1. sample ~``sample_rows`` runnable rows, sort driver-side, take the
-       key at quantile k/N inflated by ``safety`` → threshold tuple;
-    2. filter the frontier to keys ≤ threshold (≈ k·safety rows survive,
-       pushed down to the scan);
-    3. exact ``orderBy().limit(k)`` on the reduced set — the driver now
-       merges O(k) rows, not O(partitions·k);
-    4. if the sample undershot (filtered count < k), fall back to the
-       exact path on the full runnable set.
-
-    Result is exactly equal to :func:`dequeue_batch` (tested in
-    tests/test_frontier_queue.py).
-    """
-    df = runnable(frontier, now)
-    n = df.count()
-    if n <= max(k * 2, 100_000):
-        return dequeue_batch(frontier, k, now)
-
-    frac = min(1.0, sample_rows / n)
-    sample = df.select("priority", "run_at", "seq").sample(False, frac, seed=42).collect()
-    if not sample:
-        return dequeue_batch(frontier, k, now)
-    sample.sort(key=lambda r: (-r["priority"], r["run_at"], r["seq"]))
-    cut_idx = min(len(sample) - 1, int(len(sample) * (k / n) * safety))
-    t = sample[cut_idx]
-    tp, tr, ts = t["priority"], t["run_at"], t["seq"]
-    reduced = df.where(
-        (F.col("priority") > tp)
-        | ((F.col("priority") == tp) & (F.col("run_at") < F.lit(tr)))
-        | ((F.col("priority") == tp) & (F.col("run_at") == F.lit(tr)) & (F.col("seq") <= ts))
-    )
-    if reduced.count() < k:  # sample undershot — exact fallback
-        return dequeue_batch(frontier, k, now)
-    batch = reduced.orderBy(*DEQUEUE_ORDER()).limit(k)
-    if with_rank:
-        w = Window.orderBy(*DEQUEUE_ORDER())
-        batch = batch.withColumn("crawl_rank", F.row_number().over(w).cast("long"))
-    return batch
-
-
 def dequeue_batch_polite(
     frontier: DataFrame,
     k: int,
@@ -278,9 +219,10 @@ def dequeue_batch_polite(
 
     Scale shape: the naive formulation is a window over the FULL
     runnable frontier — an Exchange+Sort of 10^10 rows every epoch.
-    Instead, for large frontiers this uses a sampled order-key
-    threshold (as :func:`dequeue_batch_scalable`) to cut a global-order
-    *prefix* first, then ranks hosts only inside the prefix:
+    Instead, for large frontiers this samples the runnable rows' order
+    keys and takes the key at quantile k/N (inflated by ``safety``) as
+    a threshold that cuts a global-order *prefix* first (pushed to the
+    scan), then ranks hosts only inside the prefix:
 
     - prefix-closure: all same-host rows ordered before a prefix row
       are themselves in the prefix, so host-rank computed on the

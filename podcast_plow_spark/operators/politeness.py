@@ -1,5 +1,6 @@
-"""Politeness: robots.txt evaluation, per-host fetch scheduling, and
-hot-host salting (SURVEY.md §2.10, north-rule axis).
+"""Politeness: robots.txt evaluation (inside the crawl engine's
+single-pass candidate gate), per-host fetch scheduling, and hot-host
+salting (SURVEY.md §2.10, north-rule axis).
 
 The reference's politeness is a sequential QPS throttle
 (``server/services/evidence.py:414-441``) + inter-query sleep
@@ -21,9 +22,13 @@ import re
 from collections.abc import Iterator
 from urllib.parse import urlparse
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
+
+from podcast_plow_spark.functions.urls import _canonicalize_series, extract_host
 
 __all__ = [
     "parse_robots",
@@ -162,38 +167,47 @@ def robots_allowed(rules: list[tuple[bool, str]], path: str) -> bool:
 
 
 def robots_filter(
-    candidates: DataFrame,
+    raw: DataFrame,
     robots_by_host: dict[str, str],
     user_agent: str = "plow-spark",
-    url_col: str = "url_canon",
-    host_col: str = "host",
+    url_col: str = "url",
 ) -> DataFrame:
-    """Vectorized robots gate: broadcast the per-host robots bodies,
-    compile rules once per executor, evaluate per Arrow batch."""
-    spark = candidates.sparkSession
-    bc = spark.sparkContext.broadcast(robots_by_host)
+    """Canonicalize, extract the host and apply the robots gate in ONE
+    Python pass per candidate row.
 
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
+    Adds ``url_canon`` and ``host`` to ``raw``'s columns and drops rows
+    whose canonical URL is null or whose path robots.txt disallows.
+    The per-host robots bodies are broadcast and parsed once per host
+    per task. One opaque ``mapInPandas`` instead of two scalar UDFs
+    plus a gate: Catalyst cannot push the ``url_canon IS NOT NULL``
+    filter below a join and so evaluate the canonicalizer twice, and
+    each row crosses the Arrow boundary once."""
+    bc = raw.sparkSession.sparkContext.broadcast(robots_by_host)
     # copy — .add() would mutate the input DataFrame's cached schema
-    out_schema = StructType(list(candidates.schema.fields) + [StructField("robots_ok", BooleanType())])
+    out_schema = StructType(
+        list(raw.schema.fields)
+        + [StructField("url_canon", StringType()), StructField("host", StringType())]
+    )
 
     def gate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[str, list[tuple[bool, str]]] = {}
+        rules: dict[str, list[tuple[bool, str]]] = {}
         bodies = bc.value
         for pdf in batches:
-            oks = []
-            for url, host in zip(pdf[url_col], pdf[host_col]):
+            canon = _canonicalize_series(pdf[url_col])
+            keep = canon.notna().to_numpy()
+            pdf, canon = pdf[keep].copy(), canon[keep]
+            hosts = canon.map(extract_host)
+            oks = np.zeros(len(canon), dtype=bool)
+            for i, (url, host) in enumerate(zip(canon, hosts)):
                 h = (host or "").lower()
-                if h not in cache:
-                    cache[h] = parse_robots(bodies.get(h, ""), user_agent)
-                path = urlparse(url).path or "/"
-                oks.append(robots_allowed(cache[h], path))
-            pdf = pdf.copy()
-            pdf["robots_ok"] = oks
-            yield pdf
+                if h not in rules:
+                    rules[h] = parse_robots(bodies.get(h, ""), user_agent)
+                oks[i] = robots_allowed(rules[h], urlparse(url).path or "/")
+            pdf["url_canon"] = canon.to_numpy()
+            pdf["host"] = hosts.to_numpy()
+            yield pdf[oks]
 
-    return candidates.mapInPandas(gate, schema=out_schema)
+    return raw.mapInPandas(gate, schema=out_schema)
 
 
 # --- per-host fetch scheduling ------------------------------------------

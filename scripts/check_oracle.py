@@ -24,13 +24,15 @@ TABLES = [
 
 
 def _norm(v):
+    """Sort key for one value: a (rank, value) pair, so a column that
+    mixes NULLs (or NaNs) with values still sorts. NULL sorts first."""
+    if v is None:
+        return (0, "")
     if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return round(v, 9)
+        return (2, "NaN") if math.isnan(v) else (1, round(v, 9))
     if isinstance(v, bytes):
-        return v.hex()
-    return str(v) if v is not None else None
+        return (2, v.hex())
+    return (2, str(v))
 
 
 def main() -> None:

@@ -2,8 +2,9 @@
 
 ADVICE r4: the zip went stale mid-round once — a cluster run via
 jobs/crawl_job.py would have silently shipped the previous round's
-engine. This check makes staleness a test failure: fix is
-``scripts/package.sh``.
+engine. This check makes staleness a test failure: every zip member
+must be a package ``.py`` file whose bytes equal the source file's, and
+every source file must be in the zip. Fix is ``scripts/package.sh``.
 """
 
 from __future__ import annotations
@@ -32,7 +33,7 @@ def test_zip_matches_source_tree():
     assert os.path.exists(ZIP), "dist/podcast_plow_spark.zip missing — run scripts/package.sh"
     tree = _tree_files()
     with zipfile.ZipFile(ZIP) as z:
-        zipped = {n: z.read(n) for n in z.namelist() if n.endswith(".py")}
+        zipped = {n: z.read(n) for n in z.namelist()}
     missing = sorted(set(tree) - set(zipped))
     extra = sorted(set(zipped) - set(tree))
     assert not missing and not extra, (

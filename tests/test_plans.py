@@ -233,3 +233,106 @@ def test_multimodal_feature_scan_prunes_to_payload_columns(spark, tmp_path_facto
     imgs = spark.read.parquet(path).select("image_id", "bytes", "w", "h", "fmt")
     plan = _plan(extract_image_features(imgs))
     assert "caption" not in plan and "phash" not in plan, plan
+
+
+def _plan_tree(plan: str) -> list[tuple[int, str]]:
+    """(depth, node text) per line of a plan tree string; depth is the
+    column of the node name, so a node's subtree is the run of lines
+    after it that sit deeper."""
+    out = []
+    for ln in plan.splitlines():
+        stripped = ln.lstrip(" :+-")
+        if stripped:
+            out.append((len(ln) - len(stripped), stripped))
+    return out
+
+
+def _ancestors(tree: list[tuple[int, str]], i: int) -> list[int]:
+    path, depth = [], tree[i][0]
+    for j in range(i - 1, -1, -1):
+        if tree[j][0] < depth:
+            path.append(j)
+            depth = tree[j][0]
+    return path
+
+
+_PY_NODES = ("MapInPandas", "ArrowEvalPython", "BatchEvalPython")
+
+
+def test_discovery_candidates_cross_python_once(spark, tmp_path_factory, monkeypatch):
+    """A discovery epoch's candidate projection runs ONE Python node
+    between the feed parse and the Bloom probe (canonicalize + host +
+    robots in one mapInPandas), and no Python eval node sits under the
+    feed⋈parent join — Catalyst must not be able to push a url_canon
+    filter below the join and run the canonicalizer on both sides."""
+    from podcast_plow_spark.crawl.engine import CrawlConfig, CrawlEngine
+    from podcast_plow_spark.operators import seen
+    from podcast_plow_spark.sources.fixtures import FixtureSpec, make_fixtures
+    from podcast_plow_spark.sources.snapshots import SnapshotStore
+
+    root = str(tmp_path_factory.mktemp("plan_fixtures"))
+    fx = make_fixtures(FixtureSpec(root=root, n_feeds=2, entries_per_feed=4))
+    eng = CrawlEngine(
+        spark,
+        SnapshotStore(str(tmp_path_factory.mktemp("plan_crawl"))),
+        fx.root,
+        config=CrawlConfig(batch_size=8, per_host_cap=2, num_partitions=4),
+    )
+    eng.bootstrap(f"{fx.root}/feeds.txt")
+
+    plans: list[str] = []
+    real_probe = seen.probe_bloom
+
+    def spy(candidates, *args, **kwargs):
+        out = real_probe(candidates, *args, **kwargs)
+        plans.append(_plan(out))
+        return out
+
+    monkeypatch.setattr(seen, "probe_bloom", spy)
+    assert eng.run_epoch()  # epoch 1 dequeues the seed feeds
+    assert len(plans) == 1, plans
+
+    tree = _plan_tree(plans[0])
+    probe = next(i for i, (_, t) in enumerate(tree) if t.startswith("ArrowEvalPython"))
+    parse = next(i for i, (_, t) in enumerate(tree) if t.startswith("MapInPandas") and "fetch(" in t)
+    path = _ancestors(tree, parse)
+    assert probe in path, plans[0]
+    between = [tree[j][1] for j in path[: path.index(probe)] if tree[j][1].startswith(_PY_NODES)]
+    assert len(between) == 1 and between[0].startswith("MapInPandas"), plans[0]
+
+    join = next(j for j in path if "Join" in tree[j][1].split(" ", 1)[0])
+    assert "feed_url" in tree[join][1], plans[0]
+    under_join = []
+    for d, t in tree[join + 1 :]:
+        if d <= tree[join][0]:
+            break
+        under_join.append(t)
+    assert not [t for t in under_join if t.startswith(("ArrowEvalPython", "BatchEvalPython"))], plans[0]
+
+
+def test_cached_small_dequeue_batch_is_coalesced(spark):
+    """A dequeued batch of ≤100 rows, once cached, holds at most
+    defaultParallelism partitions: AQE coalesces the shuffles inside
+    cached plans (session.py), so a batch-sized cache is not spread
+    over spark.sql.shuffle.partitions near-empty partitions."""
+    import datetime as dt
+
+    from podcast_plow_spark.operators import frontier as fr
+
+    raw = spark.range(0, 400, 1, 4).select(
+        F.concat(F.lit("https://h"), (F.col("id") % 40).cast("string"), F.lit(".com/p"), F.col("id").cast("string")).alias("url"),
+        F.concat(F.lit("h"), (F.col("id") % 40).cast("string"), F.lit(".com")).alias("host"),
+        F.col("id").alias("seq_key"),
+    ).withColumn("url_canon", F.col("url")).withColumn("fingerprint", F.sha2(F.col("url"), 256))
+    frontier = fr.enqueue(raw, epoch=0, seq_mode="keyed")
+    # without the global crawl_rank window, the batch keeps the
+    # partitioning of the per-host politeness window's shuffle
+    batch = fr.dequeue_batch_polite(
+        frontier, 100, dt.datetime(2024, 1, 1), per_host_cap=2, with_rank=False
+    ).cache()
+    try:
+        assert 0 < batch.count() <= 100
+        n_parts = batch.rdd.getNumPartitions()
+        assert n_parts <= spark.sparkContext.defaultParallelism, n_parts
+    finally:
+        batch.unpersist()
