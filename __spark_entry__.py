@@ -185,33 +185,6 @@ FROM customer c
 
 
 # ----------------------------------------------------------------------
-# J1 — inner equi-join, broadcastable dim (reference server/app.py:876-882)
-# ----------------------------------------------------------------------
-
-def q_orders_with_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    o = _t(spark, sf_dir, "orders")
-    joined = (
-        o.join(F.broadcast(c), o["o_custkey"] == c["c_custkey"], "inner")
-        .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"], "inner")
-    )
-    return (
-        joined.groupBy("n_name")
-        .agg(F.round(F.sum("o_totalprice"), 2).alias("revenue"), F.count(F.lit(1)).alias("n_orders"))
-        .orderBy("n_name")
-    )
-
-
-_SQL_ORDERS_NATION = """
-SELECT n_name, ROUND(SUM(o_totalprice), 2) AS revenue, COUNT(*) AS n_orders
-FROM orders JOIN customer ON o_custkey = c_custkey
-            JOIN nation ON c_nationkey = n_nationkey
-GROUP BY n_name ORDER BY n_name
-"""
-
-
-# ----------------------------------------------------------------------
 # F12/K6 — ILIKE search with recency cap (reference server/app.py:962-1021)
 # ----------------------------------------------------------------------
 
@@ -417,24 +390,6 @@ _SQL_JSON = """
 SELECT event_type, ROUND(AVG(COALESCE(CAST(json_extract_string(props, '$.k') AS INT), 0)), 4) AS avg_k,
        COUNT(*) AS n
 FROM events GROUP BY event_type ORDER BY event_type
-"""
-
-
-# ----------------------------------------------------------------------
-# D1/set-ops — unionByName + dedup (reference evidence_fetcher.py:449-458)
-# ----------------------------------------------------------------------
-
-def q_union_nationkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
-    return c.unionByName(s).distinct().orderBy("nationkey")
-
-
-_SQL_UNION = """
-SELECT c_nationkey AS nationkey FROM customer
-UNION
-SELECT s_nationkey AS nationkey FROM supplier
-ORDER BY nationkey
 """
 
 
@@ -1363,34 +1318,6 @@ GROUP BY o_custkey HAVING COUNT(*) >= 15 ORDER BY o_custkey
 """
 
 
-def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape: J1 3-way join + agg + ordered top-N."""
-    c = _t(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").where(F.col("o_orderdate") < "1998-01-01")
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_shipdate") > "1998-01-01")
-    j = li.join(o, li["l_orderkey"] == o["o_orderkey"]).join(
-        F.broadcast(c), o["o_custkey"] == c["c_custkey"]
-    )
-    return (
-        j.groupBy("l_orderkey", "o_orderdate")
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
-        .orderBy(F.col("revenue").desc(), F.col("o_orderdate").asc(), F.col("l_orderkey").asc())
-        .limit(10)
-    )
-
-
-_SQL_SHIPPING = """
-SELECT l_orderkey, o_orderdate, ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-              JOIN customer ON o_custkey = c_custkey
-WHERE c_mktsegment = 'BUILDING' AND o_orderdate < TIMESTAMP '1998-01-01'
-  AND l_shipdate > TIMESTAMP '1998-01-01'
-GROUP BY l_orderkey, o_orderdate
-ORDER BY revenue DESC, o_orderdate ASC, l_orderkey ASC
-LIMIT 10
-"""
-
-
 def q_collect_evidence_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4 grouped collect preserving deterministic order (reference
     worker/auto_grade.py:34-53) — arrays compared as sorted joined strings."""
@@ -1953,11 +1880,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "risk_levels": q_risk_levels,
         "grade_claims": q_grade_claims,
         "json_payload": q_json_payload,
-        # union_nationkeys rotated out under the driver's 50-row cap
-        # (round 5, restoring minhash_signatures per VERDICT r4): the
-        # union+dedup semantics it witnessed are frozen by
-        # tests/test_merge_ops.py::test_union_dedup_semantics, and
-        # q_union_nationkeys/_SQL_UNION remain importable.
         "cosine_topk": q_cosine_topk,
         "doc_quality": q_doc_quality,
         "ngram_jaccard_dedup": q_ngram_jaccard,
@@ -1980,12 +1902,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "first_by_source_rank": q_first_by_source_rank,
         "semi_join_urgent": q_semi_join_urgent,
         "having_gate": q_having_gate,
-        # shipping_priority rotated out under the same 50-row cap
-        # (round 5, admitting embedding_near_dup — the brief's fifth
-        # dedup family needs an oracle row): its J1 3-way-join shape
-        # stays witnessed by local_supplier_volume + the
-        # BroadcastHashJoin plan test; q_shipping_priority/_SQL_SHIPPING
-        # remain importable.
         "embedding_near_dup": q_embedding_near_dup,
         "collect_evidence_lists": q_collect_evidence_lists,
         "upsert_customers": q_upsert_customers,

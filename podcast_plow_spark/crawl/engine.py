@@ -41,11 +41,12 @@ Scale design notes (10^10 frontier — these are now code, not notes):
   batch-sized number of tasks, not ``spark.sql.shuffle.partitions``.
 - the ``bytes`` image column is touched only by the payload join and
   the invariant job — column pruning keeps every other scan narrow.
-- the seen filter's Bloom is built once then maintained incrementally;
-  with ``bloom_fold_epochs > 1`` each epoch's insertions land in a
-  batch-sized cuckoo hot tier (O(batch)) and the O(filter-size) Bloom
-  OR-fold is amortized across epochs — the exact anti-join backstop is
-  unchanged either way.
+- the seen filter is one ``ShardedBloom`` (``bloom_shards`` shards by
+  host bucket; 1 = monolithic), built once then maintained
+  incrementally; with ``bloom_fold_epochs > 1`` each epoch's
+  insertions land in a batch-sized cuckoo hot tier (O(batch)) and the
+  O(filter-size) Bloom OR-fold is amortized across epochs — the exact
+  anti-join backstop is unchanged either way.
 """
 
 from __future__ import annotations
@@ -70,7 +71,6 @@ from podcast_plow_spark.operators.seen import (
     CuckooFilter,
     build_bloom,
     build_cuckoo,
-    build_sharded_bloom,
     seen_filter_exact,
 )
 from podcast_plow_spark.sources.feeds import fetch_and_parse_feeds, load_seeds
@@ -85,12 +85,11 @@ class CrawlConfig:
     per_host_cap: int = 2
     user_agent: str = "plow-spark"
     num_partitions: int = 8
-    use_bloom: bool = True
     bloom_bits_per_item: int = 12
-    #: shard the URL-seen filter by the frontier's crc32-host bucket
-    #: (ShardedBloom — the 10^10 SCALE_DESIGN layout, where a 15 GB
-    #: monolithic filter cannot be broadcast whole). None = monolithic.
-    bloom_shards: int | None = None
+    #: shards of the URL-seen filter, by the frontier's crc32-host
+    #: bucket (the 10^10 SCALE_DESIGN layout, where a 15 GB monolithic
+    #: filter cannot be broadcast whole). 1 = one monolithic filter.
+    bloom_shards: int = 1
     max_attempts: int = 3
     #: injectable clock — the dequeue honors ``run_at <= clock()``
     #: (reference dequeue_job's ``run_at <= now()``), so rows requeued
@@ -278,11 +277,7 @@ class CrawlEngine:
             fold_rows = frontier.where(
                 F.col("discovered_epoch") > F.lit(int(self._last_fold_epoch))
             ).select("url_canon")
-            if self.cfg.bloom_shards:
-                delta = build_sharded_bloom(fold_rows, "url_canon", like=self._bloom)
-            else:
-                delta = build_bloom(fold_rows, "url_canon", like=self._bloom)
-            self._bloom = self._bloom.merge(delta)
+            self._bloom = self._bloom.merge(build_bloom(fold_rows, "url_canon", like=self._bloom))
             self._hot = None
             self._epochs_since_fold = 0
             self._last_fold_epoch = epoch - 1
@@ -414,31 +409,20 @@ class CrawlEngine:
             # --- candidate projection + seen filter
             cand = self._project_candidates(cand_raw)
             seen = frontier.select("url_canon")
-            bloom = None
-            if self.cfg.use_bloom:
-                if self._bloom is None:
-                    if self.cfg.bloom_shards:
-                        self._bloom = build_sharded_bloom(
-                            seen,
-                            "url_canon",
-                            n_shards=self.cfg.bloom_shards,
-                            expected_items=self._bloom_capacity,
-                            bits_per_item=self.cfg.bloom_bits_per_item,
-                        )
-                    else:
-                        self._bloom = build_bloom(
-                            seen,
-                            "url_canon",
-                            expected_items=self._bloom_capacity,
-                            bits_per_item=self.cfg.bloom_bits_per_item,
-                        )
-                    # the full build covers every row in the frontier
-                    # read this epoch (all discovered_epoch ≤ epoch-1)
-                    self._last_fold_epoch = epoch - 1
-                bloom = self._bloom
+            if self._bloom is None:
+                self._bloom = build_bloom(
+                    seen,
+                    "url_canon",
+                    expected_items=self._bloom_capacity,
+                    bits_per_item=self.cfg.bloom_bits_per_item,
+                    n_shards=self.cfg.bloom_shards,
+                )
+                # the full build covers every row in the frontier
+                # read this epoch (all discovered_epoch ≤ epoch-1)
+                self._last_fold_epoch = epoch - 1
             unseen, stats = seen_filter_exact(
-                cand, seen, bloom, "url_canon",
-                measure_fpr=self.cfg.use_bloom,
+                cand, seen, self._bloom, "url_canon",
+                measure_fpr=True,
                 cache_registry=epoch_caches,
                 hot=self._hot,
             )
@@ -452,14 +436,14 @@ class CrawlEngine:
                 seq_base=next_seq - 1,
             ).cache()
             n_new = new_rows.count()
-            if self.cfg.use_bloom and n_new:
+            if n_new:
                 if self.cfg.bloom_fold_epochs > 1:
                     # O(batch) maintenance: insertions land in the
                     # cuckoo hot tier; the O(filter-size) Bloom OR +
                     # full re-broadcast are deferred to the amortized
-                    # fold at epoch start. Works for both filter
-                    # families — the tier is monolithic (batch-sized)
-                    # and probes OR it in after the (sharded) Bloom.
+                    # fold at epoch start. The tier is one batch-sized
+                    # cuckoo for any shard count; probes OR it in after
+                    # the Bloom.
                     if self._hot is None:
                         self._hot = CuckooFilter.sized_for(self.cfg.hot_tier_capacity)
                     self._hot = self._hot.merge(
@@ -467,13 +451,7 @@ class CrawlEngine:
                     )
                     self._epochs_since_fold += 1
                 else:
-                    # fold-every-epoch path (default / sharded)
-                    if self.cfg.bloom_shards:
-                        delta = build_sharded_bloom(
-                            new_rows.select("url_canon"), "url_canon", like=self._bloom
-                        )
-                    else:
-                        delta = build_bloom(new_rows.select("url_canon"), "url_canon", like=self._bloom)
+                    delta = build_bloom(new_rows.select("url_canon"), "url_canon", like=self._bloom)
                     self._bloom = self._bloom.merge(delta)
 
         # --- mark batch done + insert discoveries as ONE merge-on-read

@@ -57,7 +57,6 @@ __all__ = [
     "enqueue",
     "cluster_by_host",
     "runnable",
-    "dequeue_batch",
     "dequeue_batch_polite",
     "mark_done",
     "mark_failed",
@@ -173,26 +172,6 @@ def runnable(frontier: DataFrame, now: dt.datetime) -> DataFrame:
     )
 
 
-def dequeue_batch(
-    frontier: DataFrame,
-    k: int,
-    now: dt.datetime,
-    job_types: list[str] | None = None,
-) -> DataFrame:
-    """Top-K runnable rows in canonical order, with a ``crawl_rank``
-    column giving the exact dequeue sequence (1-based).
-
-    Physical plan: TakeOrderedAndProject (distributed heap top-K) —
-    verified in tests/test_plans.py. The rank window runs on ≤ k rows.
-    """
-    df = runnable(frontier, now)
-    if job_types:
-        df = df.where(F.element_at(F.col("payload"), "job_type").isin(job_types))
-    batch = df.orderBy(*DEQUEUE_ORDER()).limit(k)
-    w = Window.orderBy(*DEQUEUE_ORDER())
-    return batch.withColumn("crawl_rank", F.row_number().over(w).cast("long"))
-
-
 def dequeue_batch_polite(
     frontier: DataFrame,
     k: int,
@@ -207,7 +186,9 @@ def dequeue_batch_polite(
     cache_registry: "list[DataFrame] | None" = None,
     presample: "list | None" = None,
 ) -> DataFrame:
-    """Politeness-capped top-K dequeue — the epoch-loop primitive.
+    """Politeness-capped top-K dequeue — the epoch-loop primitive, and
+    the one dequeue: a cap ≥ ``k`` is the plain Q2 top-K (no host can
+    hold more than k rows of a k-row batch).
 
     Semantics (== the sequential oracle's greedy loop): walk the
     runnable rows in canonical order, take a row unless its host

@@ -24,6 +24,11 @@ that the filter rules out are definitively unseen (no false
 negatives); candidates it flags are verified by the exact anti-join.
 The final seen set is therefore always exact.
 
+One filter type: :class:`ShardedBloom`, built by :func:`build_bloom`.
+Its shards follow the frontier's crc32-host bucket; the monolithic
+filter is simply ``n_shards=1`` (no host bucket is computed then).
+:class:`BloomFilter` is the per-shard block kernel.
+
 Blocked layout: the bit array is split into 512-bit (8×u64) blocks;
 all k probe bits of a key land in one block (cache-friendly, and
 mergeable by plain OR). Hash mixing is splitmix64 on the int64 key —
@@ -68,7 +73,7 @@ def _splitmix64(x: np.ndarray) -> np.ndarray:
 
 
 class BloomFilter:
-    """Numpy-backed blocked Bloom filter (value object, broadcastable)."""
+    """Numpy-backed blocked Bloom filter: one shard of a :class:`ShardedBloom`."""
 
     def __init__(self, n_blocks: int, k: int = 6, words: np.ndarray | None = None):
         self.n_blocks = n_blocks
@@ -110,18 +115,6 @@ class BloomFilter:
         assert self.n_blocks == other.n_blocks and self.k == other.k
         return BloomFilter(self.n_blocks, self.k, self.words | other.words)
 
-    def broadcast_on(self, spark) -> "object":
-        """Memoized Spark broadcast of this filter's payload — probing
-        every epoch against an unchanged filter re-ships megabytes of
-        bit array otherwise (a flat, serial per-epoch cost). The words
-        array is treated as immutable once broadcast (mutating builders
-        use add_many BEFORE any probe; merge() returns a NEW object)."""
-        bc = getattr(self, "_bc", None)
-        if bc is None:
-            bc = spark.sparkContext.broadcast((self.n_blocks, self.k, self.words))
-            self._bc = bc
-        return bc
-
 
 class ShardedBloom:
     """Blocked Bloom sharded by the frontier's host-hash bucket — the
@@ -133,25 +126,32 @@ class ShardedBloom:
     hosts, and an executor working bucket s needs ~15 GB / n_shards.
 
     In local mode all shards ride one broadcast (same total bytes as
-    the monolith); the sharding is the PLACEMENT story plus the
-    geometry story (each shard is sized for its keys, so saturation
-    in one hot bucket never degrades the other shards' fpr).
-    Interface-compatible with :class:`BloomFilter` where it matters:
-    ``merge`` (shard-wise OR) and membership via
-    :func:`probe_bloom`, which derives each key's bucket JVM-side.
+    one filter); the sharding is the PLACEMENT story plus the geometry
+    story (each shard is sized for its share of the keys, so
+    saturation in one hot bucket never degrades the other shards'
+    fpr). ``n_shards=1`` is the monolithic filter. Every shard has the
+    same geometry (``n_blocks``, ``k``); a bucket with no seen URL has
+    no shard. Membership is :func:`probe_bloom`, which derives each
+    key's bucket JVM-side.
+
+    Probing every epoch against an unchanged filter would re-ship
+    megabytes of bit array, so the broadcast is memoized per object;
+    the words are treated as immutable once built (``merge`` returns
+    a NEW object).
     """
 
-    def __init__(self, n_shards: int, shards: "dict[int, BloomFilter]", k: int = 6):
+    def __init__(self, n_shards: int, shards: "dict[int, BloomFilter]", n_blocks: int, k: int = 6):
         self.n_shards = n_shards
         self.shards = shards
+        self.n_blocks = n_blocks
         self.k = k
 
     def merge(self, other: "ShardedBloom") -> "ShardedBloom":
-        assert self.n_shards == other.n_shards
+        assert (self.n_shards, self.n_blocks, self.k) == (other.n_shards, other.n_blocks, other.k)
         merged: dict[int, BloomFilter] = dict(self.shards)
         for s, bf in other.shards.items():
             merged[s] = merged[s].merge(bf) if s in merged else bf
-        return ShardedBloom(self.n_shards, merged, self.k)
+        return ShardedBloom(self.n_shards, merged, self.n_blocks, self.k)
 
     def contains_many(self, keys: np.ndarray, buckets: np.ndarray) -> np.ndarray:
         """Vectorized probe: group keys by bucket, probe each group
@@ -169,8 +169,8 @@ class ShardedBloom:
     def broadcast_on(self, spark) -> "object":
         bc = getattr(self, "_bc", None)
         if bc is None:
-            payload = {s: (bf.n_blocks, bf.k, bf.words) for s, bf in self.shards.items()}
-            bc = spark.sparkContext.broadcast((self.n_shards, payload))
+            payload = {s: bf.words for s, bf in self.shards.items()}
+            bc = spark.sparkContext.broadcast((self.n_shards, self.n_blocks, self.k, payload))
             self._bc = bc
         return bc
 
@@ -414,66 +414,88 @@ def build_cuckoo(
 def _host_bucket_col(url_col: str, n_shards: int) -> F.Column:
     """Shard id from a URL column: same crc32-of-host bucketing as the
     frontier's ``host_hash`` layout (functions/urls.py:host_hash_col),
-    so shard s of the filter aligns with bucket s of the frontier."""
+    so shard s of the filter aligns with bucket s of the frontier.
+    One shard needs no host: the constant keeps ``parse_url``/``crc32``
+    out of the 1-shard build and probe plans."""
+    if n_shards == 1:
+        return F.lit(0)
     host = F.coalesce(F.parse_url(F.col(url_col), F.lit("HOST")), F.lit(""))
     return F.pmod(F.crc32(F.encode(host, "utf-8")), F.lit(n_shards)).cast("int")
 
 
-def build_sharded_bloom(
+def _key_col(col: str) -> F.Column:
+    """int64 key from a string column — first 15 sha256 hex chars
+    (engine-independent, same discipline as the dedup family)."""
+    return F.conv(F.substring(F.sha2(F.col(col), 256), 1, 15), 16, 10).cast("long")
+
+
+def build_bloom(
     seen: DataFrame,
     key_col: str = "url_canon",
-    n_shards: int = 16,
     expected_items: int | None = None,
     k: int = 6,
     bits_per_item: int = 12,
     like: "ShardedBloom | None" = None,
+    n_shards: int = 1,
 ) -> ShardedBloom:
-    """Per-host-bucket Bloom shards, built in one distributed pass:
-    each input partition builds partial shards for the buckets it
-    holds (emitting (shard, words) rows), and partials are OR-merged
-    per shard with ``reduceByKey`` — the driver receives n_shards
-    merged shards, never P partials. ``like`` pins shard geometry for
-    incremental maintenance (build over an epoch's insertions only,
-    then ``merge``)."""
+    """Per-host-bucket Bloom shards (``n_shards=1``: one filter over
+    all keys), built in one distributed pass. Each input partition
+    builds partial shards for the buckets it holds and emits one
+    (shard, words) row per shard; the partials are OR-merged as
+    ``{shard: words}`` maps with ``treeAggregate`` (logarithmic merge
+    depth — the driver receives O(log P) partial maps, not P). Each
+    map covers every shard its inputs touched, so with many shards a
+    tree task, and the driver, holds whole-filter maps; a
+    ``reduceByKey`` on shard id would keep each reducer to its own
+    shards, but measured slower at one shard.
+
+    ``like`` builds with another filter's shard count and geometry so
+    the result can be merged into it (incremental maintenance: per
+    epoch, build over only the epoch's insertions and OR into the
+    running filter — never re-scan the full seen set).
+
+    The ``like`` path builds SPARSELY: a batch of B keys sets at most
+    B·k bits, so each partition emits only its touched (shard,
+    word_index, word_bits) triples — never a full-geometry array. A
+    dense partial per partition made every small delta build
+    O(filter_size × partitions) in serialization alone (measured
+    40–169 s per 20k-row delta at a 10^8-key geometry; at the 10^10
+    design point a 15 GB partial per partition is simply unshippable).
+    Sparse partials are O(batch) end-to-end; the driver ORs them into
+    fresh arrays."""
     if like is not None:
-        n_shards = like.n_shards
-        geom = {s: (bf.n_blocks, bf.k) for s, bf in like.shards.items()}
-        default_geom = next(iter(geom.values())) if geom else None
+        n_shards, n_blocks, k = like.n_shards, like.n_blocks, like.k
     else:
-        geom = {}
-        default_geom = None
-    if default_geom is None:
         n = expected_items or seen.count()
-        proto = BloomFilter.sized_for(max(1, n // n_shards), bits_per_item=bits_per_item, k=k)
-        default_geom = (proto.n_blocks, proto.k)
+        n_blocks = BloomFilter.sized_for(max(1, n // n_shards), bits_per_item=bits_per_item, k=k).n_blocks
 
     keys_df = seen.select(
         _key_col(key_col).alias("__k"), _host_bucket_col(key_col, n_shards).alias("__b")
     )
+    # ≤ 32 build partitions: fewer, larger partials cut task and
+    # serialization overhead
     if keys_df.rdd.getNumPartitions() > 32:
         keys_df = keys_df.coalesce(32)
 
+    def keys_by_shard(batches: Iterator[pd.DataFrame]) -> Iterator[tuple[int, np.ndarray]]:
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            ks = pdf["__k"].to_numpy(dtype=np.int64).astype(np.uint64) % np.uint64(2**63)
+            bs = pdf["__b"].to_numpy(dtype=np.int64)
+            for s in np.unique(bs):
+                yield int(s), ks[bs == s]
+
     if like is not None:
-        # SPARSE delta build (same rationale as build_bloom's like=
-        # path): a batch sets ≤ B·k bits across its touched shards —
-        # emit (shard, word_index, word_bits) triples, never a dense
-        # shard-geometry array per touched shard per partition.
+        proto = BloomFilter(n_blocks, k, words=np.zeros(0, dtype=np.uint64))  # hash geometry only
+
         def part_sparse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             acc: dict[int, tuple[list, list]] = {}
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                ks = pdf["__k"].to_numpy(dtype=np.int64).astype(np.uint64) % np.uint64(2**63)
-                bs = pdf["__b"].to_numpy(dtype=np.int64)
-                for s in np.unique(bs):
-                    nb, kk = geom.get(int(s), default_geom)
-                    proto = BloomFilter(nb, kk, words=np.zeros(0, dtype=np.uint64))
-                    block, bit = proto._positions(ks[bs == s])
-                    w = (block[:, None] * np.uint64(_BLOCK_WORDS) + bit // np.uint64(64)).ravel()
-                    m = (np.uint64(1) << (bit % np.uint64(64))).ravel()
-                    lists = acc.setdefault(int(s), ([], []))
-                    lists[0].append(w)
-                    lists[1].append(m)
+            for s, ks in keys_by_shard(batches):
+                block, bit = proto._positions(ks)
+                lists = acc.setdefault(s, ([], []))
+                lists[0].append((block[:, None] * np.uint64(_BLOCK_WORDS) + bit // np.uint64(64)).ravel())
+                lists[1].append((np.uint64(1) << (bit % np.uint64(64))).ravel())
             rows = {"shard": [], "idx": [], "bits": []}
             for s, (ws, ms) in acc.items():
                 w = np.concatenate(ws)
@@ -490,144 +512,52 @@ def build_sharded_bloom(
             )
 
         shards: dict[int, BloomFilter] = {}
+        # ≤ P·touched-shards rows of ≤ batch·k pairs each — the driver
+        # receives O(batch)
         for r in keys_df.mapInPandas(part_sparse, "shard int, idx binary, bits binary").collect():
-            s = int(r["shard"])
-            nb, kk = geom.get(s, default_geom)
-            bf = shards.setdefault(s, BloomFilter(nb, kk))
+            bf = shards.setdefault(int(r["shard"]), BloomFilter(n_blocks, k))
             wi = np.frombuffer(r["idx"], dtype=np.uint64).astype(np.int64)
             np.bitwise_or.at(bf.words, wi, np.frombuffer(r["bits"], dtype=np.uint64))
-        return ShardedBloom(n_shards, shards, k)
+        return ShardedBloom(n_shards, shards, n_blocks, k)
 
+    # Arrow-vectorized partial shards: each partition builds its
+    # shards over all its Arrow batches (numpy bulk insert), emitting
+    # one binary row per shard it touched
     def part_shards(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         partial: dict[int, BloomFilter] = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ks = pdf["__k"].to_numpy(dtype=np.int64).astype(np.uint64) % np.uint64(2**63)
-            bs = pdf["__b"].to_numpy(dtype=np.int64)
-            for s in np.unique(bs):
-                nb, kk = geom.get(int(s), default_geom)
-                bf = partial.setdefault(int(s), BloomFilter(nb, kk))
-                bf.add_many(ks[bs == s])
+        for s, ks in keys_by_shard(batches):
+            partial.setdefault(s, BloomFilter(n_blocks, k)).add_many(ks)
         yield pd.DataFrame(
             {"shard": list(partial), "words": [bf.words.tobytes() for bf in partial.values()]}
         )
 
+    # Shard-wise OR of two {shard: words} maps into a NEW map: neither
+    # input is mutated (np.frombuffer arrays are read-only). Nested on
+    # purpose: workers unpickle it by value instead of importing this
+    # module (and pandas + pyspark.sql with it) in every fresh RDD
+    # worker, which cost ~0.35 s per cold build.
+    def or_maps(a: dict, b: dict) -> dict:
+        out = dict(a)
+        for s, w in b.items():
+            out[s] = out[s] | w if s in out else w
+        return out
+
     parts = keys_df.mapInPandas(part_shards, "shard int, words binary")
-    merged = (
-        parts.rdd.map(lambda r: (r["shard"], np.frombuffer(r["words"], dtype=np.uint64)))
-        .reduceByKey(lambda a, b: a | b)
-        .collect()
-    )
-    shards = {
-        int(s): BloomFilter(geom.get(int(s), default_geom)[0], geom.get(int(s), default_geom)[1], w.copy())
-        for s, w in merged
-    }
-    return ShardedBloom(n_shards, shards, k)
+    merged = parts.rdd.map(
+        lambda r: {int(r["shard"]): np.frombuffer(r["words"], dtype=np.uint64)}
+    ).treeAggregate({}, or_maps, or_maps, depth=3)
+    shards = {int(s): BloomFilter(n_blocks, k, w.copy()) for s, w in merged.items()}
+    return ShardedBloom(n_shards, shards, n_blocks, k)
 
 
-def _key_col(col: str) -> F.Column:
-    """int64 key from a string column — first 15 sha256 hex chars
-    (engine-independent, same discipline as the dedup family)."""
-    return F.conv(F.substring(F.sha2(F.col(col), 256), 1, 15), 16, 10).cast("long")
-
-
-def build_bloom(
-    seen: DataFrame,
-    key_col: str = "url_canon",
-    expected_items: int | None = None,
-    k: int = 6,
-    bits_per_item: int = 12,
-    like: "BloomFilter | None" = None,
-) -> BloomFilter:
-    """Per-partition blocked Blooms built in mapPartitions, merged via
-    ``treeAggregate`` (logarithmic merge depth — at 10^10 keys the
-    driver receives O(log P) partial filters, not P).
-
-    ``like`` builds with another filter's geometry so the result can be
-    merged into it (incremental maintenance: per epoch, build over only
-    the epoch's insertions and OR into the running filter — never
-    re-scan the full seen set).
-
-    The ``like`` path builds SPARSELY: a batch of B keys sets at most
-    B·k bits, so each partition emits only its touched (word_index,
-    word_bits) pairs — never a full-geometry array. The dense partial
-    path made every small delta build O(filter_size × partitions) in
-    serialization alone (measured 40–169 s per 20k-row delta at a
-    10^8-key geometry; at the 10^10 design point a single 15 GB
-    partial per partition is simply unshippable). Sparse partials are
-    O(batch) end-to-end; the driver ORs them into one fresh array."""
-    if like is not None:
-        n_blocks, kk = like.n_blocks, like.k
-    else:
-        n = expected_items or seen.count()
-        proto = BloomFilter.sized_for(n, bits_per_item=bits_per_item, k=k)
-        n_blocks, kk = proto.n_blocks, proto.k
-
-    if like is not None:
-        proto = BloomFilter(n_blocks, kk, words=np.zeros(0, dtype=np.uint64))  # hash geometry only
-
-        def part_sparse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            idxs, masks = [], []
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                keys = pdf["__k"].to_numpy(dtype=np.int64).astype(np.uint64) % np.uint64(2**63)
-                block, bit = proto._positions(keys)
-                idxs.append((block[:, None] * np.uint64(_BLOCK_WORDS) + bit // np.uint64(64)).ravel())
-                masks.append((np.uint64(1) << (bit % np.uint64(64))).ravel())
-            if idxs:
-                w = np.concatenate(idxs)
-                m = np.concatenate(masks)
-                order = np.argsort(w, kind="stable")
-                w, m = w[order], m[order]
-                uniq, starts = np.unique(w, return_index=True)
-                ored = np.bitwise_or.reduceat(m, starts)
-                yield pd.DataFrame({"idx": [uniq.tobytes()], "bits": [ored.tobytes()]})
-            else:
-                yield pd.DataFrame({"idx": [b""], "bits": [b""]})
-
-        keys_df = seen.select(_key_col(key_col).alias("__k"))
-        if keys_df.rdd.getNumPartitions() > 32:
-            keys_df = keys_df.coalesce(32)
-        words = np.zeros(n_blocks * _BLOCK_WORDS, dtype=np.uint64)
-        # P rows of ≤ batch·k pairs each — driver receives O(batch)
-        for r in keys_df.mapInPandas(part_sparse, "idx binary, bits binary").collect():
-            if r["idx"]:
-                wi = np.frombuffer(r["idx"], dtype=np.uint64).astype(np.int64)
-                np.bitwise_or.at(words, wi, np.frombuffer(r["bits"], dtype=np.uint64))
-        return BloomFilter(n_blocks, kk, words)
-
-    def comb_op(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-        return a | b
-
-    # Arrow-vectorized partial blooms: each partition builds ONE filter
-    # over all its Arrow batches (numpy bulk insert), emitting a single
-    # binary row; the tiny per-partition results are tree-merged.
-    def part_bloom(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bf = BloomFilter(n_blocks, kk)
-        for pdf in batches:
-            if len(pdf):
-                bf.add_many(pdf["__k"].to_numpy(dtype=np.int64).astype(np.uint64) % np.uint64(2**63))
-        yield pd.DataFrame({"words": [bf.words.tobytes()]})
-
-    # ≤ 32 build partitions: each partial filter is n_blocks×64B, so
-    # fewer, larger partials cut task + serialization overhead while
-    # treeAggregate still bounds what any single node merges
-    keys_df = seen.select(_key_col(key_col).alias("__k"))
-    if keys_df.rdd.getNumPartitions() > 32:
-        keys_df = keys_df.coalesce(32)
-    parts = keys_df.mapInPandas(part_bloom, "words binary")
-    words = (
-        parts.rdd.map(lambda r: np.frombuffer(r["words"], dtype=np.uint64))
-        .treeAggregate(np.zeros(n_blocks * _BLOCK_WORDS, dtype=np.uint64), comb_op, comb_op, depth=3)
-    )
-    return BloomFilter(n_blocks, kk, words)
+def build_sharded_bloom(seen: DataFrame, key_col: str = "url_canon", n_shards: int = 16, **kw) -> ShardedBloom:
+    # kept because perfbench wraps this name; package code calls build_bloom
+    return build_bloom(seen, key_col, n_shards=n_shards, **kw)
 
 
 def probe_bloom(
     candidates: DataFrame,
-    bloom: "BloomFilter | ShardedBloom",
+    bloom: ShardedBloom,
     key_col: str = "url_canon",
     hot: "CuckooFilter | None" = None,
 ) -> DataFrame:
@@ -636,14 +566,14 @@ def probe_bloom(
     insertions newer than the last Bloom fold). Definite negatives
     skip the exact join entirely.
 
-    The Python stage is a SCALAR pandas UDF over the int64 key column
-    only: Arrow moves one long column in and one boolean out, instead
-    of round-tripping every candidate column through Python (the old
-    mapInPandas form serialized the full wide row both ways — ~8× the
-    Arrow bytes for a one-column computation). The key itself is
-    computed JVM-side (sha2+conv), so Python work is pure numpy
-    bit-probing. With a :class:`ShardedBloom`, the key's host bucket
-    is ALSO computed JVM-side and the probe touches only that shard."""
+    The Python stage is a SCALAR pandas UDF over two int columns only,
+    the key and its host bucket: Arrow moves them in and one boolean
+    out, instead of round-tripping every candidate column through
+    Python (a mapInPandas form serialized the full wide row both ways
+    — ~8× the Arrow bytes for a one-column computation). Key and
+    bucket are computed JVM-side (sha2+conv, crc32 of the host; a
+    constant bucket with one shard), so Python work is pure numpy
+    bit-probing, each key against its bucket's shard only."""
     spark = candidates.sparkSession
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import BooleanType
@@ -651,46 +581,26 @@ def probe_bloom(
     bc = bloom.broadcast_on(spark)
     bc_hot = hot.broadcast_on(spark) if hot is not None else None
 
-    def _hot_mask(ks: np.ndarray) -> np.ndarray | None:
-        if bc_hot is None:
-            return None
-        nb, bkts, stash = bc_hot.value
-        return CuckooFilter(nb, bkts, stash).contains_many(ks)
-
-    if isinstance(bloom, ShardedBloom):
-
-        @pandas_udf(BooleanType())
-        def probe_sharded(keys: pd.Series, buckets: pd.Series) -> pd.Series:
-            n_shards, payload = bc.value
-            sb = ShardedBloom(
-                n_shards, {s: BloomFilter(nb, kk, w) for s, (nb, kk, w) in payload.items()}
-            )
-            ks = keys.to_numpy(dtype=np.int64).astype(np.uint64) % np.uint64(2**63)
-            out = sb.contains_many(ks, buckets.to_numpy(dtype=np.int64))
-            hm = _hot_mask(ks)
-            return pd.Series(out | hm if hm is not None else out)
-
-        return candidates.withColumn(
-            "maybe_seen",
-            probe_sharded(_key_col(key_col), _host_bucket_col(key_col, bloom.n_shards)),
-        )
-
     @pandas_udf(BooleanType())
-    def probe(keys: pd.Series) -> pd.Series:
-        n_blocks, k, words = bc.value
-        bf = BloomFilter(n_blocks, k, words)
+    def probe(keys: pd.Series, buckets: pd.Series) -> pd.Series:
+        n_shards, n_blocks, k, payload = bc.value
+        sb = ShardedBloom(n_shards, {s: BloomFilter(n_blocks, k, w) for s, w in payload.items()}, n_blocks, k)
         ks = keys.to_numpy(dtype=np.int64).astype(np.uint64) % np.uint64(2**63)
-        out = bf.contains_many(ks)
-        hm = _hot_mask(ks)
-        return pd.Series(out | hm if hm is not None else out)
+        out = sb.contains_many(ks, buckets.to_numpy(dtype=np.int64))
+        if bc_hot is not None:
+            nb, bkts, stash = bc_hot.value
+            out |= CuckooFilter(nb, bkts, stash).contains_many(ks)
+        return pd.Series(out)
 
-    return candidates.withColumn("maybe_seen", probe(_key_col(key_col)))
+    return candidates.withColumn(
+        "maybe_seen", probe(_key_col(key_col), _host_bucket_col(key_col, bloom.n_shards))
+    )
 
 
 def seen_filter_exact(
     candidates: DataFrame,
-    seen: DataFrame | None,
-    bloom: "BloomFilter | ShardedBloom | None" = None,
+    seen: DataFrame,
+    bloom: ShardedBloom,
     key_col: str = "url_canon",
     measure_fpr: bool = False,
     cache_registry: "list[DataFrame] | None" = None,
@@ -707,7 +617,7 @@ def seen_filter_exact(
     anti-join). With ``measure_fpr`` the per-partition (urls_in,
     bloom_pos, false_pos) stats for lineage are computed — this runs
     extra actions, so it's opt-in (the engine turns it on; the
-    throughput bench leaves it off). With no bloom, plain anti-join.
+    throughput bench leaves it off).
 
     ``cache_registry``: when given, the probed-candidates DataFrame is
     cached and the handle appended for the CALLER to unpersist after
@@ -716,13 +626,6 @@ def seen_filter_exact(
     subtree — for UDF-synthesized candidates that's the canonicalize +
     probe python stages run 3×, a measured ~30% of the epoch.
     """
-    if seen is None or bloom is None:
-        if seen is None:
-            unseen = candidates
-        else:
-            unseen = candidates.join(seen.select(key_col).distinct(), key_col, "left_anti")
-        return unseen, None
-
     probed = probe_bloom(candidates, bloom, key_col, hot=hot)
     if measure_fpr or cache_registry is not None:
         probed = probed.cache()

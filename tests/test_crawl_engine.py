@@ -278,23 +278,23 @@ class TestShardedBloom:
         return [(f"https://h{i % 37}.example.com/p{i}",) for i in range(lo, hi)]
 
     def test_exact_filter_parity_with_monolith(self, spark):
-        from podcast_plow_spark.operators.seen import build_sharded_bloom
+        from podcast_plow_spark.operators.seen import build_bloom
 
         seen = spark.createDataFrame(self._urls(0, 500), "url_canon string")
         cand = spark.createDataFrame(self._urls(400, 900), "url_canon string")
-        sb = build_sharded_bloom(seen, "url_canon", n_shards=8)
+        sb = build_bloom(seen, "url_canon", n_shards=8)
         unseen, _ = seen_filter_exact(cand, seen, sb)
         got = {r["url_canon"] for r in unseen.collect()}
         want = {u for (u,) in self._urls(500, 900)}
         assert got == want
 
     def test_incremental_shardwise_merge(self, spark):
-        from podcast_plow_spark.operators.seen import build_sharded_bloom
+        from podcast_plow_spark.operators.seen import build_bloom
 
         seen0 = spark.createDataFrame(self._urls(0, 300), "url_canon string")
         delta = spark.createDataFrame(self._urls(300, 400), "url_canon string")
-        sb = build_sharded_bloom(seen0, "url_canon", n_shards=8)
-        sb2 = sb.merge(build_sharded_bloom(delta, "url_canon", like=sb))
+        sb = build_bloom(seen0, "url_canon", n_shards=8)
+        sb2 = sb.merge(build_bloom(delta, "url_canon", like=sb))
         # no false negatives over the union after the shard-wise OR
         all_seen = spark.createDataFrame(self._urls(0, 400), "url_canon string")
         from podcast_plow_spark.operators.seen import probe_bloom
@@ -303,22 +303,41 @@ class TestShardedBloom:
         assert probed.where(~F.col("maybe_seen")).count() == 0
 
     def test_fpr_stats_path_with_shards(self, spark):
-        from podcast_plow_spark.operators.seen import build_sharded_bloom
+        from podcast_plow_spark.operators.seen import build_bloom
 
         seen = spark.createDataFrame(self._urls(0, 200), "url_canon string")
         cand = spark.createDataFrame(self._urls(100, 300), "url_canon string")
-        sb = build_sharded_bloom(seen, "url_canon", n_shards=4)
+        sb = build_bloom(seen, "url_canon", n_shards=4)
         unseen, stats = seen_filter_exact(cand, seen, sb, measure_fpr=True)
         assert unseen.count() == 100
         rows = stats.collect()
         assert rows and all(r["urls_in"] >= 0 and r["bloom_pos"] >= 0 for r in rows)
+
+    def test_one_shard_build_is_bit_identical_to_local_filter(self, spark):
+        """The monolithic filter is the 1-shard build: its one shard's
+        words equal a driver-side BloomFilter sized for n and fed the
+        same int64 keys (first 15 sha256 hex chars), so lineage
+        bloom_fpr and resume byte-identity cannot move."""
+        import hashlib
+
+        from podcast_plow_spark.operators.seen import ShardedBloom
+
+        urls = [u for (u,) in self._urls(0, 500)]
+        seen = spark.createDataFrame([(u,) for u in urls], "url_canon string").repartition(3)
+        sb = build_bloom(seen, "url_canon", n_shards=1)
+        assert isinstance(sb, ShardedBloom) and sb.n_shards == 1 and list(sb.shards) == [0]
+        local = BloomFilter.sized_for(len(urls))
+        local.add_many(
+            np.array([int(hashlib.sha256(u.encode()).hexdigest()[:15], 16) for u in urls], dtype=np.uint64)
+        )
+        assert np.array_equal(sb.shards[0].words, local.words)
 
     def test_engine_run_identical_with_shards(self, spark, fixtures, tmp_path_factory):
         """The sharded filter must not change ANY observable crawl
         output: run the fixture crawl with and without shards and
         compare crawl logs and frontiers row-for-row."""
         outs = {}
-        for name, shards in (("mono", None), ("sharded", 4)):
+        for name, shards in (("mono", 1), ("sharded", 4)):
             store = SnapshotStore(str(tmp_path_factory.mktemp(f"sb_{name}")))
             eng = CrawlEngine(
                 spark,

@@ -35,7 +35,7 @@ def frontier(spark):
 
 
 def test_dequeue_order_priority_desc_then_seq(spark, frontier):
-    batch = fr.dequeue_batch(frontier, k=10, now=NOW)
+    batch = fr.dequeue_batch_polite(frontier, k=10, now=NOW, per_host_cap=10)
     order = [r["url_canon"] for r in batch.orderBy("crawl_rank").collect()]
     # priority 5 first (seq ties broken ascending), then 1, then 0
     assert order == ["u2", "u3", "u4", "u1"]
@@ -45,16 +45,16 @@ def test_dequeue_respects_run_at_gate(spark, frontier):
     future = frontier.withColumn(
         "run_at", F.when(F.col("url_canon") == "u2", F.lit(NOW + dt.timedelta(hours=1))).otherwise(F.col("run_at"))
     )
-    batch = fr.dequeue_batch(future, k=10, now=NOW)
+    batch = fr.dequeue_batch_polite(future, k=10, now=NOW, per_host_cap=10)
     assert "u2" not in {r["url_canon"] for r in batch.collect()}
 
 
 def test_dequeue_limit(spark, frontier):
-    assert fr.dequeue_batch(frontier, k=2, now=NOW).count() == 2
+    assert fr.dequeue_batch_polite(frontier, k=2, now=NOW, per_host_cap=2).count() == 2
 
 
 def test_mark_done_clears_error(spark, frontier):
-    batch = fr.dequeue_batch(frontier, k=1, now=NOW)
+    batch = fr.dequeue_batch_polite(frontier, k=1, now=NOW, per_host_cap=1)
     updated = fr.mark_done(frontier, batch.select("seq"))
     done = updated.where(F.col("status") == fr.STATUS_FINISHED).collect()
     assert len(done) == 1 and done[0]["url_canon"] == "u2" and done[0]["error"] is None
@@ -102,7 +102,7 @@ def test_fingerprint_dedup_first_wins_and_active_skipped(spark, frontier):
 
 
 def test_queue_stats(spark, frontier):
-    batch = fr.dequeue_batch(frontier, k=1, now=NOW)
+    batch = fr.dequeue_batch_polite(frontier, k=1, now=NOW, per_host_cap=1)
     updated = fr.mark_done(frontier, batch.select("seq"))
     stats = {r["status"]: r["n"] for r in fr.queue_stats(updated).collect()}
     assert stats == {"finished": 1, "queued": 3}

@@ -31,9 +31,19 @@ def test_column_pruning_narrows_read_schema(spark):
 
 
 def test_small_dim_join_is_broadcast(spark):
-    import __spark_entry__ as m
-
-    df = m.q_orders_with_nation(spark, SF)
+    """J1 inner equi-join on broadcastable dims (reference
+    server/app.py:876-882): orders ⋈ customer ⋈ nation, revenue per
+    nation."""
+    c = spark.read.parquet(f"{SF}/customer.parquet")
+    n = spark.read.parquet(f"{SF}/nation.parquet")
+    o = spark.read.parquet(f"{SF}/orders.parquet")
+    df = (
+        o.join(F.broadcast(c), o["o_custkey"] == c["c_custkey"], "inner")
+        .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"], "inner")
+        .groupBy("n_name")
+        .agg(F.round(F.sum("o_totalprice"), 2).alias("revenue"), F.count(F.lit(1)).alias("n_orders"))
+        .orderBy("n_name")
+    )
     plan = _plan(df)
     assert "BroadcastHashJoin" in plan, plan
 
@@ -71,6 +81,21 @@ def test_politeness_window_needs_no_exchange_on_clustered_frontier(spark):
     above_cache = plan.split("InMemoryRelation")[0]
     assert "Exchange" not in above_cache, above_cache
     frontier.unpersist()
+
+
+def test_one_shard_probe_computes_no_host_bucket(spark):
+    """With one shard every key is in bucket 0: the probe plan carries
+    a constant bucket, not parse_url + crc32 of the host per candidate
+    (the 4-shard plan shows the check sees them when present)."""
+    from podcast_plow_spark.operators.seen import build_bloom, probe_bloom
+
+    seen = spark.createDataFrame([(f"https://h{i}.com/p",) for i in range(200)], "url_canon string")
+    cand = spark.createDataFrame([(f"https://h{i}.com/p",) for i in range(100, 300)], "url_canon string")
+    plans = {n: _plan(probe_bloom(cand, build_bloom(seen, n_shards=n))).lower() for n in (1, 4)}
+    # the executed plan spells parse_url as ParseUrlEvaluator
+    host_exprs = ("parse_url", "parseurl", "crc32")
+    assert not [e for e in host_exprs if e in plans[1]], plans[1]
+    assert "parseurl" in plans[4] and "crc32" in plans[4], plans[4]
 
 
 def test_exact_seen_backstop_uses_broadcast_not_shuffle(spark):
