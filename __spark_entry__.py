@@ -395,7 +395,8 @@ FROM events GROUP BY event_type ORDER BY event_type
 
 # ----------------------------------------------------------------------
 # Similarity — brute-force cosine top-k over embeddings (training-data op)
-# BLAS-vectorized mapInPandas with broadcast corpus (see
+# crc32-hashed vector blocks on the shared block grid, one BLAS matmul per
+# block pair in mapInPandas; no corpus is broadcast or collected (see
 # podcast_plow_spark/operators/similarity.py for the 100 TB LSH path).
 # ----------------------------------------------------------------------
 

@@ -46,7 +46,7 @@ def main() -> None:
 
     from podcast_plow_spark.session import get_spark
 
-    spark = get_spark(app_name="oracle-check", cores=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark = get_spark(app_name="oracle-check", cores=os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entrymod

@@ -246,6 +246,20 @@ def test_embedding_near_dup_candidates_are_equi_join_no_cartesian(spark):
     assert joins >= 3, plan  # band/bucket candidate join + two id joins
 
 
+def test_brute_force_cosine_grid_is_keyless_join(spark):
+    """Brute force has one implicit group: its block grid must be a
+    nested-loop / cartesian join, not an equi-join on a constant key
+    (which would put every vector block in one task), and it needs no
+    Window (blocks are crc32-hashed, not row-numbered)."""
+    from podcast_plow_spark.operators.similarity import cosine_topk_pairs
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    plan = _plan(cosine_topk_pairs(spark, emb, block_rows=256))
+    assert "BroadcastNestedLoopJoin" in plan or "CartesianProduct" in plan, plan
+    assert "Window" not in plan, plan
+    assert "HashJoin" not in plan and "SortMergeJoin" not in plan, plan
+
+
 def test_multimodal_feature_scan_prunes_to_payload_columns(spark, tmp_path_factory):
     """extract_image_features must not read caption/phash: the Arrow
     exchange ships only what the UDF consumes (at 10^10 rows, shipping

@@ -7,7 +7,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from podcast_plow_spark.operators.similarity import (
+    _grouped_topk_pairs,
     cosine_topk_pairs,
+    ivf_assignments,
     lsh_cosine_topk_pairs,
 )
 
@@ -34,10 +36,44 @@ def test_multi_block_matches_single_block(spark, emb):
 
     block_rows=64 on the 500-row fixture forces ~8 hash-assigned
     blocks, so most pairs live in blk_a < blk_b cells; the result must
-    be identical to the single-block (all-in-one-cell) run."""
+    be identical to the single-block (all-in-one-cell) run. The same
+    holds for the grouped (LSH / IVF) path's per-group blocks."""
     multi = [tuple(r) for r in cosine_topk_pairs(spark, emb, k=40, block_rows=64).collect()]
     single = [tuple(r) for r in cosine_topk_pairs(spark, emb, k=40, block_rows=10_000).collect()]
     assert multi == single
+
+    # grouped path: block_rows=16 splits every IVF cell into several
+    # row_number blocks (no query at sf <= 0.1 fills one 2,048-row block)
+    cells = ivf_assignments(emb, n_cells=8, n_probe=3)
+
+    def grouped(block_rows):
+        df = _grouped_topk_pairs(emb, cells, ["cell"], "vec_id", "embedding", 40, 4, block_rows)
+        return [tuple(r) for r in df.collect()]
+
+    assert grouped(16) == grouped(10_000)
+
+
+def test_rounded_tie_at_topk_boundary_is_kept(spark):
+    """ADVICE (medium): pairs (1, 2) at raw cosine 0.90003 and (3, 4) at
+    0.90004 both round to 0.9, so the id tie-break makes (1, 2) the
+    top-1. A combo prune at the raw k-th value would drop (1, 2) first."""
+    import math
+
+    def unit(c):
+        return [c, math.sqrt(1.0 - c * c)]
+
+    data = [
+        (1, [1.0, 0.0, 0.0, 0.0]),
+        (2, unit(0.90003) + [0.0, 0.0]),
+        (3, [0.0, 0.0, 1.0, 0.0]),
+        (4, [0.0, 0.0] + unit(0.90004)),
+    ]
+    df = spark.createDataFrame(data, "vec_id long, embedding array<double>")
+    one_group = df.select("vec_id", F.lit(0).alias("g"))
+    brute = cosine_topk_pairs(spark, df, k=1)
+    grouped = _grouped_topk_pairs(df, one_group, ["g"], "vec_id", "embedding", 1, 4)
+    for out in (brute, grouped):
+        assert [tuple(r) for r in out.collect()] == [(1, 2, 0.9)]
 
 
 def test_lsh_candidates_recall_floor(spark, emb):
