@@ -4,7 +4,8 @@ Each epoch mirrors one turn of the reference's worker poll loop
 (``server/manage.py:498-529``) at batch scale (SURVEY.md §3.2):
 
     dequeue batch (Q2 ordering + politeness cap)
-      → fetch (feeds: parse+explode entries; images: payload join)
+      → fetch (feeds: parse+explode entries; images: their crawl_log
+        rows are the fetch record, payloads are joined on demand)
       → canonicalize + host + robots gate (ONE Python pass per row)
       → within-epoch dedup
       → URL-seen filter (blocked Bloom fast path + exact anti-join)
@@ -26,8 +27,10 @@ Scale design notes (10^10 frontier — these are now code, not notes):
   scan) → sampled global-order threshold → politeness window over the
   ~K·safety-row *prefix* only. No window/Exchange over the full
   store-read frontier (tests/test_plans.py).
-- crawl_log / lineage / fetched_images are APPEND tables — one new
-  part per epoch, history never re-read or re-written.
+- crawl_log / lineage are APPEND tables — one new part per epoch,
+  history never re-read or re-written. crawl_log is also the fetch
+  record: the fetched image ids are its ``kind = 'image'`` rows
+  through ``image_id_col``, in (epoch, crawl_rank) order.
 - crawl_rank / seq windows run on ≤ K or ≤ fan-out(K) rows per epoch,
   never on the full frontier.
 - canonicalization, host extraction and the robots verdict run in
@@ -76,7 +79,14 @@ from podcast_plow_spark.operators.seen import (
 from podcast_plow_spark.sources.feeds import fetch_and_parse_feeds, load_seeds
 from podcast_plow_spark.sources.snapshots import SnapshotStore
 
-__all__ = ["CrawlConfig", "CrawlEngine"]
+__all__ = ["CRAWL_LOG_SCHEMA", "LINEAGE_SCHEMA", "CrawlConfig", "CrawlEngine"]
+
+# append-table schemas: every part of a table must carry the same
+# schema, because read_table does not merge schemas
+CRAWL_LOG_SCHEMA = (
+    "epoch long, crawl_rank long, url_canon string, host string, kind string, fetch_offset_sec double"
+)
+LINEAGE_SCHEMA = "partition_id int, batch_epoch long, urls_in long, urls_out long, bloom_fpr double"
 
 
 @dataclass
@@ -237,21 +247,8 @@ class CrawlEngine:
         )
         # side tables are APPEND tables: each epoch adds one part,
         # history is never re-read or re-written
-        empty_log = self.spark.createDataFrame(
-            [],
-            "epoch long, crawl_rank long, url_canon string, host string, kind string, "
-            "fetch_offset_sec double",
-        )
-        self.store.append_table("crawl_log", empty_log)
-        self.store.append_table(
-            "lineage",
-            self.spark.createDataFrame(
-                [], "partition_id int, batch_epoch long, urls_in long, urls_out long, bloom_fpr double"
-            ),
-        )
-        self.store.append_table(
-            "fetched_images", self.spark.createDataFrame([], "image_id string, url_canon string, epoch long")
-        )
+        self.store.append_table("crawl_log", self.spark.createDataFrame([], CRAWL_LOG_SCHEMA))
+        self.store.append_table("lineage", self.spark.createDataFrame([], LINEAGE_SCHEMA))
         self.store.commit(0, {"epoch": 0, "next_seq": n + 1, "n_queued": n})
         rows.unpersist()
 
@@ -291,8 +288,11 @@ class CrawlEngine:
         # Exchange (tests/test_plans.py).
         now = (self.cfg.clock or dt.datetime.utcnow)()
         n_queued = meta.get("n_queued")
+        # every cache this epoch makes (the dequeue's, the batch, the
+        # seen filter's probed candidates, the new rows), released
+        # together once the epoch has committed
         epoch_caches: list = []
-        batch0 = fr.dequeue_batch_polite(
+        batch = fr.dequeue_batch_polite(
             frontier,
             self.cfg.batch_size,
             now,
@@ -306,19 +306,21 @@ class CrawlEngine:
             # sampling scan; staleness is correctness-free (the prefix
             # widens / falls back, sufficiency is probed LIVE)
             presample=self._presample,
-        ).cache()
-        batch = batch0
-        n_batch = batch.count()
+        )
+        # shared kernel (functions/urls.py) — same path-based semantics
+        # as the oracle's url_kind, so feed.xml?page=2 etc. cannot drift.
+        # One job materializes the batch cache and counts rows and feeds.
+        batch = batch.withColumn("kind", url_kind_col(F.col("url_canon"))).cache()
+        epoch_caches.append(batch)
+        counts = batch.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count(F.when(F.col("kind") == "feed", 1)).alias("feeds"),
+        ).collect()[0]
+        n_batch, n_feeds = counts["n"], counts["feeds"]
         if n_batch == 0:
-            batch0.unpersist()
             for h in epoch_caches:
                 h.unpersist()
             return False
-
-        # shared kernel (functions/urls.py) — same path-based semantics
-        # as the oracle's url_kind, so feed.xml?page=2 etc. cannot drift
-        batch = batch.withColumn("kind", url_kind_col(F.col("url_canon"))).cache()
-        n_feeds = batch.where(F.col("kind") == "feed").count()  # on the cached batch
 
         # --- crawl log (the observable crawl ordering): append-only
         # the politeness schedule is part of the observable record:
@@ -334,8 +336,11 @@ class CrawlEngine:
         # offsets on the spacing grid) keeps the per-host rate honest;
         # ordering/seen-set are untouched (salting only re-times and
         # re-partitions). Cold hosts take salt=0/lanes=1 → offsets
-        # byte-identical to the un-salted path.
-        if self.cfg.salt_hot_batch_threshold:
+        # byte-identical to the un-salted path. The dequeue leaves a
+        # host at most per_host_cap rows of a batch, so no host can be
+        # hot unless the cap reaches the threshold; below it the
+        # salting groupBy, join and repartition are skipped.
+        if 0 < self.cfg.salt_hot_batch_threshold <= self.cfg.per_host_cap:
             batch_s = salt_hot_hosts(
                 batch,
                 hot_threshold=self.cfg.salt_hot_batch_threshold,
@@ -376,15 +381,8 @@ class CrawlEngine:
             if salt_kw
             else batch
         )
-
-        # --- fetch: images → payload rows
-        img_batch = fetch_src.where(F.col("kind") == "image").select(
-            "url_canon",
-            # shared kernel: last path segment, trailing slashes stripped
-            image_id_col(F.col("url_canon")).alias("image_id"),
-        )
-        fetched_new = img_batch.select("image_id", "url_canon", F.lit(epoch).cast("long").alias("epoch"))
-        self.store.append_table("fetched_images", fetched_new)
+        # The image fetch record is the crawl_log's image rows
+        # (fetched_image_ids), so image rows need no stage of their own.
 
         # --- discoveries. Image rows have no children, so a batch with
         # zero feed rows skips the entire candidate machinery (feed
@@ -435,6 +433,7 @@ class CrawlEngine:
                 num_partitions=self.cfg.num_partitions,
                 seq_base=next_seq - 1,
             ).cache()
+            epoch_caches.append(new_rows)
             n_new = new_rows.count()
             if n_new:
                 if self.cfg.bloom_fold_epochs > 1:
@@ -472,29 +471,19 @@ class CrawlEngine:
         if self.store.delta_rows(self.spark, "frontier") >= self.cfg.delta_compact_rows:
             self.store.compact_deltas("frontier")
 
-        # --- lineage
-        urls_in = n_batch
-        fpr_rows = stats.collect() if stats is not None else []
-        if fpr_rows:
-            lineage_new = self.spark.createDataFrame(
-                [
-                    (
-                        int(r["partition_id"]),
-                        epoch,
-                        int(r["urls_in"]),
-                        n_new,
-                        (float(r["false_pos"]) / r["urls_in"]) if r["urls_in"] else 0.0,
-                    )
-                    for r in fpr_rows
-                ],
-                "partition_id int, batch_epoch long, urls_in long, urls_out long, bloom_fpr double",
+        # --- lineage: one row per seen-filter partition, or one row
+        # for the whole batch when the epoch ran no seen filter
+        lineage_rows = [
+            (
+                int(r["partition_id"]),
+                epoch,
+                int(r["urls_in"]),
+                n_new,
+                (float(r["false_pos"]) / r["urls_in"]) if r["urls_in"] else 0.0,
             )
-        else:
-            lineage_new = self.spark.createDataFrame(
-                [(0, epoch, urls_in, n_new, 0.0)],
-                "partition_id int, batch_epoch long, urls_in long, urls_out long, bloom_fpr double",
-            )
-        self.store.append_table("lineage", lineage_new)
+            for r in (stats.collect() if stats is not None else [])
+        ] or [(0, epoch, n_batch, n_new, 0.0)]
+        self.store.append_table("lineage", self.spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA))
 
         meta_out = {"epoch": epoch, "next_seq": next_seq + n_new}
         if n_queued is not None:
@@ -505,13 +494,16 @@ class CrawlEngine:
         # order-key sample every presample_epochs from the just-merged
         # frontier (one narrow sampled scan, amortized N×); between
         # refreshes the dequeue runs ZERO sampling jobs. Age it out so
-        # a long crawl can't drift unboundedly.
+        # a long crawl can't drift unboundedly. At or below the
+        # dequeue's exact-path cutoff the next dequeue never reads the
+        # sample, so none is taken.
         self._presample_age += 1
         if self.cfg.presample_epochs and (
             self._presample is None or self._presample_age >= self.cfg.presample_epochs
         ):
             nq = meta_out.get("n_queued")
-            if nq:  # without a tracked queue size the inline sample is safer
+            # without a tracked queue size the inline sample is safer
+            if nq and int(nq) > fr.exact_dequeue_cutoff(self.cfg.batch_size):
                 new_frontier = self.store.read_table(self.spark, "frontier")
                 queued = new_frontier.where(F.col("status") == fr.STATUS_QUEUED).select(
                     "priority", "run_at", "seq"
@@ -520,13 +512,8 @@ class CrawlEngine:
                 self._presample = queued.sample(False, frac, seed=42).collect()
                 self._presample_age = 0
 
-        batch.unpersist()
-        batch0.unpersist()
-        # dequeue prefix/batch caches + the seen filter's probed cache
         for h in epoch_caches:
             h.unpersist()
-        if new_rows is not None:
-            new_rows.unpersist()
         return True
 
     # -- full run ------------------------------------------------------------
@@ -552,6 +539,17 @@ class CrawlEngine:
         frontier = self.store.read_table(self.spark, "frontier")
         return {r["url_canon"] for r in frontier.select("url_canon").distinct().collect()}
 
+    def _fetched_images(self) -> DataFrame:
+        """(image_id, epoch, crawl_rank) of every image the crawl
+        fetched: the crawl_log's image rows."""
+        log = self.store.read_table(self.spark, "crawl_log")
+        return log.where(F.col("kind") == "image").select(
+            # shared kernel: last path segment, trailing slashes stripped
+            image_id_col(F.col("url_canon")).alias("image_id"),
+            "epoch",
+            "crawl_rank",
+        )
+
     def verify_fetched_payloads(self, min_psnr_db: float = 40.0) -> DataFrame:
         """Per-row payload invariant over everything this crawl fetched
         (BASELINE.json input_hint): decoded-pixel PSNR ≥ 40 dB (lossy)
@@ -561,13 +559,10 @@ class CrawlEngine:
         from podcast_plow_spark.sources.images import check_invariants
 
         assert self.image_table_path, "engine was constructed without an image table"
-        fetched = self.store.read_table(self.spark, "fetched_images")
         images = self.spark.read.parquet(self.image_table_path)
-        rows = images.join(fetched.select("image_id").distinct(), "image_id", "left_semi")
-        return check_invariants(rows, min_psnr_db)
+        fetched = self._fetched_images().select("image_id").distinct()
+        return check_invariants(images.join(fetched, "image_id", "left_semi"), min_psnr_db)
 
     def fetched_image_ids(self) -> list[str]:
-        t = self.store.read_table(self.spark, "fetched_images")
-        log = self.store.read_table(self.spark, "crawl_log").where(F.col("kind") == "image")
-        joined = t.join(log.select("url_canon", "epoch", "crawl_rank"), ["url_canon", "epoch"])
-        return [r["image_id"] for r in joined.orderBy("epoch", "crawl_rank").collect()]
+        rows = self._fetched_images().orderBy("epoch", "crawl_rank").collect()
+        return [r["image_id"] for r in rows]

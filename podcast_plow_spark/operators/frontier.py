@@ -57,6 +57,7 @@ __all__ = [
     "enqueue",
     "cluster_by_host",
     "runnable",
+    "exact_dequeue_cutoff",
     "dequeue_batch_polite",
     "mark_done",
     "mark_failed",
@@ -172,6 +173,15 @@ def runnable(frontier: DataFrame, now: dt.datetime) -> DataFrame:
     )
 
 
+def exact_dequeue_cutoff(k: int) -> int:
+    """Runnable-row count at or below which :func:`dequeue_batch_polite`
+    takes its exact path (and reads no threshold sample). The sampled
+    prefix path engages once the frontier is ≥2× the batch: the prefix
+    it windows is ~k·safety rows vs the exact path's n, and the extra
+    sample+materialize jobs amortize from there."""
+    return max(k * 2, 100_000)
+
+
 def dequeue_batch_polite(
     frontier: DataFrame,
     k: int,
@@ -228,14 +238,16 @@ def dequeue_batch_polite(
     count doubling as the sufficiency check, fused into the same
     aggregate.
 
-    ``cache_registry``: when given (and the sampled path engages), the
-    eligible-prefix cache handle is appended for the CALLER to
-    unpersist after it has materialized whatever it derives from the
-    batch; the returned batch is then a lazy threshold cut over that
-    cache (no second cache, no extra count job). Without it the
-    function is self-contained exactly as before: the returned batch
-    carries its own materialized cache and the prefix cache is
-    released before returning.
+    ``cache_registry``: when given, every cache the sampled path
+    leaves alive is appended for the CALLER to unpersist after it has
+    materialized whatever it derives from the batch — so the registry
+    is non-empty exactly when the sampled path engaged. Without
+    ``with_rank`` that is the eligible-prefix cache, and the returned
+    batch is a lazy threshold cut over it (no second cache, no extra
+    count job); with ``with_rank`` it is the returned batch's own
+    cache. Without a registry the function is self-contained: the
+    returned batch carries its own materialized cache and the prefix
+    cache is released before returning.
 
     ``presample``: order-key rows (mappings with priority/run_at/seq)
     collected EARLIER — e.g. as a byproduct of the previous epoch's
@@ -305,12 +317,7 @@ def dequeue_batch_polite(
         return batch
 
     n = n_hint if n_hint is not None else df.count()
-    # Sampled-prefix path engages once the frontier is ≥2× the batch:
-    # the prefix it windows is ~k·safety rows vs the exact path's n,
-    # and the extra sample+materialize jobs amortize from there. (The
-    # old k*4 cutoff silently forced the exact full-window path for
-    # any batch ≥ n/4 — including the throughput bench's n/4 batch.)
-    cutoff = small_n_cutoff if small_n_cutoff is not None else max(k * 2, 100_000)
+    cutoff = small_n_cutoff if small_n_cutoff is not None else exact_dequeue_cutoff(k)
     if n <= cutoff:
         return finish(take_k(eligible_of(df))[0])
 
@@ -369,11 +376,11 @@ def dequeue_batch_polite(
             batch.count()  # materialize before the prefix cache drops
         elig.unpersist()
         if ok:
-            # The caller's handle on the RETURNED batch owns this cache
-            # (engine unpersists it directly); the registry is only for
-            # caches the caller can't otherwise reach (the eligible-
-            # prefix cache above) — appending here would make engine
-            # unpersist the same cache twice (ADVICE r3).
+            # the caller may derive a new plan from the returned batch
+            # and lose the handle on this cache, so a given registry
+            # owns it; without one, the returned handle does
+            if cache_registry is not None:
+                cache_registry.append(batch)
             return batch
         batch.unpersist()
         if cut_idx >= len(sample) - 1:

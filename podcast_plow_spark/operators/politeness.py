@@ -42,12 +42,20 @@ __all__ = [
 
 # --- RFC 9309 evaluator -------------------------------------------------
 
-def parse_robots(text: str, user_agent: str) -> list[tuple[bool, str]]:
-    """Parse robots.txt → ordered (allow, path_pattern) rules for the
-    most specific matching user-agent group."""
-    groups: list[tuple[list[str], list[tuple[bool, str]]]] = []
-    current_agents: list[str] = []
-    current_rules: list[tuple[bool, str]] = []
+def _agent_groups(text: str, user_agent: str) -> list[tuple[list[tuple[bool, str]], float | None]]:
+    """Split robots.txt into user-agent groups and return the
+    (allow/disallow rules, Crawl-delay) of every group that names the
+    selected agent token, in document order.
+
+    Any Allow, Disallow or Crawl-delay line ends a group's agent list:
+    'UA: a / Crawl-delay / UA: b' is two groups, not one. The most
+    specific agent token contained in ``user_agent`` wins; ``*`` is the
+    fallback. RFC 9309 §2.2.1: multiple groups naming the SAME token
+    are combined, so every such group is returned."""
+    groups: list[tuple[list[str], list[tuple[bool, str]], float | None]] = []
+    agents: list[str] = []
+    rules: list[tuple[bool, str]] = []
+    delay: float | None = None
     saw_rule = False
     for raw in (text or "").splitlines():
         line = raw.split("#", 1)[0].strip()
@@ -58,84 +66,44 @@ def parse_robots(text: str, user_agent: str) -> list[tuple[bool, str]]:
         val = val.strip()
         if key == "user-agent":
             if saw_rule:
-                groups.append((current_agents, current_rules))
-                current_agents, current_rules, saw_rule = [], [], False
-            current_agents.append(val.lower())
-        elif key in ("allow", "disallow"):
+                groups.append((agents, rules, delay))
+                agents, rules, delay, saw_rule = [], [], None, False
+            agents.append(val.lower())
+        elif key in ("allow", "disallow", "crawl-delay"):
             saw_rule = True
-            if val:
-                current_rules.append((key == "allow", val))
-            elif key == "disallow":
-                pass  # empty Disallow = allow all (no rule needed)
-        elif key == "crawl-delay":
-            # a rule line for group-boundary purposes (keeps group
-            # splitting identical to parse_crawl_delay — ADVICE r2):
-            # 'UA: a / Crawl-delay / UA: b' is two groups, not one
-            saw_rule = True
-    if current_agents:
-        groups.append((current_agents, current_rules))
+            if key == "crawl-delay":
+                try:
+                    delay = float(val)
+                except ValueError:
+                    pass
+            elif val:  # empty Allow/Disallow adds no rule (empty Disallow = allow all)
+                rules.append((key == "allow", val))
+    if agents:
+        groups.append((agents, rules, delay))
 
     ua = user_agent.lower()
-    # most specific agent token wins; '*' is the fallback. RFC 9309
-    # §2.2.1: multiple groups naming the SAME token are combined into
-    # one group (rules concatenated in document order).
     best_token: str | None = None
     best_len = -1
-    for agents, _rules in groups:
-        for agent in agents:
+    for group_agents, _rules, _delay in groups:
+        for agent in group_agents:
             if agent != "*" and agent in ua and len(agent) > best_len:
                 best_token, best_len = agent, len(agent)
-    merged: list[tuple[bool, str]] = []
     target = best_token if best_token is not None else "*"
-    for agents, rules in groups:
-        if target in agents:
-            merged.extend(rules)
-    return merged
+    return [(r, d) for group_agents, r, d in groups if target in group_agents]
+
+
+def parse_robots(text: str, user_agent: str) -> list[tuple[bool, str]]:
+    """Parse robots.txt → ordered (allow, path_pattern) rules for the
+    most specific matching user-agent group."""
+    return [rule for rules, _delay in _agent_groups(text, user_agent) for rule in rules]
 
 
 def parse_crawl_delay(text: str, user_agent: str) -> float | None:
     """Crawl-delay for the selected (merged) user-agent group, seconds.
     Non-standard but widely honored; the last valid value among the
     chosen groups wins. None when absent/invalid."""
-    groups: list[tuple[list[str], float | None]] = []
-    current_agents: list[str] = []
-    current_delay: float | None = None
-    saw_rule = False
-    for raw in (text or "").splitlines():
-        line = raw.split("#", 1)[0].strip()
-        if not line or ":" not in line:
-            continue
-        key, _, val = line.partition(":")
-        key = key.strip().lower()
-        val = val.strip()
-        if key == "user-agent":
-            if saw_rule:
-                groups.append((current_agents, current_delay))
-                current_agents, current_delay, saw_rule = [], None, False
-            current_agents.append(val.lower())
-        elif key in ("allow", "disallow", "crawl-delay"):
-            saw_rule = True
-            if key == "crawl-delay":
-                try:
-                    current_delay = float(val)
-                except ValueError:
-                    pass
-    if current_agents:
-        groups.append((current_agents, current_delay))
-
-    ua = user_agent.lower()
-    best_token: str | None = None
-    best_len = -1
-    for agents, _d in groups:
-        for agent in agents:
-            if agent != "*" and agent in ua and len(agent) > best_len:
-                best_token, best_len = agent, len(agent)
-    target = best_token if best_token is not None else "*"
-    delay: float | None = None
-    for agents, d in groups:
-        if target in agents and d is not None:
-            delay = d
-    return delay
+    delays = [d for _rules, d in _agent_groups(text, user_agent) if d is not None]
+    return delays[-1] if delays else None
 
 
 def _pattern_to_regex(pattern: str) -> re.Pattern[str]:

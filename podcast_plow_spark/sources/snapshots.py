@@ -29,9 +29,9 @@ implements the Iceberg properties the crawl engine relies on
    folds accumulated deltas into the buckets when they grow past the
    threshold — an amortized, bucket-pruned rewrite.
 5. **Append tables** — the Iceberg fast-append analog for the
-   append-only side tables (crawl_log, lineage, fetched_images): each
-   epoch adds one new data file; the manifest accumulates the part
-   list. No read-modify-write of history, ever.
+   append-only side tables (crawl_log, lineage): each epoch adds one
+   new data file; the manifest accumulates the part list. No
+   read-modify-write of history, ever.
 
 The interface is deliberately the shape of an Iceberg catalog
 (``write_table`` / ``read_table`` / ``commit`` / snapshot listing) so

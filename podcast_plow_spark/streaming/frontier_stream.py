@@ -5,9 +5,11 @@ sleep-poll-dequeue becomes a micro-batch trigger).
 Two entry points:
 
 - :func:`candidate_stream_transform` — the stateless per-batch
-  transformation (canonicalize → host → fingerprint → dedup-in-batch);
-  shared by the file-source stream and the batch engine so streaming
-  and batch semantics cannot drift.
+  transformation (canonicalize → host → fingerprint → dedup-in-batch)
+  of the file-source stream. The batch engine does not call it: its
+  candidates go through ``politeness.robots_filter``, one Python pass
+  that also applies the robots gate. Both canonicalize with the same
+  ``functions/urls.py`` kernel.
 - :func:`run_ingest_stream` — wires a file source (a directory new
   seed files land in) through the transform into a ``foreachBatch``
   sink that MERGEs into the frontier snapshot store, with

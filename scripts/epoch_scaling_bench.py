@@ -32,7 +32,12 @@ sys.path.insert(0, REPO)
 from pyspark.sql import functions as F  # noqa: E402
 
 from podcast_plow_spark.crawl.bench import synthetic_frontier  # noqa: E402
-from podcast_plow_spark.crawl.engine import CrawlConfig, CrawlEngine  # noqa: E402
+from podcast_plow_spark.crawl.engine import (  # noqa: E402
+    CRAWL_LOG_SCHEMA,
+    LINEAGE_SCHEMA,
+    CrawlConfig,
+    CrawlEngine,
+)
 from podcast_plow_spark.operators import frontier as fr  # noqa: E402
 from podcast_plow_spark.session import get_spark  # noqa: E402
 from podcast_plow_spark.sources.snapshots import SnapshotStore  # noqa: E402
@@ -59,25 +64,8 @@ def build_store(spark, n: int, root: str, npart: int) -> SnapshotStore:
         order_by=[["priority", "desc"], ["run_at", "asc"], ["seq", "asc"]],
         row_group_bytes=16 << 20,
     )
-    store.append_table(
-        "crawl_log",
-        # schema must match CrawlEngine.bootstrap exactly — the engine
-        # appends 6-column parts and read_table doesn't mergeSchema
-        spark.createDataFrame(
-            [],
-            "epoch long, crawl_rank long, url_canon string, host string, kind string, "
-            "fetch_offset_sec double",
-        ),
-    )
-    store.append_table(
-        "lineage",
-        spark.createDataFrame(
-            [], "partition_id int, batch_epoch long, urls_in long, urls_out long, bloom_fpr double"
-        ),
-    )
-    store.append_table(
-        "fetched_images", spark.createDataFrame([], "image_id string, url_canon string, epoch long")
-    )
+    store.append_table("crawl_log", spark.createDataFrame([], CRAWL_LOG_SCHEMA))
+    store.append_table("lineage", spark.createDataFrame([], LINEAGE_SCHEMA))
     store.commit(0, {"epoch": 0, "next_seq": n + 1})
     return store
 
@@ -138,7 +126,7 @@ epochs (`CrawlConfig.presample_epochs`, round 4) and refreshed every
 N epochs — between refreshes the dequeue runs zero sampling jobs, and
 staleness is correctness-free (prefix widens / falls back; sufficiency
 is verified live by the fused k-th-key probe). Every write in the
-epoch (crawl_log/lineage/fetched appends, frontier delta) is O(batch).
+epoch (crawl_log/lineage appends, frontier delta) is O(batch).
 The residual growth IS that one linear scan: local[32] sweeps the
 whole frontier on one box, while a real cluster spreads the same scan
 across executors (1000 executors put the 10^10-row scan in the same

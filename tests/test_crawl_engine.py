@@ -518,3 +518,60 @@ class TestSaltedEpoch:
                 multi += 1
                 assert min(gaps) >= effective_delay(host) - 1e-9, (host, offs)
         assert multi > 0  # the invariant was actually exercised
+
+
+class TestEpochWork:
+    """The fixture crawl (per_host_cap 2 below the salt threshold of
+    10,000; a few dozen queued rows, far below the dequeue's exact-path
+    cutoff) writes no fetched_images table, runs no salting and no
+    presample refresh it cannot use, and leaves no epoch cache behind."""
+
+    @staticmethod
+    def _salt_spy(monkeypatch):
+        import podcast_plow_spark.crawl.engine as engine_mod
+
+        calls: list = []
+        real = engine_mod.salt_hot_hosts
+
+        def spy(*args, **kwargs):
+            calls.append(kwargs.get("hot_threshold"))
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(engine_mod, "salt_hot_hosts", spy)
+        return calls
+
+    @pytest.fixture(scope="class")
+    def crawl(self, spark, fixtures, tmp_path_factory):
+        jsc = spark.sparkContext._jsc
+        before = set(jsc.getPersistentRDDs().keys())
+        with pytest.MonkeyPatch.context() as mp:
+            salt_calls = self._salt_spy(mp)
+            eng = _run(spark, fixtures, str(tmp_path_factory.mktemp("epoch_work")))
+        left = set(jsc.getPersistentRDDs().keys()) - before
+        return eng, salt_calls, left
+
+    def test_no_fetched_images_table_and_no_cache_outlives_its_epoch(self, crawl):
+        eng, _salt_calls, left = crawl
+        assert eng.store.table_entry("fetched_images") is None
+        assert eng.fetched_image_ids()  # read from the crawl_log
+        assert not left, left
+
+    def test_salting_skipped_when_cap_is_below_threshold(self, crawl):
+        eng, salt_calls, _left = crawl
+        assert eng.cfg.per_host_cap < eng.cfg.salt_hot_batch_threshold
+        assert salt_calls == []
+
+    def test_no_presample_at_or_below_exact_cutoff(self, crawl):
+        eng, _salt_calls, _left = crawl
+        assert eng._presample is None
+
+    def test_salting_runs_when_cap_reaches_threshold(self, spark, fixtures, tmp_path_factory, monkeypatch):
+        salt_calls = self._salt_spy(monkeypatch)
+        eng = CrawlEngine(
+            spark,
+            SnapshotStore(str(tmp_path_factory.mktemp("salt_engaged"))),
+            fixtures.root,
+            config=CrawlConfig(batch_size=16, per_host_cap=4, num_partitions=4, salt_hot_batch_threshold=2),
+        )
+        assert eng.run(seeds_path=f"{fixtures.root}/feeds.txt", max_epochs=1) == 1
+        assert salt_calls == [2]

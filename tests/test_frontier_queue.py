@@ -237,6 +237,31 @@ class TestDequeueBatchPolite:
         finally:
             frontier.unpersist()
 
+    def test_registry_owns_every_cache_left_alive(self, spark):
+        """With a registry, the registry holds every cache the dequeue
+        leaves alive: none on the exact path, the ranked batch's own
+        cache on the sampled path. A caller that derives a new plan
+        from the batch and releases only the registry leaks nothing."""
+        frontier = self._frontier(spark, n=3000).cache()
+        jsc = spark.sparkContext._jsc
+        try:
+            frontier.count()
+            before = set(jsc.getPersistentRDDs().keys())
+            for cutoff, sampled in ((100, True), (None, False)):
+                registry: list = []
+                batch = fr.dequeue_batch_polite(
+                    frontier, 50, NOW, 2, sample_rows=500, small_n_cutoff=cutoff, cache_registry=registry
+                )
+                derived = batch.withColumn("x", F.lit(1)).cache()
+                assert derived.count() == 50
+                derived.unpersist()
+                assert bool(registry) == sampled, cutoff
+                for h in registry:
+                    h.unpersist()
+                assert set(jsc.getPersistentRDDs().keys()) == before, cutoff
+        finally:
+            frontier.unpersist()
+
     def test_respects_run_at(self, spark):
         cand = _candidates(spark, [("u1", "u1", "a.com", "f1", 0, 1), ("u2", "u2", "b.com", "f2", 0, 2)])
         frontier = fr.enqueue(cand, epoch=0, run_at=NOW + dt.timedelta(hours=1))
