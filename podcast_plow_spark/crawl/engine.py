@@ -27,10 +27,16 @@ Scale design notes (10^10 frontier — these are now code, not notes):
   scan) → sampled global-order threshold → politeness window over the
   ~K·safety-row *prefix* only. No window/Exchange over the full
   store-read frontier (tests/test_plans.py).
-- crawl_log / lineage are APPEND tables — one new part per epoch,
-  history never re-read or re-written. crawl_log is also the fetch
+- crawl_log / lineage are APPEND tables, declared at bootstrap with
+  their schemas and no data file. crawl_log adds one part per epoch;
+  lineage rows ride inline in the snapshot manifest (no Spark job).
+  History is never re-read or re-written. crawl_log is also the fetch
   record: the fetched image ids are its ``kind = 'image'`` rows
   through ``image_id_col``, in (epoch, crawl_rank) order.
+- the frontier's per-epoch delta is one new part holding only the
+  batch and its discoveries; earlier parts are never rewritten, and
+  compaction folds them into the buckets once they pass
+  ``delta_compact_rows`` rows or the store's part bound.
 - crawl_rank / seq windows run on ≤ K or ≤ fan-out(K) rows per epoch,
   never on the full frontier.
 - canonicalization, host extraction and the robots verdict run in
@@ -81,8 +87,8 @@ from podcast_plow_spark.sources.snapshots import SnapshotStore
 
 __all__ = ["CRAWL_LOG_SCHEMA", "LINEAGE_SCHEMA", "CrawlConfig", "CrawlEngine"]
 
-# append-table schemas: every part of a table must carry the same
-# schema, because read_table does not merge schemas
+# append-table schemas, declared at bootstrap; the store records them
+# in the manifest and reads every part under them
 CRAWL_LOG_SCHEMA = (
     "epoch long, crawl_rank long, url_canon string, host string, kind string, fetch_offset_sec double"
 )
@@ -245,10 +251,11 @@ class CrawlEngine:
             # reads ~1 group per bucket instead of whole bucket files
             row_group_bytes=16 << 20,
         )
-        # side tables are APPEND tables: each epoch adds one part,
-        # history is never re-read or re-written
-        self.store.append_table("crawl_log", self.spark.createDataFrame([], CRAWL_LOG_SCHEMA))
-        self.store.append_table("lineage", self.spark.createDataFrame([], LINEAGE_SCHEMA))
+        # side tables are APPEND tables, declared with no data file:
+        # each epoch adds to them, history is never re-read or
+        # re-written
+        self.store.declare_table("crawl_log", CRAWL_LOG_SCHEMA)
+        self.store.declare_table("lineage", LINEAGE_SCHEMA)
         self.store.commit(0, {"epoch": 0, "next_seq": n + 1, "n_queued": n})
         rows.unpersist()
 
@@ -453,14 +460,15 @@ class CrawlEngine:
                     delta = build_bloom(new_rows.select("url_canon"), "url_canon", like=self._bloom)
                     self._bloom = self._bloom.merge(delta)
 
-        # --- mark batch done + insert discoveries as ONE merge-on-read
-        # delta (the batch rows themselves, re-stated as finished, plus
-        # the new rows — no join needed). Politeness spreads a batch
-        # over many hosts, so a copy-on-write bucket merge would
-        # degenerate to a near-full rewrite every epoch; the delta
-        # keeps the epoch's write cost O(batch). When accumulated
-        # deltas pass the threshold they're folded into the bucket
-        # files once (amortized, bucket-pruned compaction).
+        # --- mark batch done + insert discoveries as ONE new
+        # merge-on-read delta part (the batch rows themselves,
+        # re-stated as finished, plus the new rows — no join needed).
+        # Politeness spreads a batch over many hosts, so a
+        # copy-on-write bucket merge would degenerate to a near-full
+        # rewrite every epoch; the part keeps the epoch's write cost
+        # O(batch). When the parts pass the row threshold or the
+        # store's part bound they're folded into the bucket files
+        # once (amortized, bucket-pruned compaction).
         finished_batch = (
             batch.withColumn("status", F.lit(fr.STATUS_FINISHED))
             .withColumn("error", F.lit(None).cast("string"))
@@ -468,11 +476,12 @@ class CrawlEngine:
         )
         delta_rows = finished_batch if new_rows is None else finished_batch.unionByName(new_rows)
         self.store.merge_delta("frontier", delta_rows, approx_rows=n_batch + n_new)
-        if self.store.delta_rows(self.spark, "frontier") >= self.cfg.delta_compact_rows:
+        if self.store.compaction_due(self.spark, "frontier", self.cfg.delta_compact_rows):
             self.store.compact_deltas("frontier")
 
         # --- lineage: one row per seen-filter partition, or one row
-        # for the whole batch when the epoch ran no seen filter
+        # for the whole batch when the epoch ran no seen filter; the
+        # store keeps these few rows inline in the manifest
         lineage_rows = [
             (
                 int(r["partition_id"]),
@@ -483,7 +492,7 @@ class CrawlEngine:
             )
             for r in (stats.collect() if stats is not None else [])
         ] or [(0, epoch, n_batch, n_new, 0.0)]
-        self.store.append_table("lineage", self.spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA))
+        self.store.append_rows("lineage", lineage_rows)
 
         meta_out = {"epoch": epoch, "next_seq": next_seq + n_new}
         if n_queued is not None:

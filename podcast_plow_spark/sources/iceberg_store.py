@@ -16,15 +16,23 @@ write_bucketed      ``df.writeTo(tbl).partitionedBy(bucket(N, host))``
                     ``.createOrReplace()`` + MoR table properties
 merge_delta         ``MERGE INTO tbl USING updates ON key WHEN MATCHED
                     UPDATE SET * WHEN NOT MATCHED INSERT *`` (the
-                    engine's merge-on-read delta IS Iceberg MoR:
+                    engine's merge-on-read delta part IS Iceberg MoR:
                     ``write.merge.mode=merge-on-read`` writes positional
                     deletes + new data files, O(batch) per epoch)
+declare_table       ``CREATE TABLE`` with the schema and no data file
+                    (an empty ``writeTo(tbl).create()``)
 append_table        ``df.writeTo(tbl).append()`` (fast-append snapshot)
+append_rows         the rows as a local frame, one fast-append (the
+                    fallback keeps them inline in its manifest; Iceberg
+                    snapshot summaries hold strings, not table rows)
 read_table          ``spark.table``; pinned epoch → ``VERSION AS OF``
                     the snapshot recorded at that epoch's commit
 commit              one row in the ``__epochs`` metadata table mapping
                     epoch → per-table snapshot ids + engine metadata
                     (next_seq, n_queued); resume = read the row back
+compaction_due      pending delete files reach the fallback's part
+                    bound (``MAX_DELTA_PARTS``) or their records reach
+                    the row bound (``delete_files`` metadata table)
 compact_deltas      ``CALL catalog.system.rewrite_data_files`` —
                     Iceberg's amortized MoR compaction
 ==================  ====================================================
@@ -39,6 +47,9 @@ from __future__ import annotations
 import json
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from podcast_plow_spark.sources.snapshots import MAX_DELTA_PARTS
 
 __all__ = ["iceberg_available", "IcebergStore"]
 
@@ -191,24 +202,36 @@ class IcebergStore:
         updates.createOrReplaceTempView(view)
         self.spark.sql(merge_sql(self._tbl(name), view, key_col))
 
+    def declare_table(self, name: str, schema: StructType | str) -> None:
+        """Create the (empty) append table with its schema, if absent."""
+        if not self._exists(name):
+            self.spark.createDataFrame([], schema).writeTo(self._tbl(name)).using("iceberg").create()
+
     def append_table(self, name: str, delta: DataFrame) -> None:
         if not self._exists(name):
             delta.writeTo(self._tbl(name)).using("iceberg").create()
         else:
             delta.writeTo(self._tbl(name)).append()
 
+    def append_rows(self, name: str, rows: list) -> None:
+        """Driver-side rows of a declared table → one fast-append."""
+        schema = self.spark.table(self._tbl(name)).schema
+        self.append_table(name, self.spark.createDataFrame([tuple(r) for r in rows], schema))
+
     # -- deltas / compaction --------------------------------------------
 
-    def delta_rows(self, spark: SparkSession, name: str) -> int:
-        """Pending MoR delete-file count proxy: rows is the fallback's
-        compaction trigger; Iceberg tracks delete files instead."""
+    def compaction_due(self, spark: SparkSession, name: str, max_rows: int) -> bool:
+        """Iceberg's pending MoR state is its delete files: compaction
+        is due once they number ``MAX_DELTA_PARTS`` (the fallback's
+        delta part bound) or their records reach ``max_rows``."""
         try:
             row = spark.sql(
-                f"SELECT COUNT(*) AS n FROM {self._tbl(name)}.delete_files"
+                "SELECT COUNT(*) AS n, COALESCE(SUM(record_count), 0) AS r "
+                f"FROM {self._tbl(name)}.delete_files"
             ).collect()[0]
-            return int(row["n"])
         except Exception:  # noqa: BLE001 — metadata table shape varies by version
-            return 0
+            return False
+        return int(row["n"]) >= MAX_DELTA_PARTS or int(row["r"]) >= max_rows
 
     def compact_deltas(self, name: str) -> list[int]:
         self.spark.sql(compact_sql(self.catalog, self.namespace, name))

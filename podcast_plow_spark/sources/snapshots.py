@@ -18,20 +18,34 @@ implements the Iceberg properties the crawl engine relies on
    :meth:`merge_buckets` rewrites ONLY the buckets an epoch touched;
    untouched buckets are carried forward as manifest pointers to their
    existing (immutable) files.
-4. **Merge-on-read deltas** — the Iceberg MoR analog, and the piece
-   that makes epoch cost O(batch) instead of O(frontier): politeness
-   spreads a crawl batch across MANY hosts, so per-epoch updates hit
-   most buckets and copy-on-write degenerates to a full rewrite. With
-   :meth:`merge_delta`, an epoch's upserts land in ONE small delta
-   part; :meth:`read_table` overlays it (broadcast anti-join on the
-   key + union — the delta is bounded by the compaction threshold, so
-   the overlay is always broadcast-sized); :meth:`compact_deltas`
-   folds accumulated deltas into the buckets when they grow past the
-   threshold — an amortized, bucket-pruned rewrite.
+4. **Log-structured merge-on-read deltas** — the Iceberg MoR analog,
+   and the piece that makes epoch cost O(batch) instead of
+   O(frontier): politeness spreads a crawl batch across MANY hosts, so
+   per-epoch updates hit most buckets and copy-on-write degenerates to
+   a full rewrite. :meth:`merge_delta` writes only the epoch's own
+   upserts as a new delta part and appends it to the entry's delta
+   list — no earlier part is re-read or re-written.
+   :meth:`read_table` overlays the parts: of the base and delta rows
+   of a key, the newest part's row wins (base rows count as the
+   oldest), by one broadcast anti-join against the parts' (key, part)
+   pairs — no base or delta row is shuffled. :meth:`compaction_due`
+   says when to fold the parts into the buckets — once they hold the
+   caller's row bound or :data:`MAX_DELTA_PARTS` parts — and
+   :meth:`compact_deltas` does it as one amortized, bucket-pruned
+   rewrite, so the overlay stays broadcast-sized and its file list
+   short.
 5. **Append tables** — the Iceberg fast-append analog for the
-   append-only side tables (crawl_log, lineage): each epoch adds one
-   new data file; the manifest accumulates the part list. No
-   read-modify-write of history, ever.
+   append-only side tables (crawl_log, lineage): :meth:`declare_table`
+   records the schema with no data file, :meth:`append_table` adds one
+   parquet part, and :meth:`append_rows` keeps a few driver-side rows
+   inline in the manifest (the Iceberg snapshot-summary analog: no
+   Spark job); past :data:`INLINE_ROWS_MAX` inline rows they spill
+   into one part in the same commit. No read-modify-write of history,
+   ever.
+6. **Schema in the metadata** — every entry records its table's
+   schema (without the ``__bucket`` directory column), and every read
+   passes it to ``spark.read.schema(...)``, as Iceberg reads its schema
+   from table metadata: no read runs Spark's schema-inference job.
 
 The interface is deliberately the shape of an Iceberg catalog
 (``write_table`` / ``read_table`` / ``commit`` / snapshot listing) so
@@ -46,16 +60,23 @@ Manifest layout::
       manifests/manifest-<epoch>.json
       LATEST                                -> manifest filename (atomic)
 
-Manifest table entries (three kinds)::
+Manifest table entries (three kinds; ``schema`` is a Spark
+``StructType.jsonValue()``)::
 
-    "plain_table":  "data/t/abc123"
-    "frontier":     {"kind": "bucketed", "bucket_col": "host_hash",
+    "plain_table":  {"kind": "plain", "path": "data/t/abc123", "schema": {...}}
+    "frontier":     {"kind": "bucketed", "bucket_col": "host_hash", "schema": {...},
                      "buckets": {"0": "data/frontier/v1/__bucket=0",
-                                 "1": "data/frontier/v7/__bucket=1", ...}}
-    "crawl_log":    {"kind": "append", "parts": ["data/crawl_log/v1", ...]}
+                                 "1": "data/frontier/v7/__bucket=1", ...},
+                     "deltas": ["data/frontier/v8", "data/frontier/v9"],
+                     "delta_key": "seq", "delta_est": 412}
+    "lineage":      {"kind": "append", "schema": {...},
+                     "parts": ["data/lineage/v3", ...],
+                     "rows": [[0, 7, 100, 12, 0.0], ...]}
 
 Note bucket 0 and bucket 1 above point into *different versions* —
-that is the bucket-pruned merge at work.
+that is the bucket-pruned merge at work. ``deltas`` lists the delta
+parts oldest first; each part's rows carry their list index in a
+``__delta_part`` column, which the read overlay compares.
 """
 
 from __future__ import annotations
@@ -67,10 +88,21 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
-__all__ = ["SnapshotStore"]
+__all__ = ["INLINE_ROWS_MAX", "MAX_DELTA_PARTS", "SnapshotStore"]
 
 _BUCKET_DIR_COL = "__bucket"
+# a delta row's index in its entry's ``deltas`` list: the newest wins
+_DELTA_PART_COL = "__delta_part"
+
+#: delta parts a bucketed table may carry before compaction is due,
+#: whatever their row count: bounds the files each overlay read lists
+#: and scans
+MAX_DELTA_PARTS = 8
+#: inline rows an append table keeps in its manifest entry; one more
+#: spills them all into one parquet part, so a manifest stays small
+INLINE_ROWS_MAX = 256
 
 
 def _order_cols(order_by: list) -> list:
@@ -79,17 +111,42 @@ def _order_cols(order_by: list) -> list:
     return [F.col(c).desc() if d == "desc" else F.col(c).asc() for c, d in order_by]
 
 
+def _schema_of(entry: dict) -> StructType:
+    return StructType.fromJson(entry["schema"])
+
+
+def _conform(df: DataFrame, schema: StructType) -> DataFrame:
+    """``df`` with exactly ``schema``'s columns, order and types, so
+    every part of a table matches the schema its reads pass."""
+    return df.select(*[F.col(f.name).cast(f.dataType) for f in schema.fields])
+
+
+def _entry_rels(entry: dict) -> list[str]:
+    """Every data path an entry references."""
+    if entry["kind"] == "plain":
+        return [entry["path"]]
+    if entry["kind"] == "bucketed":
+        return list(entry["buckets"].values()) + list(entry.get("deltas", []))
+    if entry["kind"] == "append":
+        return list(entry["parts"])
+    raise ValueError(f"unknown table entry {entry!r}")
+
+
 class SnapshotStore:
     def __init__(self, root: str):
         self.root = root
         os.makedirs(os.path.join(root, "data"), exist_ok=True)
         os.makedirs(os.path.join(root, "manifests"), exist_ok=True)
-        self._staged: dict[str, object] = {}
+        self._staged: dict[str, dict] = {}
 
     # -- staging -------------------------------------------------------
 
     def _new_version_rel(self, name: str) -> str:
         return os.path.join("data", name, uuid.uuid4().hex[:12])
+
+    def _read(self, spark: SparkSession, schema: StructType, rels: list[str]) -> DataFrame:
+        """Parquet read under the recorded schema: no inference job."""
+        return spark.read.schema(schema).parquet(*[os.path.join(self.root, r) for r in rels])
 
     def write_table(self, name: str, df: DataFrame, partition_by: list[str] | None = None) -> str:
         """Stage a FULL table version for the next commit. Data lands
@@ -102,7 +159,7 @@ class SnapshotStore:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
-        self._staged[name] = rel
+        self._staged[name] = {"kind": "plain", "path": rel, "schema": df.schema.jsonValue()}
         return path
 
     def write_bucketed(
@@ -138,29 +195,15 @@ class SnapshotStore:
         (e.g. 16 MB → a prefix cut reads ~1 group per bucket instead
         of the file). Recorded in the manifest alongside the sort
         spec so compaction rewrites keep the granularity."""
-        rel = self._new_version_rel(name)
-        path = os.path.join(self.root, rel)
-        out = df.withColumn(_BUCKET_DIR_COL, F.col(bucket_col))
-        if order_by:
-            # one task per bucket + in-file order: the writer's
-            # required partition-column ordering is already satisfied
-            # by the leading sort key, so no extra sort is inserted
-            # and the secondary (dequeue-key) order reaches the file
-            out = out.repartition(F.col(_BUCKET_DIR_COL)).sortWithinPartitions(
-                F.col(_BUCKET_DIR_COL), *_order_cols(order_by)
-            )
-        writer = out.write.mode("overwrite")
-        if row_group_bytes:
-            writer = writer.option("parquet.block.size", str(int(row_group_bytes)))
-        writer.partitionBy(_BUCKET_DIR_COL).parquet(path)
-        buckets = self._scan_bucket_dirs(rel)
         self._staged[name] = {
             "kind": "bucketed",
             "bucket_col": bucket_col,
-            "buckets": buckets,
+            "schema": df.schema.jsonValue(),
+            "buckets": {},
             "write_order": list(order_by) if order_by else [],
             **({"row_group_bytes": int(row_group_bytes)} if row_group_bytes else {}),
         }
+        self.merge_buckets(name, df)
 
     def merge_buckets(self, name: str, touched_df: DataFrame, bucket_col: str | None = None) -> list[int]:
         """Bucket-pruned MERGE: ``touched_df`` is the complete new
@@ -172,16 +215,18 @@ class SnapshotStore:
         ``MERGE INTO`` analog under the copy-on-write strategy with
         partition-granularity pruning."""
         entry = self._current_entry(name)
-        assert isinstance(entry, dict) and entry.get("kind") == "bucketed", f"{name} is not bucketed"
+        assert entry is not None and entry["kind"] == "bucketed", f"{name} is not bucketed"
         bucket_col = bucket_col or entry["bucket_col"]
         write_order = entry.get("write_order", [])
         row_group_bytes = entry.get("row_group_bytes")
         rel = self._new_version_rel(name)
         path = os.path.join(self.root, rel)
-        out = touched_df.withColumn(_BUCKET_DIR_COL, F.col(bucket_col))
+        out = _conform(touched_df, _schema_of(entry)).withColumn(_BUCKET_DIR_COL, F.col(bucket_col))
         if write_order:
-            # preserve the table's WRITE ORDERED BY property across
-            # bucket rewrites (see write_bucketed)
+            # one task per bucket + in-file order: the writer's
+            # required partition-column ordering is already satisfied
+            # by the leading sort key, so no extra sort is inserted
+            # and the secondary (dequeue-key) order reaches the file
             out = out.repartition(F.col(_BUCKET_DIR_COL)).sortWithinPartitions(
                 F.col(_BUCKET_DIR_COL), *_order_cols(write_order)
             )
@@ -190,60 +235,51 @@ class SnapshotStore:
             writer = writer.option("parquet.block.size", str(int(row_group_bytes)))
         writer.partitionBy(_BUCKET_DIR_COL).parquet(path)
         new_buckets = self._scan_bucket_dirs(rel)
-        merged = dict(entry["buckets"])
-        merged.update(new_buckets)
         self._staged[name] = {
-            "kind": "bucketed",
+            **entry,
             "bucket_col": bucket_col,
-            "buckets": merged,
-            "write_order": write_order,
-            **({"row_group_bytes": int(row_group_bytes)} if row_group_bytes else {}),
+            "buckets": {**entry["buckets"], **new_buckets},
         }
         return sorted(int(k) for k in new_buckets)
 
     def merge_delta(self, name: str, updates: DataFrame, key_col: str = "seq", approx_rows: int | None = None) -> None:
-        """Merge-on-read upsert for a bucketed table: stage ``updates``
-        (full rows, latest version wins by ``key_col``) as the table's
-        single delta part. An existing delta is folded in first
-        (new keys override old delta rows), so the table always carries
-        at most ONE delta part whose size is bounded by updates since
-        the last compaction — which keeps the read-side overlay
-        broadcastable. Write cost per epoch: O(accumulated delta), not
-        O(table)."""
+        """Merge-on-read upsert for a bucketed table: write ``updates``
+        (full rows, unique by ``key_col``) as ONE new delta part and
+        append it to the table's delta list. Earlier parts are neither
+        read nor rewritten — the read overlay lets the newest part's
+        row win per key — so the write is O(updates), whatever the
+        epochs since the last compaction."""
         entry = self._current_entry(name)
-        assert isinstance(entry, dict) and entry.get("kind") == "bucketed", f"{name} is not bucketed"
-        spark = updates.sparkSession
-        deltas = entry.get("deltas", [])
-        if deltas:
-            old = spark.read.parquet(*[os.path.join(self.root, p) for p in deltas])
-            keys = updates.select(key_col)
-            updates = old.join(F.broadcast(keys), key_col, "left_anti").unionByName(updates)
+        assert entry is not None and entry["kind"] == "bucketed", f"{name} is not bucketed"
+        deltas = list(entry.get("deltas", []))
         rel = self._new_version_rel(name)
-        updates.write.mode("overwrite").parquet(os.path.join(self.root, rel))
-        staged = dict(entry)
-        staged["deltas"] = [rel]
-        staged["delta_key"] = key_col
+        _conform(updates, _schema_of(entry)).withColumn(
+            _DELTA_PART_COL, F.lit(len(deltas))
+        ).write.mode("overwrite").parquet(os.path.join(self.root, rel))
+        staged = {**entry, "deltas": deltas + [rel], "delta_key": key_col}
         if approx_rows is not None:
-            # caller-supplied upper bound on this merge's new rows —
-            # the manifest carries a running estimate so compaction
+            # caller-supplied upper bound on this merge's rows — the
+            # manifest carries a running estimate so compaction
             # policy never needs a count() job
             staged["delta_est"] = int(entry.get("delta_est", 0)) + int(approx_rows)
         else:
             staged.pop("delta_est", None)
         self._staged[name] = staged
 
-    def delta_rows(self, spark: SparkSession, name: str) -> int:
-        """Pending-delta size (0 if none): the manifest's running
-        estimate when the caller supplied one (upper bound — upserts of
-        already-deltaed keys count twice, which only compacts EARLIER),
-        else an exact count job."""
+    def compaction_due(self, spark: SparkSession, name: str, max_rows: int) -> bool:
+        """True once the pending delta parts hold ``max_rows`` rows or
+        number :data:`MAX_DELTA_PARTS`. Rows come from the manifest's
+        running estimate when every merge supplied one (an upper bound,
+        which only compacts EARLIER), else from an exact count job."""
         entry = self._current_entry(name)
-        if not isinstance(entry, dict) or not entry.get("deltas"):
-            return 0
+        deltas = entry.get("deltas", []) if entry is not None else []
+        if not deltas:
+            return False
+        if len(deltas) >= MAX_DELTA_PARTS:
+            return True
         if "delta_est" in entry:
-            return int(entry["delta_est"])
-        paths = [os.path.join(self.root, p) for p in entry["deltas"]]
-        return spark.read.parquet(*paths).count()
+            return int(entry["delta_est"]) >= max_rows
+        return self._read(spark, _schema_of(entry), deltas).count() >= max_rows
 
     def compact_deltas(self, name: str) -> list[int]:
         """Fold the delta overlay into the bucket files (amortized,
@@ -256,37 +292,64 @@ class SnapshotStore:
         only see the committed manifest and silently drop the staged
         updates; caught by the crawl-parity-under-compaction test)."""
         entry = self._current_entry(name)
-        assert isinstance(entry, dict) and entry.get("kind") == "bucketed"
+        assert entry is not None and entry["kind"] == "bucketed"
         if not entry.get("deltas"):
             return []
         spark = SparkSession.getActiveSession()
         assert spark is not None
+        schema = _schema_of(entry)
         bucket_col = entry["bucket_col"]
-        key_col = entry.get("delta_key", "seq")
-        delta = spark.read.parquet(*[os.path.join(self.root, p) for p in entry["deltas"]])
+        delta = self._read(spark, schema, entry["deltas"])
         touched = sorted(int(r[0]) for r in delta.select(bucket_col).distinct().collect())
-        base_paths = self._entry_paths(entry, touched)
-        if base_paths:
-            base = spark.read.parquet(*base_paths)
-            merged = base.join(F.broadcast(delta.select(key_col)), key_col, "left_anti").unionByName(delta)
-        else:
-            merged = delta
-        rewritten = self.merge_buckets(name, merged, bucket_col)
-        staged = dict(self._staged[name])
-        staged["deltas"] = []
+        base_rels = [entry["buckets"][str(b)] for b in touched if str(b) in entry["buckets"]]
+        base = self._read(spark, schema, base_rels) if base_rels else None
+        rewritten = self.merge_buckets(name, self._overlay(spark, entry, base), bucket_col)
+        staged = {**self._staged[name], "deltas": []}
         staged.pop("delta_est", None)
         self._staged[name] = staged
         return rewritten
 
+    def declare_table(self, name: str, schema: StructType | str) -> None:
+        """Stage an empty append table: its schema (a ``StructType`` or
+        a DDL string) and no parts — no Spark job, no data file (the
+        Iceberg ``CREATE TABLE`` analog). A read returns an empty frame
+        of that schema."""
+        if isinstance(schema, str):
+            schema = StructType.fromDDL(schema)
+        self._staged[name] = {"kind": "append", "schema": schema.jsonValue(), "parts": [], "rows": []}
+
     def append_table(self, name: str, delta: DataFrame) -> None:
         """Stage an append: one new data file list entry; history is
-        never re-read or re-written (Iceberg fast-append analog)."""
-        rel = self._new_version_rel(name)
-        delta.write.mode("overwrite").parquet(os.path.join(self.root, rel))
+        never re-read or re-written (Iceberg fast-append analog). The
+        first append of an undeclared table records ``delta``'s
+        schema."""
         entry = self._current_entry(name)
-        parts = list(entry["parts"]) if isinstance(entry, dict) and entry.get("kind") == "append" else []
-        parts.append(rel)
-        self._staged[name] = {"kind": "append", "parts": parts}
+        if entry is None:
+            entry = {"kind": "append", "schema": delta.schema.jsonValue(), "parts": [], "rows": []}
+        assert entry["kind"] == "append", f"{name} is not an append table"
+        rel = self._new_version_rel(name)
+        _conform(delta, _schema_of(entry)).write.mode("overwrite").parquet(os.path.join(self.root, rel))
+        self._staged[name] = {**entry, "parts": entry["parts"] + [rel]}
+
+    def append_rows(self, name: str, rows: list) -> None:
+        """Stage a few driver-side rows (tuples in schema order, JSON
+        scalars) of a declared append table inline in the manifest —
+        the Iceberg snapshot-summary analog: no Spark job, no file.
+        Once the table's inline rows pass :data:`INLINE_ROWS_MAX` they
+        spill, all of them, into one new part in the same commit."""
+        entry = self._current_entry(name)
+        assert entry is not None and entry["kind"] == "append", f"declare {name} first"
+        inline = entry["rows"] + [list(r) for r in rows]
+        parts = entry["parts"]
+        if len(inline) > INLINE_ROWS_MAX:
+            spark = SparkSession.getActiveSession()
+            assert spark is not None
+            rel = self._new_version_rel(name)
+            spark.createDataFrame(inline, _schema_of(entry)).write.mode("overwrite").parquet(
+                os.path.join(self.root, rel)
+            )
+            parts, inline = parts + [rel], []
+        self._staged[name] = {**entry, "parts": parts, "rows": inline}
 
     def _scan_bucket_dirs(self, rel: str) -> dict[str, str]:
         path = os.path.join(self.root, rel)
@@ -296,7 +359,7 @@ class SnapshotStore:
                 out[d.split("=", 1)[1]] = os.path.join(rel, d)
         return out
 
-    def _current_entry(self, name: str):
+    def _current_entry(self, name: str) -> dict | None:
         if name in self._staged:
             return self._staged[name]
         manifest = self._latest_manifest()
@@ -355,22 +418,35 @@ class SnapshotStore:
         m = self._latest_manifest()
         return {} if m is None else m.get("metadata", {})
 
-    def table_entry(self, name: str, epoch: int | None = None):
+    def table_entry(self, name: str, epoch: int | None = None) -> dict | None:
         manifest = self._latest_manifest() if epoch is None else self.manifest_for(epoch)
         if not manifest or name not in manifest["tables"]:
             return None
         return manifest["tables"][name]
 
-    def _entry_paths(self, entry, bucket_ids: list[int] | None = None) -> list[str]:
-        if isinstance(entry, str):
-            return [os.path.join(self.root, entry)]
-        if entry.get("kind") == "bucketed":
-            buckets = entry["buckets"]
-            keys = [str(b) for b in bucket_ids] if bucket_ids is not None else sorted(buckets)
-            return [os.path.join(self.root, buckets[k]) for k in keys if k in buckets]
-        if entry.get("kind") == "append":
-            return [os.path.join(self.root, p) for p in entry["parts"]]
-        raise ValueError(f"unknown table entry {entry!r}")
+    def _overlay(
+        self,
+        spark: SparkSession,
+        entry: dict,
+        base: DataFrame | None,
+        bucket_ids: list[int] | None = None,
+    ) -> DataFrame:
+        """``base`` with the entry's delta parts applied. One rule for
+        every row: base rows count as part -1, and a row survives
+        unless a NEWER part holds its key — one broadcast anti-join of
+        the base ∪ delta rows against the parts' (key, part) pairs.
+        Neither base nor delta rows are shuffled, and the pairs are
+        bounded by the compaction threshold."""
+        schema = _schema_of(entry)
+        with_part = StructType(schema.fields + [StructField(_DELTA_PART_COL, IntegerType())])
+        delta = self._read(spark, with_part, entry["deltas"])
+        if bucket_ids is not None:
+            delta = delta.where(F.col(entry["bucket_col"]).isin([int(b) for b in bucket_ids]))
+        key_col = entry.get("delta_key", "seq")
+        rows = delta if base is None else base.withColumn(_DELTA_PART_COL, F.lit(-1)).unionByName(delta)
+        newer = F.broadcast(delta.select(F.col(key_col).alias("__key"), F.col(_DELTA_PART_COL).alias("__newer")))
+        cond = (F.col(key_col) == F.col("__key")) & (F.col("__newer") > F.col(_DELTA_PART_COL))
+        return rows.join(newer, cond, "left_anti").drop(_DELTA_PART_COL)
 
     def read_table(
         self,
@@ -379,32 +455,31 @@ class SnapshotStore:
         epoch: int | None = None,
         bucket_ids: list[int] | None = None,
     ) -> DataFrame | None:
-        """Read a table (any kind) at the latest — or a pinned — epoch.
-        For bucketed tables ``bucket_ids`` prunes the read to just
-        those buckets' files (manifest-level partition pruning), and a
-        pending merge-on-read delta is overlaid: base rows whose key
-        appears in the delta are replaced (broadcast anti-join — the
-        delta is compaction-bounded), delta rows are unioned in."""
+        """Read a table (any kind) at the latest — or a pinned — epoch,
+        under the schema its manifest entry records. For bucketed
+        tables ``bucket_ids`` prunes the read to just those buckets'
+        files (manifest-level partition pruning), and pending
+        merge-on-read delta parts are overlaid (:meth:`_overlay`). An
+        append table reads its parts plus its inline rows; with
+        neither it is an empty frame of its schema."""
         entry = self.table_entry(name, epoch)
         if entry is None:
             return None
-        paths = self._entry_paths(entry, bucket_ids)
-        deltas = entry.get("deltas", []) if isinstance(entry, dict) else []
-        if not paths and not deltas:
-            return None
-        delta_df = None
-        if deltas:
-            delta_df = spark.read.parquet(*[os.path.join(self.root, p) for p in deltas])
-            if bucket_ids is not None:
-                delta_df = delta_df.where(F.col(entry["bucket_col"]).isin([int(b) for b in bucket_ids]))
-        if not paths:
-            return delta_df
-        base = spark.read.parquet(*paths)
-        if delta_df is None:
+        schema = _schema_of(entry)
+        if entry["kind"] == "plain":
+            return self._read(spark, schema, [entry["path"]])
+        if entry["kind"] == "append":
+            out = self._read(spark, schema, entry["parts"]) if entry["parts"] else None
+            if entry["rows"] or out is None:
+                inline = spark.createDataFrame(entry["rows"], schema)
+                out = inline if out is None else out.unionByName(inline)
+            return out
+        buckets = entry["buckets"]
+        keys = sorted(buckets) if bucket_ids is None else [str(b) for b in bucket_ids if str(b) in buckets]
+        base = self._read(spark, schema, [buckets[k] for k in keys]) if keys else None
+        if not entry.get("deltas"):
             return base
-        key_col = entry.get("delta_key", "seq")
-        overlaid = base.join(F.broadcast(delta_df.select(key_col)), key_col, "left_anti")
-        return overlaid.unionByName(delta_df)
+        return self._overlay(spark, entry, base, bucket_ids)
 
     def expire_snapshots(self, keep_last: int = 3) -> None:
         """GC data versions unreachable from the last ``keep_last``
@@ -413,26 +488,12 @@ class SnapshotStore:
         any manifest references it or any bucket inside it."""
         mf_dir = os.path.join(self.root, "manifests")
         names = sorted(os.listdir(mf_dir))
-        keep = names[-keep_last:]
         reachable: set[str] = set()
-
-        def add_rel(rel: str) -> None:
-            parts = rel.split(os.sep)
-            reachable.add(os.path.join(*parts[:3]))  # data/<table>/<version>
-
-        for name in keep:
+        for name in names[-keep_last:]:
             with open(os.path.join(mf_dir, name)) as fh:
                 for entry in json.load(fh)["tables"].values():
-                    if isinstance(entry, str):
-                        add_rel(entry)
-                    elif entry.get("kind") == "bucketed":
-                        for rel in entry["buckets"].values():
-                            add_rel(rel)
-                        for rel in entry.get("deltas", []):
-                            add_rel(rel)
-                    elif entry.get("kind") == "append":
-                        for rel in entry["parts"]:
-                            add_rel(rel)
+                    for rel in _entry_rels(entry):
+                        reachable.add(os.path.join(*rel.split(os.sep)[:3]))  # data/<table>/<version>
         data_dir = os.path.join(self.root, "data")
         for table in os.listdir(data_dir):
             for version in os.listdir(os.path.join(data_dir, table)):

@@ -18,19 +18,17 @@ Two entry points:
 
 Watermarking note: the frontier's event-time is ``discovered_at``;
 late discoveries only ever *add* URLs (the seen-filter makes merges
-idempotent), so the pipeline needs no watermark for correctness — a
-10-minute watermark is applied to the per-host rate aggregation
-(:func:`host_rate_stream`) only to bound its state.
+idempotent), so the pipeline needs no watermark for correctness.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from podcast_plow_spark.functions.urls import canonicalize_url_udf, extract_host_udf
 
-__all__ = ["candidate_stream_transform", "run_ingest_stream", "host_rate_stream"]
+__all__ = ["candidate_stream_transform", "run_ingest_stream"]
 
 
 def candidate_stream_transform(df: DataFrame, url_col: str = "url") -> DataFrame:
@@ -77,13 +75,3 @@ def run_ingest_stream(
         writer = writer.trigger(availableNow=True)
     return writer.start()
 
-
-def host_rate_stream(candidates: DataFrame, window_sec: int = 60) -> DataFrame:
-    """Per-host discovery rate over tumbling windows with a watermark —
-    the streaming analog of the politeness budget monitor (Q10 stats)."""
-    return (
-        candidates.withColumn("discovered_at", F.current_timestamp())
-        .withWatermark("discovered_at", "10 minutes")
-        .groupBy(F.window("discovered_at", f"{window_sec} seconds"), F.col("host"))
-        .agg(F.count(F.lit(1)).alias("n_urls"))
-    )

@@ -64,8 +64,8 @@ def build_store(spark, n: int, root: str, npart: int) -> SnapshotStore:
         order_by=[["priority", "desc"], ["run_at", "asc"], ["seq", "asc"]],
         row_group_bytes=16 << 20,
     )
-    store.append_table("crawl_log", spark.createDataFrame([], CRAWL_LOG_SCHEMA))
-    store.append_table("lineage", spark.createDataFrame([], LINEAGE_SCHEMA))
+    store.declare_table("crawl_log", CRAWL_LOG_SCHEMA)
+    store.declare_table("lineage", LINEAGE_SCHEMA)
     store.commit(0, {"epoch": 0, "next_seq": n + 1})
     return store
 

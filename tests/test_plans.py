@@ -221,6 +221,40 @@ def test_prefix_filter_pushed_through_mor_overlay(spark, tmp_path_factory):
     assert any("Or(GreaterThan(priority,8)" in ln for ln in pushed), plan
 
 
+def test_multi_part_overlay_never_shuffles_base_rows(spark, tmp_path_factory):
+    """With two or more delta parts the read overlay must still keep
+    each key's newest row without moving base rows: the base bucket
+    scan reaches the overlay's output through no Exchange."""
+    from podcast_plow_spark.sources.snapshots import SnapshotStore
+
+    store = SnapshotStore(str(tmp_path_factory.mktemp("parts_store")))
+    cols = "seq long, host_hash int, url_canon string, status string"
+    store.write_bucketed(
+        "frontier", spark.createDataFrame([(i, i % 4, f"u{i}", "queued") for i in range(40)], cols)
+    )
+    store.commit(0)
+    for e in (1, 2, 3):
+        upd = spark.createDataFrame([(1, 1, "u1", f"s{e}"), (100 + e, 2, "n", "queued")], cols)
+        store.merge_delta("frontier", upd)
+        store.commit(e)
+    assert len(store.table_entry("frontier")["deltas"]) == 3
+
+    plan = _plan(store.read_table(spark, "frontier"))
+    lines = plan.splitlines()
+    # the base scan lists the 4 bucket directories; delta scans list 3 parts
+    base_scans = [i for i, ln in enumerate(lines) if "FileScan" in ln and "InMemoryFileIndex(4 paths)" in ln]
+    assert base_scans, plan
+    for i in base_scans:
+        # ancestors in the tree string: each earlier line indented less
+        # than every line seen so far on the walk up
+        depth = len(lines[i]) - len(lines[i].lstrip(" :+-"))
+        for ln in reversed(lines[:i]):
+            d = len(ln) - len(ln.lstrip(" :+-"))
+            if d < depth:
+                depth = d
+                assert "Exchange" not in ln, plan
+
+
 def test_word_shingles_has_no_exchange(spark):
     """Per-doc shingle dedup is row-local (array_distinct before the
     explode) — no global distinct shuffle over the exploded relation."""

@@ -10,7 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from podcast_plow_spark.sources.snapshots import SnapshotStore
+from podcast_plow_spark.sources.snapshots import INLINE_ROWS_MAX, MAX_DELTA_PARTS, SnapshotStore
 
 
 def _frontier_like(spark, ids, bucket_of=lambda i: i % 4):
@@ -102,6 +102,43 @@ class TestAppend:
         assert len(parts) == len(p0) + 1
         assert store.read_table(spark, "log").count() == 3
 
+    def test_declared_empty_crawl_log_has_crawl_log_schema(self, spark, tmp_path):
+        """bootstrap declares crawl_log with no part: no data file is
+        written, and a read is an empty frame of CRAWL_LOG_SCHEMA."""
+        from pyspark.sql.types import StructType
+
+        from podcast_plow_spark.crawl.engine import CRAWL_LOG_SCHEMA
+
+        store = SnapshotStore(str(tmp_path))
+        store.declare_table("crawl_log", CRAWL_LOG_SCHEMA)
+        store.commit(0)
+        assert store.table_entry("crawl_log")["parts"] == []
+        assert not os.path.exists(os.path.join(str(tmp_path), "data", "crawl_log"))
+        log = store.read_table(spark, "crawl_log")
+        assert log.schema == StructType.fromDDL(CRAWL_LOG_SCHEMA)
+        assert log.count() == 0
+
+    def test_inline_rows_spill_into_one_part_past_bound(self, spark, tmp_path):
+        """append_rows keeps rows in the manifest until they pass
+        INLINE_ROWS_MAX, then moves all of them into one part; the rows
+        read back are the same either way."""
+        store = SnapshotStore(str(tmp_path))
+        store.declare_table("lineage", "epoch long, n long, fpr double")
+        store.commit(0)
+        step = INLINE_ROWS_MAX // 2 + 1
+        want = []
+        for e in range(1, 4):
+            rows = [(e, i, 0.5) for i in range(step)]
+            store.append_rows("lineage", rows)
+            store.commit(e)
+            want += rows
+            entry = store.table_entry("lineage")
+            assert len(entry["rows"]) <= INLINE_ROWS_MAX
+            got = sorted(tuple(r) for r in store.read_table(spark, "lineage").collect())
+            assert got == sorted(want), e
+        # 3 steps pass the bound once: one spill part, the rest inline
+        assert len(entry["parts"]) == 1 and len(entry["rows"]) == step
+
 
 class TestExpire:
     def test_gc_keeps_reachable_mixed_kinds(self, spark, tmp_path):
@@ -125,6 +162,30 @@ class TestExpire:
         assert store.read_table(spark, "log").count() == n_log
         # old manifests gone
         assert len(os.listdir(os.path.join(str(tmp_path), "manifests"))) == 2
+
+    def test_gc_keeps_every_live_delta_part(self, spark, tmp_path):
+        """With many delta parts pending, expiring old snapshots keeps
+        every part the live manifest lists, and the overlay reads the
+        same rows after the GC."""
+        store = SnapshotStore(str(tmp_path))
+        store.write_bucketed("frontier", _frontier_like(spark, range(8)))
+        store.commit(0)
+        n_parts = MAX_DELTA_PARTS - 1
+        for e in range(1, n_parts + 1):
+            upd = spark.createDataFrame(
+                [(e % 8, e % 4, f"u{e % 8}", f"s{e}"), (100 + e, e % 4, f"u{100 + e}", "queued")],
+                "seq long, host_hash int, url_canon string, status string",
+            )
+            store.merge_delta("frontier", upd)
+            store.commit(e)
+        deltas = store.table_entry("frontier")["deltas"]
+        assert len(deltas) == n_parts
+        before = sorted(tuple(r) for r in store.read_table(spark, "frontier").collect())
+        store.expire_snapshots(keep_last=1)
+        assert all(os.path.isdir(os.path.join(str(tmp_path), rel)) for rel in deltas)
+        after = sorted(tuple(r) for r in store.read_table(spark, "frontier").collect())
+        assert after == before
+        assert len(after) == 8 + n_parts
 
     def test_gc_removes_unreachable_versions(self, spark, tmp_path):
         store = SnapshotStore(str(tmp_path))
@@ -157,21 +218,50 @@ class TestMergeOnRead:
             k: v for k, v in store.table_entry("frontier", epoch=0)["buckets"].items()
         }
 
-    def test_repeated_updates_latest_wins_single_delta_part(self, spark, tmp_path):
+    def test_repeated_updates_latest_wins_across_bounded_parts(self, spark, tmp_path):
+        """Each merge adds one part; the newest part's row wins for a
+        key updated in every part, and the compaction policy keeps the
+        part count at or below MAX_DELTA_PARTS."""
         store = SnapshotStore(str(tmp_path))
         store.write_bucketed("frontier", _frontier_like(spark, range(8)))
         store.commit(0)
-        for e, status in ((1, "running"), (2, "finished")):
+        most_parts = 0
+        for e in range(1, MAX_DELTA_PARTS + 2):
             upd = spark.createDataFrame(
-                [(3, 3, "u3", status)], "seq long, host_hash int, url_canon string, status string"
+                [(3, 3, "u3", f"s{e}")], "seq long, host_hash int, url_canon string, status string"
             )
             store.merge_delta("frontier", upd)
+            if store.compaction_due(spark, "frontier", max_rows=10**9):
+                store.compact_deltas("frontier")
             store.commit(e)
-        entry = store.table_entry("frontier")
-        assert len(entry["deltas"]) == 1  # folded, never a growing chain
-        back = store.read_table(spark, "frontier")
-        assert back.where(F.col("seq") == 3).collect()[0]["status"] == "finished"
-        assert back.count() == 8
+            entry = store.table_entry("frontier")
+            most_parts = max(most_parts, len(entry["deltas"]))
+            if e in (2, MAX_DELTA_PARTS - 1, MAX_DELTA_PARTS + 1):
+                back = store.read_table(spark, "frontier")
+                assert back.where(F.col("seq") == 3).collect()[0]["status"] == f"s{e}", e
+                assert back.count() == 8, e
+        assert most_parts == MAX_DELTA_PARTS - 1  # the bound compacts, parts never pile up
+
+    def test_part_bound_compaction_is_pure_layout_change(self, spark, tmp_path):
+        """MAX_DELTA_PARTS parts make compaction due however few rows
+        they hold; folding them changes the layout, not the rows read."""
+        store = SnapshotStore(str(tmp_path))
+        store.write_bucketed("frontier", _frontier_like(spark, range(8)))
+        store.commit(0)
+        for e in range(1, MAX_DELTA_PARTS + 1):
+            upd = spark.createDataFrame(
+                [(e % 3, e % 3 % 4, f"u{e % 3}", f"s{e}"), (200 + e, 9, f"u{200 + e}", "queued")],
+                "seq long, host_hash int, url_canon string, status string",
+            )
+            store.merge_delta("frontier", upd, approx_rows=2)
+            assert store.compaction_due(spark, "frontier", max_rows=10**9) == (e == MAX_DELTA_PARTS)
+            store.commit(e)
+        pre = sorted(tuple(r) for r in store.read_table(spark, "frontier").collect())
+        store.compact_deltas("frontier")
+        store.commit(MAX_DELTA_PARTS + 1)
+        assert store.table_entry("frontier")["deltas"] == []
+        post = sorted(tuple(r) for r in store.read_table(spark, "frontier").collect())
+        assert post == pre
 
     def test_compaction_folds_then_clears(self, spark, tmp_path):
         store = SnapshotStore(str(tmp_path))
@@ -381,6 +471,39 @@ def test_engine_epoch_is_delta_only_then_compaction_prunes(spark, tmp_path_facto
         assert moved <= allowed, f"epoch {epoch}: moved {moved - allowed} beyond touched hosts"
         untouched_seen += sum(1 for b in before if after.get(b) == before[b])
     assert untouched_seen > 0  # the pruning actually pruned something
+
+
+def test_epoch_delta_part_holds_only_its_batch_and_new_rows(spark, tmp_path_factory):
+    """O(batch) epoch writes: epoch e's new delta part holds exactly
+    its batch (re-stated as finished) plus its discoveries, whatever e
+    is — no earlier part's rows are carried into it."""
+    import pyarrow.parquet as pq
+
+    from podcast_plow_spark.crawl.engine import CrawlConfig, CrawlEngine
+    from podcast_plow_spark.sources.fixtures import FixtureSpec, make_fixtures
+
+    fx = make_fixtures(FixtureSpec(root=str(tmp_path_factory.mktemp("fx_parts")), n_feeds=3, entries_per_feed=4))
+    store = SnapshotStore(str(tmp_path_factory.mktemp("store_parts")))
+    eng = CrawlEngine(
+        spark, store, fx.root, config=CrawlConfig(batch_size=4, per_host_cap=2, num_partitions=4)
+    )
+    eng.bootstrap(f"{fx.root}/feeds.txt")
+    epoch = 0
+    while eng.run_epoch():
+        epoch += 1
+        deltas = store.table_entry("frontier")["deltas"]
+        assert len(deltas) == epoch  # one new part per epoch, none folded
+        part = os.path.join(store.root, deltas[-1])
+        part_rows = sum(
+            pq.ParquetFile(os.path.join(part, f)).metadata.num_rows
+            for f in os.listdir(part)
+            if f.endswith(".parquet")
+        )
+        n_batch = store.read_table(spark, "crawl_log").where(F.col("epoch") == epoch).count()
+        n_new = store.read_table(spark, "frontier").where(F.col("discovered_epoch") == epoch).count()
+        assert n_batch > 0
+        assert part_rows == n_batch + n_new, (epoch, part_rows, n_batch, n_new)
+    assert 3 <= epoch < MAX_DELTA_PARTS  # several parts, none compacted away
 
 
 def test_engine_on_bucketed_store_matches_oracle(spark, tmp_path_factory):
