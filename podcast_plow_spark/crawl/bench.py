@@ -17,12 +17,16 @@ frontier (no fixture I/O, no driver loops):
 6. enqueue survivors with deterministic seq.
 
 URLs processed = batch + candidates; throughput = that / wall time.
-Run at two parallelism levels for the scaling-efficiency criterion
-(scripts/scaling_bench.py writes BENCH/BASELINE.md).
+The frozen ``bench.py`` and ``perfbench/frontier_epoch.py`` call
+:func:`frontier_throughput` in-process. ``jobs/frontier_bench_job.py``
+is the one entrypoint that prints it as JSON (with the bracketing
+:func:`kernel_control`); ``scripts/executor_scaling_bench.py`` submits
+that job at N and 4N executors (BENCH/EXECUTOR_SCALING.md).
 """
 
 from __future__ import annotations
 
+import math
 import time
 
 from pyspark.sql import SparkSession
@@ -65,19 +69,12 @@ def synthetic_frontier(spark: SparkSession, n: int, partitions: int = 64, salt: 
     )
 
 
-def _decode_psnr_stage(batch, keep_offset: bool = False):
+def _decode_psnr_stage(batch):
     """The fetch+process stage of an *image* crawl: per URL, obtain the
     payload (here: deterministically derived from the URL id — the
     network-free stand-in), decode, compute the PSNR invariant and
     phash. This is the dominant per-URL CPU at production scale and is
-    embarrassingly parallel.
-
-    ``keep_offset``: pass ``fetch_offset_sec`` through the stage (a
-    real fetcher consumes it — it IS the politeness fetch time).
-    Consuming it also keeps the upstream schedule window alive in the
-    plan, so the decode inherits the window's (possibly salted)
-    partitioning instead of Catalyst pruning the window away
-    (scripts/skew_bench.py relies on this)."""
+    embarrassingly parallel."""
     import re
 
     import numpy as np
@@ -131,19 +128,10 @@ def _decode_psnr_stage(batch, keep_offset: bool = False):
                         ok = p >= 40.0
                 oks.append(ok)
                 phs.append(ph)
-            out = {
-                "url_canon": pdf["url_canon"],
-                "invariant_ok": np.concatenate(oks),
-                "phash": np.concatenate(phs),
-            }
-            if "fetch_offset_sec" in pdf.columns:
-                out["fetch_offset_sec"] = pdf["fetch_offset_sec"]
-            yield pd.DataFrame(out)
+            yield pd.DataFrame(
+                {"url_canon": pdf["url_canon"], "invariant_ok": np.concatenate(oks), "phash": np.concatenate(phs)}
+            )
 
-    if keep_offset:
-        return batch.select("url_canon", "fetch_offset_sec").mapInPandas(
-            stage, "url_canon string, invariant_ok boolean, phash long, fetch_offset_sec double"
-        )
     return batch.select("url_canon").mapInPandas(stage, "url_canon string, invariant_ok boolean, phash long")
 
 
@@ -349,7 +337,7 @@ def frontier_throughput(
     # separately: the standard reps keep the fresh-candidate workload
     # the round-over-round series has always measured.
     host_mod = n_urls // 1000 + 1
-    step = _lcm3(3, 10, host_mod)
+    step = math.lcm(3, 10, host_mod)
     t_mult = max(1, (n_urls - k) // step)
     overlap_salt = t_mult * step
     best_overlap = 0.0
@@ -360,12 +348,6 @@ def frontier_throughput(
         best_overlap = max(best_overlap, (n_batch + k) / dt_sec)
     frontier.unpersist()
     return {"urls_per_sec": best, "urls_per_sec_overlap": best_overlap}
-
-
-def _lcm3(a: int, b: int, c: int) -> int:
-    import math
-
-    return math.lcm(a, b, c)
 
 
 def kernel_control(spark, n: int = 250_000, partitions: int = 128, reps: int = 2) -> float:
@@ -398,42 +380,3 @@ def kernel_control(spark, n: int = 250_000, partitions: int = 128, reps: int = 2
     base.unpersist()
     return best
 
-
-if __name__ == "__main__":
-    import json
-    import os
-    import sys
-
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
-    from podcast_plow_spark.session import get_spark
-
-    cores = sys.argv[1] if len(sys.argv) > 1 else "32"
-    n = int(sys.argv[2]) if len(sys.argv) > 2 else 1_000_000
-    spark = get_spark(app_name=f"frontier-bench-{cores}", cores=cores)
-    spark.sparkContext.setLogLevel("ERROR")
-    # The in-process ceiling BRACKETS the epochs (measured before AND
-    # after, min of all reps): a hypervisor-steal burst that lands on a
-    # single control window would otherwise inflate/deflate the
-    # ceiling and bias the pair's normalized efficiency in either
-    # direction (r4 pair audit: one post-only control sat in a 319 s
-    # steal burst and turned a 2.91× speedup into a reported 0.61
-    # efficiency). Smaller control input (n/8) buys more reps for the
-    # same wall time; only the small/large RATIO of the control is
-    # consumed, so the input size cancels.
-    want_ctrl = os.environ.get("SPARK_GRAFT_INPROC_CONTROL", "0") == "1"
-    ctrl_n = max(1, n // 8)
-    ctrl_pre = kernel_control(spark, ctrl_n, reps=2) if want_ctrl else None
-    tput = frontier_throughput(spark, n_urls=n)
-    out = {
-        "cores": cores,
-        "n_urls": n,
-        "urls_per_sec": round(tput["urls_per_sec"], 1),
-        "urls_per_sec_overlap": round(tput["urls_per_sec_overlap"], 1),
-    }
-    if want_ctrl:
-        ctrl_post = kernel_control(spark, ctrl_n, reps=2)
-        out["kernel_control_sec"] = round(min(ctrl_pre, ctrl_post), 2)
-        out["kernel_control_pre_sec"] = round(ctrl_pre, 2)
-        out["kernel_control_post_sec"] = round(ctrl_post, 2)
-    print(json.dumps(out))
-    spark.stop()

@@ -380,8 +380,8 @@ class CrawlEngine:
         # explicit rather than inherited from the schedule window
         # because the fetch projections don't consume
         # fetch_offset_sec, so Catalyst would prune the window (and its
-        # layout) out of the fetch branches (measured:
-        # scripts/skew_bench.py, 2.3× at 30% skew / 16 cores).
+        # layout) out of the fetch branches (measured 2.3× at 30% skew
+        # / 16 cores: BENCH/BASELINE.md "Hot-host salting delta").
         # Un-salted path keeps the cached batch (no plan change).
         fetch_src = (
             batch_s.repartition(self.cfg.num_partitions, F.col("host"), F.col("host_salt"))

@@ -297,13 +297,11 @@ class SnapshotStore:
             return []
         spark = SparkSession.getActiveSession()
         assert spark is not None
-        schema = _schema_of(entry)
         bucket_col = entry["bucket_col"]
-        delta = self._read(spark, schema, entry["deltas"])
+        delta = self._read(spark, _schema_of(entry), entry["deltas"])
         touched = sorted(int(r[0]) for r in delta.select(bucket_col).distinct().collect())
         base_rels = [entry["buckets"][str(b)] for b in touched if str(b) in entry["buckets"]]
-        base = self._read(spark, schema, base_rels) if base_rels else None
-        rewritten = self.merge_buckets(name, self._overlay(spark, entry, base), bucket_col)
+        rewritten = self.merge_buckets(name, self._overlay(spark, entry, base_rels), bucket_col)
         staged = {**self._staged[name], "deltas": []}
         staged.pop("delta_est", None)
         self._staged[name] = staged
@@ -428,22 +426,27 @@ class SnapshotStore:
         self,
         spark: SparkSession,
         entry: dict,
-        base: DataFrame | None,
+        base_rels: list[str],
         bucket_ids: list[int] | None = None,
     ) -> DataFrame:
-        """``base`` with the entry's delta parts applied. One rule for
-        every row: base rows count as part -1, and a row survives
-        unless a NEWER part holds its key — one broadcast anti-join of
-        the base ∪ delta rows against the parts' (key, part) pairs.
-        Neither base nor delta rows are shuffled, and the pairs are
-        bounded by the compaction threshold."""
+        """The base files ``base_rels`` with the entry's delta parts
+        applied. One rule for every row: base rows count as part -1,
+        and a row survives unless a NEWER part holds its key. Base and
+        delta files are ONE scan (base files carry no ``__delta_part``
+        column, so it reads as null), anti-joined against one broadcast
+        of the parts' (key, part) pairs. Neither base nor delta rows
+        are shuffled, and the pairs are bounded by the compaction
+        threshold."""
         schema = _schema_of(entry)
         with_part = StructType(schema.fields + [StructField(_DELTA_PART_COL, IntegerType())])
-        delta = self._read(spark, with_part, entry["deltas"])
-        if bucket_ids is not None:
-            delta = delta.where(F.col(entry["bucket_col"]).isin([int(b) for b in bucket_ids]))
         key_col = entry.get("delta_key", "seq")
-        rows = delta if base is None else base.withColumn(_DELTA_PART_COL, F.lit(-1)).unionByName(delta)
+        delta = self._read(spark, with_part, entry["deltas"])
+        rows = self._read(spark, with_part, base_rels + entry["deltas"]).withColumn(
+            _DELTA_PART_COL, F.coalesce(F.col(_DELTA_PART_COL), F.lit(-1))
+        )
+        if bucket_ids is not None:
+            in_buckets = F.col(entry["bucket_col"]).isin([int(b) for b in bucket_ids])
+            delta, rows = delta.where(in_buckets), rows.where(in_buckets)
         newer = F.broadcast(delta.select(F.col(key_col).alias("__key"), F.col(_DELTA_PART_COL).alias("__newer")))
         cond = (F.col(key_col) == F.col("__key")) & (F.col("__newer") > F.col(_DELTA_PART_COL))
         return rows.join(newer, cond, "left_anti").drop(_DELTA_PART_COL)
@@ -476,10 +479,10 @@ class SnapshotStore:
             return out
         buckets = entry["buckets"]
         keys = sorted(buckets) if bucket_ids is None else [str(b) for b in bucket_ids if str(b) in buckets]
-        base = self._read(spark, schema, [buckets[k] for k in keys]) if keys else None
-        if not entry.get("deltas"):
-            return base
-        return self._overlay(spark, entry, base, bucket_ids)
+        base_rels = [buckets[k] for k in keys]
+        if entry.get("deltas"):
+            return self._overlay(spark, entry, base_rels, bucket_ids)
+        return self._read(spark, schema, base_rels) if base_rels else None
 
     def expire_snapshots(self, keep_last: int = 3) -> None:
         """GC data versions unreachable from the last ``keep_last``

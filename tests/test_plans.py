@@ -224,7 +224,9 @@ def test_prefix_filter_pushed_through_mor_overlay(spark, tmp_path_factory):
 def test_multi_part_overlay_never_shuffles_base_rows(spark, tmp_path_factory):
     """With two or more delta parts the read overlay must still keep
     each key's newest row without moving base rows: the base bucket
-    scan reaches the overlay's output through no Exchange."""
+    scan reaches the overlay's output through no Exchange, and the
+    delta parts' (key, part) pairs are broadcast once, with no union
+    of separate base and delta branches."""
     from podcast_plow_spark.sources.snapshots import SnapshotStore
 
     store = SnapshotStore(str(tmp_path_factory.mktemp("parts_store")))
@@ -239,10 +241,18 @@ def test_multi_part_overlay_never_shuffles_base_rows(spark, tmp_path_factory):
         store.commit(e)
     assert len(store.table_entry("frontier")["deltas"]) == 3
 
-    plan = _plan(store.read_table(spark, "frontier"))
+    # print every scan location in full, so the base scan is found by
+    # its bucket directories
+    key = "spark.sql.maxMetadataStringLength"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "100000")
+    try:
+        plan = _plan(store.read_table(spark, "frontier"))
+    finally:
+        spark.conf.set(key, prev)
     lines = plan.splitlines()
-    # the base scan lists the 4 bucket directories; delta scans list 3 parts
-    base_scans = [i for i, ln in enumerate(lines) if "FileScan" in ln and "InMemoryFileIndex(4 paths)" in ln]
+    # one scan lists the 4 bucket directories and the 3 delta parts
+    base_scans = [i for i, ln in enumerate(lines) if "FileScan" in ln and "__bucket=" in ln]
     assert base_scans, plan
     for i in base_scans:
         # ancestors in the tree string: each earlier line indented less
@@ -253,6 +263,8 @@ def test_multi_part_overlay_never_shuffles_base_rows(spark, tmp_path_factory):
             if d < depth:
                 depth = d
                 assert "Exchange" not in ln, plan
+    assert sum("BroadcastExchange" in ln for ln in lines) == 1, plan
+    assert not any("Union" in ln for ln in lines), plan
 
 
 def test_word_shingles_has_no_exchange(spark):
