@@ -12,7 +12,7 @@ sources    : seed lists, feed parsing, snapshot store (Iceberg-style
              atomic-commit fallback on parquet), synthetic image table
 crawl      : the epoch-driven crawl engine + the sequential oracle
 plans      : plan inspection/assertion helpers (explain auditing)
-streaming  : structured-streaming variants of the frontier pipeline
+streaming  : structured-streaming seed ingestion into the crawl engine
 """
 
 __version__ = "0.1.0"

@@ -17,6 +17,16 @@ One snapshot per epoch ⇒ the crawl is resumable from any epoch
 latest committed snapshot and produces byte-identical final state
 (tested in tests/test_crawl_engine.py).
 
+One candidate path: seed bootstrap, an epoch's feed discoveries and
+stream ingest (``streaming/frontier_stream.py``) all admit URLs
+through ``_project_candidates`` (robots gate, first row by
+``seq_key`` per canonical URL) and ``_admit`` (seen filter →
+enqueue → seen-filter insert). ``ingest`` is the entry point for a
+candidate DataFrame from outside the crawl; on an empty store it
+writes the first frontier, otherwise it commits one snapshot of its
+own, so a stream-built and a batch-built frontier crawl identically
+(tests/test_streaming.py).
+
 Scale design notes (10^10 frontier — these are now code, not notes):
 - the frontier is a BUCKETED store table (``bucket(host_hash)``);
   an epoch rewrites only the buckets its batch/discoveries touch —
@@ -222,59 +232,14 @@ class CrawlEngine:
         c = c.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") == 1).drop("__rn")
         return c.withColumn("fingerprint", F.sha2(F.col("url_canon"), 256))
 
-    # -- bootstrap ---------------------------------------------------------
-
-    def bootstrap(self, seeds_path: str) -> None:
-        seeds = load_seeds(self.spark, seeds_path)
-        cand = self._project_candidates(seeds)
-        rows = fr.enqueue(
-            cand,
-            epoch=0,
-            max_attempts=self.cfg.max_attempts,
-            num_partitions=self.cfg.num_partitions,
-            seq_base=0,
-        ).cache()  # the count and the bucketed write share one evaluation
-        n = rows.count()
-        # frontier is BUCKETED by host_hash (Iceberg bucket(N, host)
-        # analog) — epochs later rewrite only the buckets they touch —
-        # and WRITE ORDERED BY the dequeue key: row-group min/max
-        # stats then let the dequeue's pushed order-key prefix filter
-        # skip nearly the whole store instead of scanning it (the
-        # frontier scan was the last O(frontier) term in the epoch;
-        # see BENCH/EPOCH_SCALING.md)
-        self.store.write_bucketed(
-            "frontier",
-            rows,
-            bucket_col="host_hash",
-            order_by=[["priority", "desc"], ["run_at", "asc"], ["seq", "asc"]],
-            # 16 MB row groups = the pruning quantum: a prefix cut
-            # reads ~1 group per bucket instead of whole bucket files
-            row_group_bytes=16 << 20,
-        )
-        # side tables are APPEND tables, declared with no data file:
-        # each epoch adds to them, history is never re-read or
-        # re-written
-        self.store.declare_table("crawl_log", CRAWL_LOG_SCHEMA)
-        self.store.declare_table("lineage", LINEAGE_SCHEMA)
-        self.store.commit(0, {"epoch": 0, "next_seq": n + 1, "n_queued": n})
-        rows.unpersist()
-
-    # -- one epoch ---------------------------------------------------------
-
-    def run_epoch(self) -> bool:
-        meta = self.store.latest_metadata()
-        epoch = int(meta.get("epoch", 0)) + 1
-        next_seq = int(meta.get("next_seq", 1))
-        frontier = self.store.read_table(self.spark, "frontier")
-        assert frontier is not None, "bootstrap first"
-
-        # --- amortized Bloom fold (cuckoo hot tier → big Bloom).
-        # Folding at epoch START means the freshly-read frontier holds
-        # every row the hot tier covers (discovered_epoch > last fold),
-        # so the fold is one pushed-down scan of just those rows; the
-        # tier is then dropped and rebuilt from this epoch's inserts.
-        # The load-triggered early fold bounds tier fpr regardless of
-        # how hot_tier_capacity was sized.
+    def _fold_hot_tier(self, frontier: DataFrame, epoch: int) -> None:
+        """Amortized Bloom fold (cuckoo hot tier → big Bloom), run at
+        epoch start: the freshly-read frontier holds every row the hot
+        tier covers (discovered_epoch > last fold), so the fold is one
+        pushed-down scan of just those rows; the tier is then dropped
+        and rebuilt from this epoch's inserts. The load-triggered early
+        fold bounds tier fpr regardless of how hot_tier_capacity was
+        sized."""
         if self._hot is not None and (
             self._epochs_since_fold >= self.cfg.bloom_fold_epochs or self._hot.load > 0.8
         ):
@@ -285,6 +250,160 @@ class CrawlEngine:
             self._hot = None
             self._epochs_since_fold = 0
             self._last_fold_epoch = epoch - 1
+
+    def _admit(
+        self, cand: DataFrame, frontier: DataFrame, epoch: int, next_seq: int, caches: list
+    ) -> tuple[DataFrame, int, DataFrame]:
+        """Projected candidates → (new frontier rows, their count, the
+        seen filter's per-partition stats): seen filter, enqueue with
+        ``seq`` continuing from ``next_seq``, then the new URLs go into
+        the seen filter. The new rows are cached in ``caches``."""
+        seen = frontier.select("url_canon")
+        if self._bloom is None:
+            self._bloom = build_bloom(
+                seen,
+                "url_canon",
+                expected_items=self._bloom_capacity,
+                bits_per_item=self.cfg.bloom_bits_per_item,
+                n_shards=self.cfg.bloom_shards,
+            )
+            # the full build covers every row in the frontier
+            # read this epoch (all discovered_epoch ≤ epoch-1)
+            self._last_fold_epoch = epoch - 1
+        unseen, stats = seen_filter_exact(
+            cand, seen, self._bloom, "url_canon",
+            measure_fpr=True,
+            cache_registry=caches,
+            hot=self._hot,
+        )
+        new_rows = fr.enqueue(
+            unseen,
+            epoch=epoch,
+            max_attempts=self.cfg.max_attempts,
+            num_partitions=self.cfg.num_partitions,
+            seq_base=next_seq - 1,
+        ).cache()
+        caches.append(new_rows)
+        n_new = new_rows.count()
+        if n_new:
+            if self.cfg.bloom_fold_epochs > 1:
+                # O(batch) maintenance: insertions land in the cuckoo
+                # hot tier; the O(filter-size) Bloom OR + full
+                # re-broadcast are deferred to the amortized fold at
+                # epoch start. The tier is one batch-sized cuckoo for
+                # any shard count; probes OR it in after the Bloom.
+                if self._hot is None:
+                    self._hot = CuckooFilter.sized_for(self.cfg.hot_tier_capacity)
+                self._hot = self._hot.merge(
+                    build_cuckoo(new_rows.select("url_canon"), "url_canon", like=self._hot)
+                )
+                self._epochs_since_fold += 1
+            else:
+                delta = build_bloom(new_rows.select("url_canon"), "url_canon", like=self._bloom)
+                self._bloom = self._bloom.merge(delta)
+        return new_rows, n_new, stats
+
+    def _commit_epoch(
+        self, epoch: int, meta: dict, delta_rows: DataFrame, n_batch: int, n_new: int, stats
+    ) -> dict:
+        """Write an epoch's frontier rows as ONE new merge-on-read delta
+        part, its lineage rows and its snapshot; returns the committed
+        metadata."""
+        self.store.merge_delta("frontier", delta_rows, approx_rows=n_batch + n_new)
+        if self.store.compaction_due(self.spark, "frontier", self.cfg.delta_compact_rows):
+            self.store.compact_deltas("frontier")
+
+        # --- lineage: one row per seen-filter partition, or one row
+        # for the whole batch when the epoch ran no seen filter; the
+        # store keeps these few rows inline in the manifest
+        lineage_rows = [
+            (
+                int(r["partition_id"]),
+                epoch,
+                int(r["urls_in"]),
+                n_new,
+                (float(r["false_pos"]) / r["urls_in"]) if r["urls_in"] else 0.0,
+            )
+            for r in (stats.collect() if stats is not None else [])
+        ] or [(0, epoch, n_batch, n_new, 0.0)]
+        self.store.append_rows("lineage", lineage_rows)
+
+        meta_out = {"epoch": epoch, "next_seq": int(meta.get("next_seq", 1)) + n_new}
+        n_queued = meta.get("n_queued")
+        if n_queued is not None:
+            meta_out["n_queued"] = max(0, int(n_queued) - n_batch + n_new)
+        self.store.commit(epoch, meta_out)
+        return meta_out
+
+    # -- candidates from outside the crawl ---------------------------------
+
+    def bootstrap(self, seeds_path: str) -> None:
+        self.ingest(load_seeds(self.spark, seeds_path))
+
+    def ingest(self, raw: DataFrame) -> None:
+        """Admit a candidate DataFrame of ``(url, seq_key)`` rows into
+        the frontier through the crawl's own candidate path. On an
+        empty store this writes the first frontier (snapshot 0);
+        otherwise the new rows are one delta part in a snapshot of
+        their own, and nothing is committed when every candidate was
+        already seen."""
+        cand = self._project_candidates(raw)
+        if self.store.latest_epoch() is None:
+            rows = fr.enqueue(
+                cand,
+                epoch=0,
+                max_attempts=self.cfg.max_attempts,
+                num_partitions=self.cfg.num_partitions,
+                seq_base=0,
+            ).cache()  # the count and the bucketed write share one evaluation
+            n = rows.count()
+            # frontier is BUCKETED by host_hash (Iceberg bucket(N, host)
+            # analog) — epochs later rewrite only the buckets they touch —
+            # and WRITE ORDERED BY the dequeue key: row-group min/max
+            # stats then let the dequeue's pushed order-key prefix filter
+            # skip nearly the whole store instead of scanning it (the
+            # frontier scan was the last O(frontier) term in the epoch;
+            # see BENCH/EPOCH_SCALING.md)
+            self.store.write_bucketed(
+                "frontier",
+                rows,
+                bucket_col="host_hash",
+                order_by=[["priority", "desc"], ["run_at", "asc"], ["seq", "asc"]],
+                # 16 MB row groups = the pruning quantum: a prefix cut
+                # reads ~1 group per bucket instead of whole bucket files
+                row_group_bytes=16 << 20,
+            )
+            # side tables are APPEND tables, declared with no data file:
+            # each epoch adds to them, history is never re-read or
+            # re-written
+            self.store.declare_table("crawl_log", CRAWL_LOG_SCHEMA)
+            self.store.declare_table("lineage", LINEAGE_SCHEMA)
+            self.store.commit(0, {"epoch": 0, "next_seq": n + 1, "n_queued": n})
+            rows.unpersist()
+            return
+
+        meta = self.store.latest_metadata()
+        epoch = int(meta.get("epoch", 0)) + 1
+        frontier = self.store.read_table(self.spark, "frontier")
+        self._fold_hot_tier(frontier, epoch)
+        caches: list = []
+        new_rows, n_new, stats = self._admit(
+            cand, frontier, epoch, int(meta.get("next_seq", 1)), caches
+        )
+        if n_new:
+            self._commit_epoch(epoch, meta, new_rows, 0, n_new, stats)
+        for h in caches:
+            h.unpersist()
+
+    # -- one epoch ---------------------------------------------------------
+
+    def run_epoch(self) -> bool:
+        meta = self.store.latest_metadata()
+        epoch = int(meta.get("epoch", 0)) + 1
+        next_seq = int(meta.get("next_seq", 1))
+        frontier = self.store.read_table(self.spark, "frontier")
+        assert frontier is not None, "bootstrap first"
+        self._fold_hot_tier(frontier, epoch)
 
         # --- dequeue with politeness cap. Full Q2 predicate
         # (status=='queued' AND run_at <= now, so backoff-requeued rows
@@ -411,54 +530,10 @@ class CrawlEngine:
                 (F.col("parent_seq") * F.lit(1_000_000) + F.col("entry_pos")).alias("seq_key"),
             )
 
-            # --- candidate projection + seen filter
-            cand = self._project_candidates(cand_raw)
-            seen = frontier.select("url_canon")
-            if self._bloom is None:
-                self._bloom = build_bloom(
-                    seen,
-                    "url_canon",
-                    expected_items=self._bloom_capacity,
-                    bits_per_item=self.cfg.bloom_bits_per_item,
-                    n_shards=self.cfg.bloom_shards,
-                )
-                # the full build covers every row in the frontier
-                # read this epoch (all discovered_epoch ≤ epoch-1)
-                self._last_fold_epoch = epoch - 1
-            unseen, stats = seen_filter_exact(
-                cand, seen, self._bloom, "url_canon",
-                measure_fpr=True,
-                cache_registry=epoch_caches,
-                hot=self._hot,
+            # --- the shared candidate path (seq continues from next_seq)
+            new_rows, n_new, stats = self._admit(
+                self._project_candidates(cand_raw), frontier, epoch, next_seq, epoch_caches
             )
-
-            # --- enqueue (deterministic seq continues from next_seq)
-            new_rows = fr.enqueue(
-                unseen,
-                epoch=epoch,
-                max_attempts=self.cfg.max_attempts,
-                num_partitions=self.cfg.num_partitions,
-                seq_base=next_seq - 1,
-            ).cache()
-            epoch_caches.append(new_rows)
-            n_new = new_rows.count()
-            if n_new:
-                if self.cfg.bloom_fold_epochs > 1:
-                    # O(batch) maintenance: insertions land in the
-                    # cuckoo hot tier; the O(filter-size) Bloom OR +
-                    # full re-broadcast are deferred to the amortized
-                    # fold at epoch start. The tier is one batch-sized
-                    # cuckoo for any shard count; probes OR it in after
-                    # the Bloom.
-                    if self._hot is None:
-                        self._hot = CuckooFilter.sized_for(self.cfg.hot_tier_capacity)
-                    self._hot = self._hot.merge(
-                        build_cuckoo(new_rows.select("url_canon"), "url_canon", like=self._hot)
-                    )
-                    self._epochs_since_fold += 1
-                else:
-                    delta = build_bloom(new_rows.select("url_canon"), "url_canon", like=self._bloom)
-                    self._bloom = self._bloom.merge(delta)
 
         # --- mark batch done + insert discoveries as ONE new
         # merge-on-read delta part (the batch rows themselves,
@@ -475,29 +550,7 @@ class CrawlEngine:
             .select([f.name for f in fr.FRONTIER_SCHEMA.fields])
         )
         delta_rows = finished_batch if new_rows is None else finished_batch.unionByName(new_rows)
-        self.store.merge_delta("frontier", delta_rows, approx_rows=n_batch + n_new)
-        if self.store.compaction_due(self.spark, "frontier", self.cfg.delta_compact_rows):
-            self.store.compact_deltas("frontier")
-
-        # --- lineage: one row per seen-filter partition, or one row
-        # for the whole batch when the epoch ran no seen filter; the
-        # store keeps these few rows inline in the manifest
-        lineage_rows = [
-            (
-                int(r["partition_id"]),
-                epoch,
-                int(r["urls_in"]),
-                n_new,
-                (float(r["false_pos"]) / r["urls_in"]) if r["urls_in"] else 0.0,
-            )
-            for r in (stats.collect() if stats is not None else [])
-        ] or [(0, epoch, n_batch, n_new, 0.0)]
-        self.store.append_rows("lineage", lineage_rows)
-
-        meta_out = {"epoch": epoch, "next_seq": next_seq + n_new}
-        if n_queued is not None:
-            meta_out["n_queued"] = max(0, int(n_queued) - n_batch + n_new)
-        self.store.commit(epoch, meta_out)
+        meta_out = self._commit_epoch(epoch, meta, delta_rows, n_batch, n_new, stats)
 
         # --- threshold-presample maintenance: refresh the dequeue's
         # order-key sample every presample_epochs from the just-merged

@@ -7,8 +7,5 @@ pure Column expressions that stay inside whole-stage codegen.
 
 from podcast_plow_spark.functions.urls import (  # noqa: F401
     canonicalize_url_udf,
-    extract_host_udf,
     host_hash_col,
-    normalize_youtube_url_udf,
-    url_fingerprint_udf,
 )

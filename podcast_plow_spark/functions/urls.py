@@ -12,7 +12,7 @@ Reference parity targets (behavioural, re-derived — not copied):
   ``sha256(f"{type}:{json.dumps(payload, sort_keys=True,
   separators=(',',':'), ensure_ascii=False)}")``. Byte-exact parity is
   required (SURVEY.md §7 "fingerprint byte-parity"), so the JSON
-  serialization runs in the same CPython runtime inside the UDF.
+  serialization runs in the same CPython runtime in the kernel.
 
 The *generic* canonicalizer implements the north rule's crawl
 normalization (lowercase host, strip fragment + tracking params,
@@ -29,24 +29,21 @@ import hashlib
 import json
 import re
 import zlib
-from urllib.parse import parse_qsl, quote, unquote, urlencode, urlparse, urlunparse
+from urllib.parse import parse_qsl, quote, urlencode, urlparse, urlunparse
 
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import LongType, StringType
+from pyspark.sql.types import StringType
 
 __all__ = [
     "canonicalize_url",
     "canonicalize_url_udf",
     "extract_host",
-    "extract_host_udf",
     "host_hash_col",
     "normalize_youtube_url",
-    "normalize_youtube_url_udf",
     "url_fingerprint",
-    "url_fingerprint_udf",
     "url_kind",
     "url_kind_col",
     "image_id_from_url",
@@ -263,7 +260,7 @@ def url_fingerprint(job_type: str, payload: dict | None = None) -> str:
     return hashlib.sha256(f"{(job_type or '').strip()}:{serialized}".encode()).hexdigest()
 
 
-# --- pandas UDF wrappers -------------------------------------------------
+# --- pandas UDF wrapper --------------------------------------------------
 
 # Fixpoint fast path for the canonicalizer: the pattern accepts ONLY
 # strings s for which canonicalize_url(s) == s, so matching rows pass
@@ -298,30 +295,6 @@ def _canonicalize_series(urls: pd.Series) -> pd.Series:
 @pandas_udf(StringType())
 def canonicalize_url_udf(urls: pd.Series) -> pd.Series:
     return _canonicalize_series(urls)
-
-
-@pandas_udf(StringType())
-def normalize_youtube_url_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(normalize_youtube_url, na_action="ignore")
-
-
-@pandas_udf(StringType())
-def extract_host_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(extract_host, na_action="ignore")
-
-
-@pandas_udf(StringType())
-def url_fingerprint_udf(job_type: pd.Series, payload_json: pd.Series) -> pd.Series:
-    def fp(t: str, pj: str | None) -> str:
-        try:
-            payload = json.loads(pj) if pj else {}
-            if not isinstance(payload, dict):
-                payload = {}
-        except (json.JSONDecodeError, TypeError):
-            payload = {}
-        return url_fingerprint(t, payload)
-
-    return pd.Series([fp(t, pj) for t, pj in zip(job_type, payload_json)])
 
 
 def host_hash_col(host: Column, num_buckets: int | None = None) -> Column:

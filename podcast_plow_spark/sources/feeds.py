@@ -28,7 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["load_seeds", "parse_feed_entries", "fetch_and_parse_feeds", "ENTRY_SCHEMA"]
+__all__ = ["load_seeds", "seeds_from_lines", "parse_feed_entries", "fetch_and_parse_feeds", "ENTRY_SCHEMA"]
 
 ENTRY_SCHEMA = (
     "feed_url string, entry_pos int, guid string, link string, title string, "
@@ -38,19 +38,23 @@ ENTRY_SCHEMA = (
 
 
 def load_seeds(spark: SparkSession, path: str) -> DataFrame:
-    """Seed list in file order → (url, seq_key). Line numbers are
-    recovered deterministically because a seed file is a single text
-    split read in order; for multi-file seed manifests use a
-    per-file offset column instead."""
-    lines = (
-        spark.read.text(path)
-        .select(F.trim(F.col("value")).alias("url"))
+    """Seed list in file order → (url, seq_key)."""
+    return seeds_from_lines(spark.read.text(path))
+
+
+def seeds_from_lines(lines: DataFrame) -> DataFrame:
+    """Text-source lines (``value``) → (url, seq_key): trim, drop blank
+    and ``#`` lines, number the rest in line order. The numbering
+    follows the read order, which is the file order because a seed
+    file is a single text split read in order; a stream micro-batch
+    that reads one file keeps that order too. The schema is given, so
+    no job infers it and an all-comment batch is an empty frame."""
+    urls = lines.select(F.trim(F.col("value")).alias("url"))
+    return (
+        urls.where((F.col("url") != "") & ~F.col("url").startswith("#"))
         .rdd.zipWithIndex()
         .map(lambda t: (t[0]["url"], t[1]))
-        .toDF(["url", "seq_key"])
-    )
-    return lines.where((F.col("url") != "") & ~F.col("url").startswith("#")).select(
-        "url", F.col("seq_key").cast("long").alias("seq_key")
+        .toDF("url string, seq_key long")
     )
 
 

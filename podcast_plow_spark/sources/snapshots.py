@@ -407,7 +407,6 @@ class SnapshotStore:
         with open(path) as fh:
             return json.load(fh)
 
-    @property
     def latest_epoch(self) -> int | None:
         m = self._latest_manifest()
         return None if m is None else m["epoch"]

@@ -1,1 +1,1 @@
-"""Structured-Streaming variants of the frontier pipeline."""
+"""Structured-Streaming seed ingestion into the crawl engine's frontier."""

@@ -1,9 +1,10 @@
 #!/usr/bin/env python
 """Executor-count scaling evidence: N vs 4N separate executor JVMs.
 
-The thread-level series (scripts/scaling_bench.py, local[8] vs
-local[32]) shares one JVM across all parallelism; the north rule says
-*executors*. This harness runs the SAME frontier benchmark through
+The older thread-level series (local[8] vs local[32], recorded in
+BENCH/BASELINE.md; the script that took it is deleted) shared one JVM
+across all parallelism; the north rule says *executors*. This harness
+runs the SAME frontier benchmark through
 ``spark-submit --py-files dist/podcast_plow_spark.zip`` (exactly the
 rule's launch path) on Spark's ``local-cluster`` master — real
 separate executor JVMs, netty shuffle, broadcast over the wire:

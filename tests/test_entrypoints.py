@@ -1,5 +1,5 @@
 """The repo's runnable entrypoints: the one frontier-throughput job runs
-end to end, and the docs name only scripts that exist."""
+end to end, and the docs name only scripts and modules that exist."""
 
 from __future__ import annotations
 
@@ -14,11 +14,19 @@ DOCS = ("README.md", "COVERAGE.md", os.path.join(".claude", "skills", "verify", 
 
 
 def test_docs_name_only_existing_scripts():
+    """Script paths resolve from the repo root, package module paths
+    (``crawl/engine.py``) under ``podcast_plow_spark/``."""
     named = set()
     for doc in DOCS:
         with open(os.path.join(REPO, doc)) as fh:
-            named.update(re.findall(r"\b(?:scripts|jobs)/[\w./-]+\.py\b", fh.read()))
-    assert named, "no script paths found in the docs"
+            text = fh.read()
+        named.update(re.findall(r"\b(?:scripts|jobs)/[\w./-]+\.py\b", text))
+        named.update(
+            os.path.join("podcast_plow_spark", m)
+            for m in re.findall(r"\b(?:crawl|operators|sources|streaming|functions)/\w+\.py\b", text)
+        )
+    assert any(p.startswith("podcast_plow_spark") for p in named), "no module paths found in the docs"
+    assert any(not p.startswith("podcast_plow_spark") for p in named), "no script paths found in the docs"
     missing = sorted(p for p in named if not os.path.exists(os.path.join(REPO, p)))
     assert not missing, f"docs name deleted files: {missing}"
 

@@ -1,151 +1,133 @@
 """Structured-Streaming frontier ingestion: availableNow drain over a
-seed-file directory, idempotent sink, batch/stream semantic parity."""
+seed-file directory into the engine's snapshot store, an idempotent
+re-run, and stream = batch on the frontier and the crawl it drives."""
 
 from __future__ import annotations
 
 import os
-import time
 
-import pytest
-from pyspark.sql import functions as F
+from podcast_plow_spark.crawl.engine import CrawlConfig, CrawlEngine
+from podcast_plow_spark.operators.frontier import FRONTIER_SCHEMA
+from podcast_plow_spark.sources.fixtures import FixtureSpec, make_fixtures
+from podcast_plow_spark.sources.snapshots import SnapshotStore
+from podcast_plow_spark.streaming.frontier_stream import run_ingest_stream
 
-from podcast_plow_spark.streaming.frontier_stream import (
-    candidate_stream_transform,
-    run_ingest_stream,
-)
-
-
-@pytest.fixture()
-def dirs(tmp_path):
-    seeds = tmp_path / "seeds"
-    seeds.mkdir()
-    return str(seeds), str(tmp_path / "ckpt"), str(tmp_path / "sink")
+CFG = dict(batch_size=8, per_host_cap=2, num_partitions=4)
 
 
-def _write_seeds(seeds_dir: str, name: str, urls: list[str]) -> None:
-    with open(os.path.join(seeds_dir, name), "w") as fh:
-        fh.write("\n".join(urls) + "\n")
+def _write_seeds(seeds_dir: str, name: str, lines: list[str], mtime: int) -> None:
+    path = os.path.join(seeds_dir, name)
+    with open(path, "w") as fh:
+        fh.write("\n".join(lines) + "\n")
+    # the file source reads files in modification-time order
+    os.utime(path, (mtime, mtime))
 
 
-def test_available_now_drain_and_idempotent_sink(spark, dirs):
-    seeds_dir, ckpt, sink = dirs
+def _ingest(spark, store_dir: str, fixtures_root: str, seeds_dir: str, ckpt: str) -> CrawlEngine:
+    eng = CrawlEngine(spark, SnapshotStore(store_dir), fixtures_root, config=CrawlConfig(**CFG))
+    q = run_ingest_stream(eng, seeds_dir, ckpt)
+    q.awaitTermination(180)
+    assert q.exception() is None
+    return eng
+
+
+def _frontier_rows(spark, eng: CrawlEngine) -> list[tuple]:
+    cols = [f.name for f in FRONTIER_SCHEMA.fields if f.name != "discovered_epoch"]
+    rows = eng.store.read_table(spark, "frontier").select(*cols).orderBy("seq").collect()
+    return [tuple(r) for r in rows]
+
+
+def test_available_now_drain_and_idempotent_sink(spark, tmp_path):
+    seeds, ckpt, store, fx = (str(tmp_path / d) for d in ("seeds", "ckpt", "store", "fx"))
+    os.makedirs(seeds)
+    os.makedirs(fx)
     _write_seeds(
-        seeds_dir,
+        seeds,
         "a.txt",
         [
             "# comment",
             "https://A.com/x?utm_source=t",
-            "https://a.com/x",        # canonical dup of the line above
+            "https://a.com/x",  # canonical dup of the line above
             "https://b.com/y",
         ],
+        mtime=1_000_000,
     )
-    q = run_ingest_stream(spark, seeds_dir, ckpt, sink)
-    q.awaitTermination(120)
+    eng = _ingest(spark, store, fx, seeds, ckpt)
+    rows = {r["url_canon"]: r for r in eng.store.read_table(spark, "frontier").collect()}
+    assert set(rows) == {"https://a.com/x", "https://b.com/y"}
+    assert rows["https://a.com/x"]["url"] == "https://A.com/x?utm_source=t"  # first wins
+    assert eng.store.latest_metadata()["n_queued"] == 2
 
-    out = spark.read.parquet(sink)
-    got = {r["url_canon"] for r in out.collect()}
-    assert got == {"https://a.com/x", "https://b.com/y"}
-
-    # second file: one new URL + one already-sunk URL → only the new lands
-    _write_seeds(seeds_dir, "b.txt", ["https://b.com/y", "https://c.com/z"])
-    q2 = run_ingest_stream(spark, seeds_dir, ckpt, sink)
-    q2.awaitTermination(120)
-    got2 = {r["url_canon"] for r in spark.read.parquet(sink).collect()}
-    assert got2 == {"https://a.com/x", "https://b.com/y", "https://c.com/z"}
-
-
-def test_stream_transform_matches_batch_semantics(spark):
-    urls = ["https://X.com/a#f", "https://x.com/a", "https://y.com/b?utm_source=1&id=2"]
-    df = spark.createDataFrame([(u,) for u in urls], "url string")
-    out = candidate_stream_transform(df).select("url_canon", "host").collect()
-    got = {(r["url_canon"], r["host"]) for r in out}
-    assert got == {("https://x.com/a", "x.com"), ("https://y.com/b?id=2", "y.com")}
+    # second run: one new URL + one already-ingested URL → one new row
+    _write_seeds(seeds, "b.txt", ["https://b.com/y", "https://c.com/z"], mtime=1_001_000)
+    eng2 = _ingest(spark, store, fx, seeds, ckpt)
+    rows2 = eng2.store.read_table(spark, "frontier").collect()
+    assert len(rows2) == 3
+    assert {r["url_canon"] for r in rows2} == {"https://a.com/x", "https://b.com/y", "https://c.com/z"}
+    meta = eng2.store.latest_metadata()
+    assert meta["n_queued"] == 3 and meta["next_seq"] == 4
 
 
 def test_streaming_bootstrap_matches_batch_engine(spark, tmp_path):
-    """E2E shared-transform proof (VERDICT r3 #6): the SAME seed list
-    ingested (a) by the batch engine's bootstrap and (b) as a file
-    stream through candidate_stream_transform + the stateful per-host
-    budget (limit_host_rate) driving the SAME SnapshotStore operations
-    (write_bucketed → merge_delta → commit) yields an identical final
-    frontier — streaming and batch semantics cannot drift."""
-    from podcast_plow_spark.crawl.engine import CrawlConfig, CrawlEngine
-    from podcast_plow_spark.operators import frontier as fr
-    from podcast_plow_spark.sources.snapshots import SnapshotStore
-    from podcast_plow_spark.streaming.stateful import limit_host_rate
+    """The same seed lines, bootstrapped by the batch engine from one
+    file and streamed as three files through ``run_ingest_stream``,
+    give the same frontier (every column but ``discovered_epoch``) and
+    the same crawl. The seeds hold a robots-disallowed URL and one
+    canonical URL written two ways, within one file and across two."""
+    fx = make_fixtures(FixtureSpec(root=str(tmp_path / "fx"), n_feeds=4, entries_per_feed=2))
+    blocked = os.path.join(fx.root, "sites", "blocked.example.com")
+    os.makedirs(blocked)
+    with open(os.path.join(blocked, "robots.txt"), "w") as fh:
+        fh.write("User-agent: *\nDisallow: /private\n")
+    files = [
+        [
+            "# streamed seeds",
+            "https://host0000.example.com/feed.xml",
+            "https://HOST0001.example.com/feed.xml?utm_source=t",
+            "",
+            "https://host0001.example.com/feed.xml",
+        ],
+        [
+            "https://blocked.example.com/private/a",
+            "https://host0002.example.com/feed.xml",
+            "https://blocked.example.com/public/b",
+        ],
+        ["https://Host0002.example.com/feed.xml#top", "https://host0003.example.com/feed.xml"],
+    ]
 
-    hosts = [f"h{i}.example.com" for i in range(5)]
-    files = [[f"https://{h}/p{b}" for h in hosts] for b in range(4)]
-    all_urls = [u for f in files for u in f]
-
-    # ---- batch side: engine bootstrap over the full seed list
-    fx = tmp_path / "fx"
-    fx.mkdir()
     seeds_all = tmp_path / "seeds_all.txt"
-    seeds_all.write_text("\n".join(all_urls) + "\n")
+    seeds_all.write_text("\n".join(line for f in files for line in f) + "\n")
     store_b = SnapshotStore(str(tmp_path / "store_batch"))
-    eng = CrawlEngine(spark, store_b, str(fx), config=CrawlConfig(num_partitions=4))
-    eng.bootstrap(str(seeds_all))
+    eng_b = CrawlEngine(spark, store_b, fx.root, config=CrawlConfig(**CFG))
+    eng_b.bootstrap(str(seeds_all))
 
-    # ---- streaming side: same seeds as 4 files → 4 micro-batches
-    # (maxFilesPerTrigger=1) through the SHARED transform, gated by the
-    # stateful budget (2/host/batch — each file carries 1 URL/host, so
-    # everything is admitted while host_seq proves the state carries)
     sdir = tmp_path / "seeds_stream"
     sdir.mkdir()
     for i, f in enumerate(files):
-        (sdir / f"s{i:02d}.txt").write_text("\n".join(f) + "\n")
-    store_s = SnapshotStore(str(tmp_path / "store_stream"))
-    state = {"n": 0, "boot": False}
+        _write_seeds(str(sdir), f"s{i:02d}.txt", f, mtime=1_000_000 + 1000 * i)
+    eng_s = _ingest(spark, str(tmp_path / "store_stream"), fx.root, str(sdir), str(tmp_path / "ck"))
+    assert eng_s.store.latest_epoch() == 2  # one snapshot per seed file
 
-    raw = (
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", 1)
-        .load(str(sdir))
-        .select(F.trim(F.col("value")).alias("url"))
-    )
-    seeds = raw.where((F.col("url") != "") & ~F.col("url").startswith("#"))
-    cand = candidate_stream_transform(seeds)
-    gated = limit_host_rate(cand.select("host", "url_canon"), max_per_batch=2)
+    got = _frontier_rows(spark, eng_s)
+    assert "https://blocked.example.com/private/a" not in {r[1] for r in got}  # robots gate
+    # url in seq order: the first spelling of a canonical URL wins,
+    # within one file (host0001) and across files (host0002)
+    assert [r[0] for r in got] == [
+        "https://host0000.example.com/feed.xml",
+        "https://HOST0001.example.com/feed.xml?utm_source=t",
+        "https://host0002.example.com/feed.xml",
+        "https://blocked.example.com/public/b",
+        "https://host0003.example.com/feed.xml",
+    ]
+    assert got == _frontier_rows(spark, eng_b)
+    meta_b, meta_s = eng_b.store.latest_metadata(), eng_s.store.latest_metadata()
+    assert (meta_s["next_seq"], meta_s["n_queued"]) == (meta_b["next_seq"], meta_b["n_queued"]) == (6, 5)
 
-    def sink(bdf, bid):
-        adm = bdf.where(F.col("admitted")).select(
-            # fixture seeds are already canonical, so url == url_canon
-            F.col("url_canon").alias("url"),
-            "url_canon",
-            "host",
-            F.sha2(F.col("url_canon"), 256).alias("fingerprint"),
-        )
-        rows = fr.enqueue(adm, epoch=0, num_partitions=4, seq_base=state["n"])
-        k = rows.count()
-        if k == 0:
-            return
-        if not state["boot"]:
-            store_s.write_bucketed("frontier", rows, bucket_col="host_hash")
-            state["boot"] = True
-        else:
-            store_s.merge_delta("frontier", rows, key_col="seq", approx_rows=k)
-        state["n"] += k
-        store_s.commit(bid, {"next_seq": state["n"] + 1, "n_queued": state["n"]})
-
-    q = (
-        gated.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    cols = ["url_canon", "host", "fingerprint", "status", "priority"]
-    fb = store_b.read_table(spark, "frontier")
-    fs = store_s.read_table(spark, "frontier")
-    assert sorted(map(tuple, fb.select(*cols).collect())) == sorted(
-        map(tuple, fs.select(*cols).collect())
-    )
-    # both assign dense gap-free seq over the whole ingest
-    assert sorted(r["seq"] for r in fs.select("seq").collect()) == list(
-        range(1, len(all_urls) + 1)
-    )
-    assert sorted(r["seq"] for r in fb.select("seq").collect()) == list(
-        range(1, len(all_urls) + 1)
-    )
+    # the stream-built store crawls exactly like the batch-built one
+    orders = []
+    for name in ("store_batch", "store_stream"):
+        eng = CrawlEngine(spark, SnapshotStore(str(tmp_path / name)), fx.root, config=CrawlConfig(**CFG))
+        eng.run(resume=True)
+        orders.append(eng.crawl_order())
+    assert orders[0] == orders[1]
+    assert len(orders[0]) > len(got)  # the crawl went past the seeds
