@@ -61,11 +61,15 @@ Scale design notes (10^10 frontier — these are now code, not notes):
 - the ``bytes`` image column is touched only by the payload join and
   the invariant job — column pruning keeps every other scan narrow.
 - the seen filter is one ``ShardedBloom`` (``bloom_shards`` shards by
-  host bucket; 1 = monolithic), built once then maintained
-  incrementally; with ``bloom_fold_epochs > 1`` each epoch's
-  insertions land in a batch-sized cuckoo hot tier (O(batch)) and the
-  O(filter-size) Bloom OR-fold is amortized across epochs — the exact
-  anti-join backstop is unchanged either way.
+  host bucket; 1 = monolithic), seeded at bootstrap from the first
+  frontier's rows, then maintained incrementally: each insert runs on
+  the driver over keys the JVM computes (no Python worker). Only a
+  cold process (``resume``, or ``ingest`` on an existing store)
+  rebuilds it, with one distributed pass over the stored frontier.
+  With ``bloom_fold_epochs > 1`` each epoch's insertions land in a
+  batch-sized cuckoo hot tier (O(batch)) and the O(filter-size) Bloom
+  OR-fold is amortized across epochs — the exact anti-join backstop
+  is unchanged either way.
 """
 
 from __future__ import annotations
@@ -88,6 +92,7 @@ from podcast_plow_spark.operators.politeness import (
 )
 from podcast_plow_spark.operators.seen import (
     CuckooFilter,
+    ShardedBloom,
     build_bloom,
     build_cuckoo,
     seen_filter_exact,
@@ -179,18 +184,21 @@ class CrawlEngine:
         self.cfg = config or CrawlConfig()
         self._robots_bodies: dict[str, str] | None = None
         self._crawl_delays: dict[str, float] | None = None
-        # incremental seen-filter: built once from the frontier, then
-        # only each epoch's insertions are OR-merged in (never a full
-        # rescan; saturation beyond sizing is safe — the exact backstop
-        # keeps correctness, only fpr degrades)
+        # incremental seen-filter: seeded by the bootstrap that writes
+        # the first frontier (else built once from the stored frontier
+        # on a cold process's first probe), then only each epoch's
+        # insertions are OR-merged in (never a full rescan; saturation
+        # beyond sizing is safe — the exact backstop keeps
+        # correctness, only fpr degrades)
         self._bloom = None
         self._bloom_capacity = 1_000_000
         # cuckoo hot tier: insertions newer than the last Bloom fold
         # (None while bloom_fold_epochs == 1 or before the first probe).
         # Invariant: bloom ∪ hot ⊇ all frontier URLs — guaranteed
-        # because the Bloom is built from the FULL seen set the first
-        # time a process probes (also after resume), and every later
-        # insertion lands in the hot tier until folded.
+        # because the Bloom covers the FULL seen set before a process
+        # first probes (seeded at bootstrap, or built from the store
+        # after resume), and every later insertion lands in the hot
+        # tier until folded.
         self._hot = None
         self._epochs_since_fold = 0
         self._last_fold_epoch = 0
@@ -260,6 +268,7 @@ class CrawlEngine:
         the seen filter. The new rows are cached in ``caches``."""
         seen = frontier.select("url_canon")
         if self._bloom is None:
+            # a cold process: the frontier was written elsewhere
             self._bloom = build_bloom(
                 seen,
                 "url_canon",
@@ -315,16 +324,22 @@ class CrawlEngine:
 
         # --- lineage: one row per seen-filter partition, or one row
         # for the whole batch when the epoch ran no seen filter; the
-        # store keeps these few rows inline in the manifest
+        # store keeps these few rows inline in the manifest. A
+        # partition's false positives are its share of the Bloom
+        # positives, which sum over partitions to the flagged count.
+        rows = stats.collect() if stats is not None else []
+        maybe_n = sum(r["bloom_pos"] for r in rows)
         lineage_rows = [
             (
                 int(r["partition_id"]),
                 epoch,
                 int(r["urls_in"]),
                 n_new,
-                (float(r["false_pos"]) / r["urls_in"]) if r["urls_in"] else 0.0,
+                int(r["bloom_pos"] * r["false_pos_total"] / maybe_n) / r["urls_in"]
+                if r["urls_in"] and maybe_n
+                else 0.0,
             )
-            for r in (stats.collect() if stats is not None else [])
+            for r in rows
         ] or [(0, epoch, n_batch, n_new, 0.0)]
         self.store.append_rows("lineage", lineage_rows)
 
@@ -355,8 +370,18 @@ class CrawlEngine:
                 max_attempts=self.cfg.max_attempts,
                 num_partitions=self.cfg.num_partitions,
                 seq_base=0,
-            ).cache()  # the count and the bucketed write share one evaluation
+            ).cache()  # the count, the seen filter and the write share one evaluation
             n = rows.count()
+            # this process wrote the whole frontier, so it seeds the
+            # seen filter from these rows: no epoch rebuilds it from
+            # the store
+            self._bloom = build_bloom(
+                rows.select("url_canon"),
+                "url_canon",
+                like=ShardedBloom.sized_for(
+                    self._bloom_capacity, self.cfg.bloom_shards, self.cfg.bloom_bits_per_item
+                ),
+            )
             # frontier is BUCKETED by host_hash (Iceberg bucket(N, host)
             # analog) — epochs later rewrite only the buckets they touch —
             # and WRITE ORDERED BY the dequeue key: row-group min/max

@@ -1,6 +1,8 @@
-"""Distributed URL-seen filter: per-partition blocked Bloom filters
-with a cuckoo-filter hot tier, merged via ``treeAggregate``, with an
-exact anti-join backstop (north rule; SURVEY.md §2.5 note, §4.2).
+"""URL-seen filter: a blocked Bloom filter with a cuckoo-filter hot
+tier and an exact anti-join backstop (north rule; SURVEY.md §2.5
+note, §4.2). Incremental inserts run on the driver over keys the JVM
+computes; only a cold process's full build is distributed
+(per-partition partials merged via ``treeAggregate``).
 
 Tiering: the big Bloom holds the COLD seen set (everything folded so
 far); the small :class:`CuckooFilter` hot tier holds URLs inserted
@@ -12,9 +14,10 @@ merge a batch-sized cuckoo) and the expensive Bloom fold is amortized
 over ``bloom_fold_epochs`` epochs (engine knob). A probe is
 bloom-OR-hot; the no-false-negative invariant (bloom ∪ hot ⊇ seen) is
 what keeps the exact-backstop bypass sound, and it holds by
-construction: the Bloom is built from the full seen set when a
-process first probes, and every subsequent insertion lands in the hot
-tier until folded.
+construction: the Bloom covers the full seen set from a process's
+first probe on (seeded from the first frontier when the process wrote
+it, else built from the store), and every later insertion lands in
+the hot tier until folded.
 
 Reference semantics are **exact** keyed lookups (podcast by rss_url,
 episode by guid-else-url, job by fingerprint — reference
@@ -146,6 +149,15 @@ class ShardedBloom:
         self.n_blocks = n_blocks
         self.k = k
 
+    @classmethod
+    def sized_for(
+        cls, expected_items: int, n_shards: int = 1, bits_per_item: int = 12, k: int = 6
+    ) -> "ShardedBloom":
+        """An empty filter whose shards are each sized for their share
+        of ``expected_items`` keys."""
+        n_blocks = BloomFilter.sized_for(max(1, expected_items // n_shards), bits_per_item, k).n_blocks
+        return cls(n_shards, {}, n_blocks, k)
+
     def merge(self, other: "ShardedBloom") -> "ShardedBloom":
         assert (self.n_shards, self.n_blocks, self.k) == (other.n_shards, other.n_blocks, other.k)
         merged: dict[int, BloomFilter] = dict(self.shards)
@@ -193,7 +205,8 @@ class CuckooFilter:
 
     Determinism: hashing is splitmix64 on the same int64 key column
     the Bloom uses; eviction order is a counter-derived slot choice —
-    no randomness, so distributed builds are reproducible.
+    no randomness, so a build over the same keys in the same order is
+    reproducible.
     """
 
     BUCKET_SLOTS = 4
@@ -366,51 +379,6 @@ class CuckooFilter:
         return bc
 
 
-def build_cuckoo(
-    seen: DataFrame,
-    key_col: str = "url_canon",
-    expected_items: int | None = None,
-    like: "CuckooFilter | None" = None,
-) -> CuckooFilter:
-    """Per-partition cuckoo partials built in ``mapInPandas``, merged
-    via ``treeAggregate`` (the north rule's build shape, same as
-    :func:`build_bloom`). ``like`` sizes the result to another
-    filter's geometry so the two can be merged (the engine builds a
-    batch delta ``like`` its hot tier every epoch)."""
-    if like is not None:
-        n_buckets = like.n_buckets
-    else:
-        n = expected_items or seen.count()
-        n_buckets = CuckooFilter.sized_for(n).n_buckets
-
-    import json as _json
-
-    def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cf = CuckooFilter(n_buckets)
-        for pdf in batches:
-            if len(pdf):
-                cf.add_many(pdf["__k"].to_numpy(dtype=np.int64).astype(np.uint64) % np.uint64(2**63))
-        yield pd.DataFrame(
-            {"buckets": [cf.buckets.tobytes()], "stash": [_json.dumps(cf.stash)]}
-        )
-
-    keys_df = seen.select(_key_col(key_col).alias("__k"))
-    if keys_df.rdd.getNumPartitions() > 32:
-        keys_df = keys_df.coalesce(32)
-    parts = keys_df.mapInPandas(part, "buckets binary, stash string")
-
-    def to_cf(r) -> CuckooFilter:
-        return CuckooFilter(
-            n_buckets,
-            np.frombuffer(r["buckets"], dtype=np.uint16).reshape(-1, CuckooFilter.BUCKET_SLOTS).copy(),
-            [tuple(x) for x in _json.loads(r["stash"])],
-        )
-
-    return parts.rdd.map(to_cf).treeAggregate(
-        CuckooFilter(n_buckets), lambda a, b: a.merge(b), lambda a, b: a.merge(b), depth=3
-    )
-
-
 def _host_bucket_col(url_col: str, n_shards: int) -> F.Column:
     """Shard id from a URL column: same crc32-of-host bucketing as the
     frontier's ``host_hash`` layout (functions/urls.py:host_hash_col),
@@ -429,6 +397,22 @@ def _key_col(col: str) -> F.Column:
     return F.conv(F.substring(F.sha2(F.col(col), 256), 1, 15), 16, 10).cast("long")
 
 
+def _uint_keys(keys: pd.Series) -> np.ndarray:
+    return keys.to_numpy(dtype=np.int64).astype(np.uint64) % np.uint64(2**63)
+
+
+def _insert_by_shard(
+    shards: "dict[int, BloomFilter]", pdf: pd.DataFrame, n_blocks: int, k: int
+) -> "dict[int, BloomFilter]":
+    """Add each (``__k`` key, ``__b`` host bucket) row of ``pdf`` to
+    its bucket's shard, creating empty shards of the given geometry as
+    needed; returns ``shards``."""
+    keys, buckets = _uint_keys(pdf["__k"]), pdf["__b"].to_numpy(dtype=np.int64)
+    for s in np.unique(buckets):
+        shards.setdefault(int(s), BloomFilter(n_blocks, k)).add_many(keys[buckets == s])
+    return shards
+
+
 def build_bloom(
     seen: DataFrame,
     key_col: str = "url_canon",
@@ -439,94 +423,55 @@ def build_bloom(
     n_shards: int = 1,
 ) -> ShardedBloom:
     """Per-host-bucket Bloom shards (``n_shards=1``: one filter over
-    all keys), built in one distributed pass. Each input partition
-    builds partial shards for the buckets it holds and emits one
-    (shard, words) row per shard; the partials are OR-merged as
-    ``{shard: words}`` maps with ``treeAggregate`` (logarithmic merge
-    depth — the driver receives O(log P) partial maps, not P). Each
-    map covers every shard its inputs touched, so with many shards a
-    tree task, and the driver, holds whole-filter maps; a
-    ``reduceByKey`` on shard id would keep each reducer to its own
-    shards, but measured slower at one shard.
+    all keys).
 
-    ``like`` builds with another filter's shard count and geometry so
-    the result can be merged into it (incremental maintenance: per
-    epoch, build over only the epoch's insertions and OR into the
-    running filter — never re-scan the full seen set).
+    ``like`` inserts into fresh shards of another filter's shard count
+    and geometry, so the result can be merged into it (incremental
+    maintenance: per epoch, insert only the epoch's new keys and OR
+    them into the running filter — never re-scan the full seen set).
+    This path runs on the driver: the JVM computes each key and its
+    host bucket, the pairs come back as Arrow (at most 16 B per key, no
+    Python worker), and the driver sets their bits with the same
+    ``_positions`` geometry, so the words equal a
+    :meth:`BloomFilter.add_many` of the same keys. A batch of B keys
+    costs O(B) plus one collect; a ``mapInPandas`` pass would add
+    Python tasks whose fixed start-up cost (README, "Benchmarking on
+    this VM") exceeds the whole insert.
 
-    The ``like`` path builds SPARSELY: a batch of B keys sets at most
-    B·k bits, so each partition emits only its touched (shard,
-    word_index, word_bits) triples — never a full-geometry array. A
-    dense partial per partition made every small delta build
-    O(filter_size × partitions) in serialization alone (measured
-    40–169 s per 20k-row delta at a 10^8-key geometry; at the 10^10
-    design point a 15 GB partial per partition is simply unshippable).
-    Sparse partials are O(batch) end-to-end; the driver ORs them into
-    fresh arrays."""
+    Without ``like`` the filter is built in one distributed pass, for
+    a cold process's full-frontier build: each input partition builds
+    partial shards for the buckets it holds and emits one (shard,
+    words) row per shard; the partials are OR-merged as ``{shard:
+    words}`` maps with ``treeAggregate`` (logarithmic merge depth —
+    the driver receives O(log P) partial maps, not P). Each map covers
+    every shard its inputs touched, so with many shards a tree task,
+    and the driver, holds whole-filter maps; a ``reduceByKey`` on
+    shard id would keep each reducer to its own shards, but measured
+    slower at one shard."""
     if like is not None:
         n_shards, n_blocks, k = like.n_shards, like.n_blocks, like.k
     else:
         n = expected_items or seen.count()
-        n_blocks = BloomFilter.sized_for(max(1, n // n_shards), bits_per_item=bits_per_item, k=k).n_blocks
-
+        n_blocks = ShardedBloom.sized_for(n, n_shards, bits_per_item, k).n_blocks
     keys_df = seen.select(
         _key_col(key_col).alias("__k"), _host_bucket_col(key_col, n_shards).alias("__b")
     )
+    if like is not None:
+        shards = _insert_by_shard({}, keys_df.toPandas(), n_blocks, k)
+        return ShardedBloom(n_shards, shards, n_blocks, k)
+
     # ≤ 32 build partitions: fewer, larger partials cut task and
     # serialization overhead
     if keys_df.rdd.getNumPartitions() > 32:
         keys_df = keys_df.coalesce(32)
-
-    def keys_by_shard(batches: Iterator[pd.DataFrame]) -> Iterator[tuple[int, np.ndarray]]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ks = pdf["__k"].to_numpy(dtype=np.int64).astype(np.uint64) % np.uint64(2**63)
-            bs = pdf["__b"].to_numpy(dtype=np.int64)
-            for s in np.unique(bs):
-                yield int(s), ks[bs == s]
-
-    if like is not None:
-        proto = BloomFilter(n_blocks, k, words=np.zeros(0, dtype=np.uint64))  # hash geometry only
-
-        def part_sparse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            acc: dict[int, tuple[list, list]] = {}
-            for s, ks in keys_by_shard(batches):
-                block, bit = proto._positions(ks)
-                lists = acc.setdefault(s, ([], []))
-                lists[0].append((block[:, None] * np.uint64(_BLOCK_WORDS) + bit // np.uint64(64)).ravel())
-                lists[1].append((np.uint64(1) << (bit % np.uint64(64))).ravel())
-            rows = {"shard": [], "idx": [], "bits": []}
-            for s, (ws, ms) in acc.items():
-                w = np.concatenate(ws)
-                m = np.concatenate(ms)
-                order = np.argsort(w, kind="stable")
-                w, m = w[order], m[order]
-                uniq, starts = np.unique(w, return_index=True)
-                rows["shard"].append(s)
-                rows["idx"].append(uniq.tobytes())
-                rows["bits"].append(np.bitwise_or.reduceat(m, starts).tobytes())
-            yield pd.DataFrame(rows) if rows["shard"] else pd.DataFrame(
-                {"shard": pd.Series(dtype="int"), "idx": pd.Series(dtype=object),
-                 "bits": pd.Series(dtype=object)}
-            )
-
-        shards: dict[int, BloomFilter] = {}
-        # ≤ P·touched-shards rows of ≤ batch·k pairs each — the driver
-        # receives O(batch)
-        for r in keys_df.mapInPandas(part_sparse, "shard int, idx binary, bits binary").collect():
-            bf = shards.setdefault(int(r["shard"]), BloomFilter(n_blocks, k))
-            wi = np.frombuffer(r["idx"], dtype=np.uint64).astype(np.int64)
-            np.bitwise_or.at(bf.words, wi, np.frombuffer(r["bits"], dtype=np.uint64))
-        return ShardedBloom(n_shards, shards, n_blocks, k)
 
     # Arrow-vectorized partial shards: each partition builds its
     # shards over all its Arrow batches (numpy bulk insert), emitting
     # one binary row per shard it touched
     def part_shards(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         partial: dict[int, BloomFilter] = {}
-        for s, ks in keys_by_shard(batches):
-            partial.setdefault(s, BloomFilter(n_blocks, k)).add_many(ks)
+        for pdf in batches:
+            _insert_by_shard(partial, pdf, n_blocks, k)
         yield pd.DataFrame(
             {"shard": list(partial), "words": [bf.words.tobytes() for bf in partial.values()]}
         )
@@ -553,6 +498,26 @@ def build_bloom(
 def build_sharded_bloom(seen: DataFrame, key_col: str = "url_canon", n_shards: int = 16, **kw) -> ShardedBloom:
     # kept because perfbench wraps this name; package code calls build_bloom
     return build_bloom(seen, key_col, n_shards=n_shards, **kw)
+
+
+def build_cuckoo(
+    seen: DataFrame,
+    key_col: str = "url_canon",
+    expected_items: int | None = None,
+    like: "CuckooFilter | None" = None,
+) -> CuckooFilter:
+    """A cuckoo filter over ``seen``'s keys, sized for
+    ``expected_items`` (default: the key count) or to ``like``'s
+    geometry so the two can be merged (the engine inserts each epoch's
+    new keys ``like`` its hot tier). The hot tier only ever holds the
+    window since the last Bloom fold, so the keys are few: the JVM
+    computes them, they come back as Arrow (8 B per key, no Python
+    worker) and the driver inserts them."""
+    ks = _uint_keys(seen.select(_key_col(key_col).alias("__k")).toPandas()["__k"])
+    n = expected_items or len(ks)
+    cf = CuckooFilter(like.n_buckets if like is not None else CuckooFilter.sized_for(n).n_buckets)
+    cf.add_many(ks)
+    return cf
 
 
 def probe_bloom(
@@ -585,7 +550,7 @@ def probe_bloom(
     def probe(keys: pd.Series, buckets: pd.Series) -> pd.Series:
         n_shards, n_blocks, k, payload = bc.value
         sb = ShardedBloom(n_shards, {s: BloomFilter(n_blocks, k, w) for s, w in payload.items()}, n_blocks, k)
-        ks = keys.to_numpy(dtype=np.int64).astype(np.uint64) % np.uint64(2**63)
+        ks = _uint_keys(keys)
         out = sb.contains_many(ks, buckets.to_numpy(dtype=np.int64))
         if bc_hot is not None:
             nb, bkts, stash = bc_hot.value
@@ -615,9 +580,10 @@ def seen_filter_exact(
 
     Path: bloom probe → definite-unseen bypass ∪ (maybe-seen ∖ exact
     anti-join). With ``measure_fpr`` the per-partition (urls_in,
-    bloom_pos, false_pos) stats for lineage are computed — this runs
-    extra actions, so it's opt-in (the engine turns it on; the
-    throughput bench leaves it off).
+    bloom_pos) stats for lineage are computed, each row carrying the
+    probe's total ``false_pos_total`` (flagged candidates the exact
+    join found unseen) — this runs an extra action, so it's opt-in
+    (the engine turns it on; the throughput bench leaves it off).
 
     ``cache_registry``: when given, the probed-candidates DataFrame is
     cached and the handle appended for the CALLER to unpersist after
@@ -665,11 +631,4 @@ def seen_filter_exact(
         )
     )
     fp = truly_new.groupBy().agg(F.count(F.lit(1)).alias("__survived")).collect()[0]["__survived"]
-    maybe_n = maybe.count()
-    stats = stats.withColumn(
-        "false_pos",
-        F.when(F.lit(maybe_n) > 0, (F.col("bloom_pos") * F.lit(fp) / F.lit(maybe_n)).cast("long")).otherwise(
-            F.lit(0)
-        ),
-    )
-    return unseen, stats
+    return unseen, stats.withColumn("false_pos_total", F.lit(fp).cast("long"))

@@ -47,14 +47,14 @@ def seeds_from_lines(lines: DataFrame) -> DataFrame:
     and ``#`` lines, number the rest in line order. The numbering
     follows the read order, which is the file order because a seed
     file is a single text split read in order; a stream micro-batch
-    that reads one file keeps that order too. The schema is given, so
-    no job infers it and an all-comment batch is an empty frame."""
+    that reads one file keeps that order too. Only the order of
+    ``seq_key`` is used downstream, so the JVM's
+    ``monotonically_increasing_id`` (split index, then row within the
+    split) numbers the lines: no job counts the splits and no Python
+    worker runs."""
     urls = lines.select(F.trim(F.col("value")).alias("url"))
-    return (
-        urls.where((F.col("url") != "") & ~F.col("url").startswith("#"))
-        .rdd.zipWithIndex()
-        .map(lambda t: (t[0]["url"], t[1]))
-        .toDF("url string, seq_key long")
+    return urls.where((F.col("url") != "") & ~F.col("url").startswith("#")).select(
+        "url", F.monotonically_increasing_id().alias("seq_key")
     )
 
 

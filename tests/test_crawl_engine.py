@@ -21,14 +21,27 @@ def fixtures(tmp_path_factory):
     return make_fixtures(FixtureSpec(root=root, n_feeds=3, entries_per_feed=4))
 
 
-def _run(spark, fixtures, store_dir, max_epochs=100, resume=False):
-    store = SnapshotStore(store_dir)
-    eng = CrawlEngine(spark, store, fixtures.root, config=CrawlConfig(batch_size=8, per_host_cap=2, num_partitions=4))
+def _run(spark, fixtures, store_dir, max_epochs=100, resume=False, **cfg):
+    """The fixture crawl (batch 8, per-host cap 2, 4 partitions; ``cfg``
+    overrides any CrawlConfig field) into a store at ``store_dir``."""
+    cfg = {"batch_size": 8, "per_host_cap": 2, "num_partitions": 4, **cfg}
+    eng = CrawlEngine(spark, SnapshotStore(store_dir), fixtures.root, config=CrawlConfig(**cfg))
     if resume:
         eng.run(max_epochs=max_epochs, resume=True)
     else:
         eng.run(seeds_path=f"{fixtures.root}/feeds.txt", max_epochs=max_epochs)
     return eng
+
+
+def _outputs(spark, eng):
+    """What the identity tests compare: the crawl log's (epoch,
+    crawl_rank, url_canon) rows and the frontier's URLs."""
+    log = eng.store.read_table(spark, "crawl_log")
+    fr_t = eng.store.read_table(spark, "frontier")
+    return (
+        sorted(map(tuple, log.select("epoch", "crawl_rank", "url_canon").collect())),
+        sorted(r["url_canon"] for r in fr_t.select("url_canon").collect()),
+    )
 
 
 def test_resume_after_kill_is_byte_identical(spark, fixtures, tmp_path_factory):
@@ -332,29 +345,47 @@ class TestShardedBloom:
         )
         assert np.array_equal(sb.shards[0].words, local.words)
 
+    @pytest.mark.parametrize("n_shards", [1, 8])
+    def test_driver_insert_matches_add_many_without_python(self, spark, monkeypatch, n_shards):
+        """``like=`` inserts run no ``mapInPandas`` and touch no
+        ``.rdd`` (Bloom and cuckoo alike), and each shard's words equal
+        a ``BloomFilter.add_many`` of its keys (crc32-of-host shard)."""
+        import hashlib
+        import zlib
+        from urllib.parse import urlsplit
+
+        from podcast_plow_spark.operators.seen import CuckooFilter, ShardedBloom, build_cuckoo
+
+        urls = [u for (u,) in self._urls(0, 500)]
+        seen = spark.createDataFrame([(u,) for u in urls], "url_canon string").repartition(3)
+        like = ShardedBloom.sized_for(2_000, n_shards)
+        forbidden = property(lambda _df: pytest.fail("a Python pass ran"))
+        monkeypatch.setattr(type(seen), "mapInPandas", forbidden)
+        monkeypatch.setattr(type(seen), "rdd", forbidden)
+        got = build_bloom(seen, "url_canon", like=like)
+        hot = build_cuckoo(seen, "url_canon", like=CuckooFilter.sized_for(2_000))
+        monkeypatch.undo()
+
+        keys: dict = {}
+        for u in urls:
+            shard = zlib.crc32(urlsplit(u).hostname.encode()) % n_shards
+            keys.setdefault(shard, []).append(int(hashlib.sha256(u.encode()).hexdigest()[:15], 16))
+        assert sorted(got.shards) == sorted(keys)
+        for shard, ks in keys.items():
+            want = BloomFilter(like.n_blocks, like.k)
+            want.add_many(np.array(ks, dtype=np.uint64))
+            assert np.array_equal(got.shards[shard].words, want.words), shard
+            assert hot.contains_many(np.array(ks, dtype=np.uint64)).all()
+
     def test_engine_run_identical_with_shards(self, spark, fixtures, tmp_path_factory):
         """The sharded filter must not change ANY observable crawl
         output: run the fixture crawl with and without shards and
         compare crawl logs and frontiers row-for-row."""
-        outs = {}
-        for name, shards in (("mono", 1), ("sharded", 4)):
-            store = SnapshotStore(str(tmp_path_factory.mktemp(f"sb_{name}")))
-            eng = CrawlEngine(
-                spark,
-                store,
-                fixtures.root,
-                config=CrawlConfig(
-                    batch_size=8, per_host_cap=2, num_partitions=4, bloom_shards=shards
-                ),
-            )
-            eng.run(seeds_path=f"{fixtures.root}/feeds.txt", max_epochs=100)
-            log = store.read_table(spark, "crawl_log")
-            fr_t = store.read_table(spark, "frontier")
-            outs[name] = (
-                sorted(map(tuple, log.select("epoch", "crawl_rank", "url_canon").collect())),
-                sorted(r["url_canon"] for r in fr_t.select("url_canon").collect()),
-            )
-        assert outs["mono"] == outs["sharded"]
+        outs = {
+            shards: _outputs(spark, _run(spark, fixtures, str(tmp_path_factory.mktemp("sb")), bloom_shards=shards))
+            for shards in (1, 4)
+        }
+        assert outs[1] == outs[4]
 
 
 class TestHotTierFold:
@@ -364,60 +395,26 @@ class TestHotTierFold:
     fold-every-epoch default, and the tier must actually engage."""
 
     def test_engine_run_identical_with_hot_tier(self, spark, fixtures, tmp_path_factory):
-        outs = {}
-        engines = {}
-        for name, fold in (("every_epoch", 1), ("amortized", 3)):
-            store = SnapshotStore(str(tmp_path_factory.mktemp(f"hot_{name}")))
-            eng = CrawlEngine(
-                spark,
-                store,
-                fixtures.root,
-                config=CrawlConfig(
-                    batch_size=8,
-                    per_host_cap=2,
-                    num_partitions=4,
-                    bloom_fold_epochs=fold,
-                ),
-            )
-            eng.run(seeds_path=f"{fixtures.root}/feeds.txt", max_epochs=100)
-            engines[name] = eng
-            log = store.read_table(spark, "crawl_log")
-            fr_t = store.read_table(spark, "frontier")
-            outs[name] = (
-                sorted(map(tuple, log.select("epoch", "crawl_rank", "url_canon").collect())),
-                sorted(r["url_canon"] for r in fr_t.select("url_canon").collect()),
-            )
-        assert outs["every_epoch"] == outs["amortized"]
+        engines = {
+            fold: _run(spark, fixtures, str(tmp_path_factory.mktemp("hot")), bloom_fold_epochs=fold)
+            for fold in (1, 3)
+        }
+        assert _outputs(spark, engines[1]) == _outputs(spark, engines[3])
         # the amortized engine actually used the tier at some point:
         # after the final fold it may be None again, so check the fold
         # bookkeeping advanced past the initial state
-        eng = engines["amortized"]
+        eng = engines[3]
         assert eng._hot is not None or eng._last_fold_epoch > 0
 
     def test_sharded_bloom_with_hot_tier_identical(self, spark, fixtures, tmp_path_factory):
         """The 10^10 flagship config — sharded Bloom + cuckoo hot tier
         + amortized folds — must produce the same crawl as the plain
         monolith fold-every-epoch default."""
-        outs = {}
-        for name, kw in (
-            ("default", {}),
-            ("sharded_hot", {"bloom_shards": 4, "bloom_fold_epochs": 3}),
-        ):
-            store = SnapshotStore(str(tmp_path_factory.mktemp(f"sh_{name}")))
-            eng = CrawlEngine(
-                spark,
-                store,
-                fixtures.root,
-                config=CrawlConfig(batch_size=8, per_host_cap=2, num_partitions=4, **kw),
-            )
-            eng.run(seeds_path=f"{fixtures.root}/feeds.txt", max_epochs=100)
-            log = store.read_table(spark, "crawl_log")
-            fr_t = store.read_table(spark, "frontier")
-            outs[name] = (
-                sorted(map(tuple, log.select("epoch", "crawl_rank", "url_canon").collect())),
-                sorted(r["url_canon"] for r in fr_t.select("url_canon").collect()),
-            )
-        assert outs["default"] == outs["sharded_hot"]
+        default = _run(spark, fixtures, str(tmp_path_factory.mktemp("sh_default")))
+        sharded_hot = _run(
+            spark, fixtures, str(tmp_path_factory.mktemp("sh_hot")), bloom_shards=4, bloom_fold_epochs=3
+        )
+        assert _outputs(spark, default) == _outputs(spark, sharded_hot)
 
     def test_resume_with_hot_tier_is_byte_identical(self, spark, fixtures, tmp_path_factory):
         """Kill mid-crawl with an UNFOLDED hot tier, resume in a fresh
@@ -426,23 +423,10 @@ class TestHotTierFold:
         the resumed process rebuilds the full Bloom on first probe.
         Final state must equal an uninterrupted amortized run AND the
         fold-every-epoch run."""
-        cfg = dict(batch_size=8, per_host_cap=2, num_partitions=4, bloom_fold_epochs=4)
-
-        def crawl(store_dir, max_epochs=100, resume=False):
-            eng = CrawlEngine(
-                spark, SnapshotStore(store_dir), fixtures.root, config=CrawlConfig(**cfg)
-            )
-            if resume:
-                eng.run(max_epochs=max_epochs, resume=True)
-            else:
-                eng.run(seeds_path=f"{fixtures.root}/feeds.txt", max_epochs=max_epochs)
-            return eng
-
-        d1 = str(tmp_path_factory.mktemp("hot_uninterrupted"))
-        full = crawl(d1)
+        full = _run(spark, fixtures, str(tmp_path_factory.mktemp("hot_uninterrupted")), bloom_fold_epochs=4)
         d2 = str(tmp_path_factory.mktemp("hot_interrupted"))
-        crawl(d2, max_epochs=2)  # killed with tier state lost
-        resumed = crawl(d2, resume=True)
+        _run(spark, fixtures, d2, max_epochs=2, bloom_fold_epochs=4)  # killed with tier state lost
+        resumed = _run(spark, fixtures, d2, resume=True, bloom_fold_epochs=4)
         assert resumed.crawl_order() == full.crawl_order()
         assert resumed.seen_set() == full.seen_set()
         assert resumed.fetched_image_ids() == full.fetched_image_ids()
@@ -455,37 +439,24 @@ class TestSaltedEpoch:
     honoring the per-host budget) and spreads their physical layout."""
 
     def _crawl(self, spark, fixtures, store_dir, threshold, cap=4):
-        store = SnapshotStore(store_dir)
-        eng = CrawlEngine(
+        return _run(
             spark,
-            store,
-            fixtures.root,
-            config=CrawlConfig(
-                batch_size=16,
-                per_host_cap=cap,
-                num_partitions=4,
-                salt_hot_batch_threshold=threshold,
-                salt_n_salts=4,
-            ),
+            fixtures,
+            store_dir,
+            batch_size=16,
+            per_host_cap=cap,
+            salt_hot_batch_threshold=threshold,
+            salt_n_salts=4,
         )
-        eng.run(seeds_path=f"{fixtures.root}/feeds.txt", max_epochs=100)
-        return eng.store
 
     def test_crawl_output_identical_salted_vs_not(self, spark, fixtures, tmp_path_factory):
-        outs = {}
-        for name, thr in (("unsalted", 0), ("salted", 2)):
-            # threshold 2 with per_host_cap 4 ⇒ every multi-row host in a
-            # batch is treated as hot — the aggressive end of the knob
-            store = self._crawl(
-                spark, fixtures, str(tmp_path_factory.mktemp(f"salt_{name}")), thr
-            )
-            log = store.read_table(spark, "crawl_log")
-            fr_t = store.read_table(spark, "frontier")
-            outs[name] = (
-                sorted(map(tuple, log.select("epoch", "crawl_rank", "url_canon").collect())),
-                sorted(r["url_canon"] for r in fr_t.select("url_canon").collect()),
-            )
-        assert outs["unsalted"] == outs["salted"]
+        # threshold 2 with per_host_cap 4 ⇒ every multi-row host in a
+        # batch is treated as hot — the aggressive end of the knob
+        outs = {
+            thr: _outputs(spark, self._crawl(spark, fixtures, str(tmp_path_factory.mktemp("salt")), thr))
+            for thr in (0, 2)
+        }
+        assert outs[0] == outs[2]
 
     def test_salted_offsets_honor_per_host_budget(self, spark, fixtures, tmp_path_factory):
         """In the salted crawl every pair of same-host fetches in an
@@ -493,9 +464,7 @@ class TestSaltedEpoch:
         grid guarantees distinct spacing-slots per host)."""
         import os
 
-        store = self._crawl(
-            spark, fixtures, str(tmp_path_factory.mktemp("salt_budget")), threshold=2
-        )
+        store = self._crawl(spark, fixtures, str(tmp_path_factory.mktemp("salt_budget")), threshold=2).store
         from podcast_plow_spark.operators.politeness import parse_crawl_delay
 
         def effective_delay(host: str) -> float:
@@ -524,46 +493,66 @@ class TestEpochWork:
     """The fixture crawl (per_host_cap 2 below the salt threshold of
     10,000; a few dozen queued rows, far below the dequeue's exact-path
     cutoff) writes no fetched_images table, runs no salting and no
-    presample refresh it cannot use, and leaves no epoch cache behind."""
+    presample refresh it cannot use, never builds the seen filter from
+    the frontier it wrote itself (the bootstrap seeds it, later inserts
+    pass ``like=``), and leaves no epoch cache behind."""
 
     @staticmethod
-    def _salt_spy(monkeypatch):
+    def _spy(monkeypatch, name, record):
+        """Wrap the engine's ``name``; each call appends ``record(kwargs)``."""
         import podcast_plow_spark.crawl.engine as engine_mod
 
         calls: list = []
-        real = engine_mod.salt_hot_hosts
+        real = getattr(engine_mod, name)
 
         def spy(*args, **kwargs):
-            calls.append(kwargs.get("hot_threshold"))
+            calls.append(record(kwargs))
             return real(*args, **kwargs)
 
-        monkeypatch.setattr(engine_mod, "salt_hot_hosts", spy)
+        monkeypatch.setattr(engine_mod, name, spy)
         return calls
+
+    def _salt_spy(self, monkeypatch):
+        return self._spy(monkeypatch, "salt_hot_hosts", lambda kw: kw.get("hot_threshold"))
+
+    def _dense_bloom_spy(self, monkeypatch):
+        return self._spy(monkeypatch, "build_bloom", lambda kw: kw.get("like") is None)
 
     @pytest.fixture(scope="class")
     def crawl(self, spark, fixtures, tmp_path_factory):
         jsc = spark.sparkContext._jsc
         before = set(jsc.getPersistentRDDs().keys())
         with pytest.MonkeyPatch.context() as mp:
-            salt_calls = self._salt_spy(mp)
+            salt_calls, dense = self._salt_spy(mp), self._dense_bloom_spy(mp)
             eng = _run(spark, fixtures, str(tmp_path_factory.mktemp("epoch_work")))
         left = set(jsc.getPersistentRDDs().keys()) - before
-        return eng, salt_calls, left
+        return eng, salt_calls, dense, left
 
     def test_no_fetched_images_table_and_no_cache_outlives_its_epoch(self, crawl):
-        eng, _salt_calls, left = crawl
+        eng, _salt_calls, _dense, left = crawl
         assert eng.store.table_entry("fetched_images") is None
         assert eng.fetched_image_ids()  # read from the crawl_log
         assert not left, left
 
     def test_salting_skipped_when_cap_is_below_threshold(self, crawl):
-        eng, salt_calls, _left = crawl
+        eng, salt_calls, _dense, _left = crawl
         assert eng.cfg.per_host_cap < eng.cfg.salt_hot_batch_threshold
         assert salt_calls == []
 
     def test_no_presample_at_or_below_exact_cutoff(self, crawl):
-        eng, _salt_calls, _left = crawl
+        eng, _salt_calls, _dense, _left = crawl
         assert eng._presample is None
+
+    def test_seen_filter_seeded_at_bootstrap(self, crawl):
+        _eng, _salt_calls, dense, _left = crawl
+        assert dense and not any(dense), dense
+
+    def test_cold_process_builds_seen_filter_once(self, spark, fixtures, tmp_path_factory, monkeypatch):
+        d = str(tmp_path_factory.mktemp("cold"))
+        _run(spark, fixtures, d, max_epochs=0)  # bootstrap, then "crash"
+        dense = self._dense_bloom_spy(monkeypatch)
+        _run(spark, fixtures, d, resume=True)
+        assert sum(dense) == 1, dense
 
     def test_salting_runs_when_cap_reaches_threshold(self, spark, fixtures, tmp_path_factory, monkeypatch):
         salt_calls = self._salt_spy(monkeypatch)

@@ -87,7 +87,7 @@ class TestCuckooLocal:
 
 
 class TestCuckooDistributed:
-    def test_treeaggregate_build_matches_local_membership(self, spark):
+    def test_driver_build_matches_local_membership(self, spark):
         urls = [(f"https://h{i % 31}.example.com/p{i}",) for i in range(5_000)]
         df = spark.createDataFrame(urls, "url_canon string").repartition(8)
         cf = build_cuckoo(df, "url_canon", expected_items=5_000)
