@@ -1,20 +1,25 @@
 """Frontier throughput benchmark — the authoritative BASELINE.json
-metric (URLs scheduled+fetched / sec).
+metric (URLs scheduled+fetched / sec), measured on the crawl engine's
+own epoch.
 
-The benchmark drives the engine's hot path on a purely synthetic
-frontier (no fixture I/O, no driver loops):
+Setup (untimed): a ``CrawlEngine`` over a ``SnapshotStore`` in a temp
+directory ingests N synthetic frontier rows across ~N/1000 hosts with
+a planted hot host (10% of URLs) — the skew the north rule calls out.
+On the empty store that writes the bucketed frontier and seeds the
+seen filter. Each epoch's N/4-row candidate stream is written to
+parquet next to it.
 
-1. synthesize N frontier rows across ~N/1000 hosts with a planted hot
-   host (10% of URLs) — the skew the north rule calls out;
-2. dequeue one politeness-capped batch of size N/4 (per-host rank →
-   global TakeOrderedAndProject top-K);
-3. politeness-schedule the batch (window arithmetic per host);
-4. "fetch" = vectorized fingerprint+canonicalize pandas UDF over the
-   batch (stands in for the HTTP stage's CPU);
-5. seen-filter N/4 fresh candidates against the N-row seen set via
-   blocked Bloom (treeAggregate build + broadcast probe) with exact
-   anti-join backstop;
-6. enqueue survivors with deterministic seq.
+Each timed epoch is the engine's, in three steps:
+
+1. ``CrawlEngine.run_epoch``: politeness-capped dequeue of N/4 rows,
+   politeness schedule, crawl_log append, the finished rows as one
+   frontier delta part, snapshot commit;
+2. "fetch" = decode + PSNR invariant + phash over that epoch's
+   crawl_log rows (stands in for the HTTP stage's CPU);
+3. ``CrawlEngine.ingest`` of the candidate stream: canonicalize and
+   robots-gate in one Python pass, first row per canonical URL, the
+   Bloom + exact anti-join seen filter, enqueue, filter insert and a
+   commit of its own (none when every candidate was already seen).
 
 URLs processed = batch + candidates; throughput = that / wall time.
 The frozen ``bench.py`` and ``perfbench/frontier_epoch.py`` call
@@ -26,18 +31,22 @@ that job at N and 4N executors (BENCH/EXECUTOR_SCALING.md).
 
 from __future__ import annotations
 
-import math
+import datetime as dt
+import os
+import tempfile
 import time
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from podcast_plow_spark.functions.urls import canonicalize_url_udf
-from podcast_plow_spark.operators import frontier as fr
-from podcast_plow_spark.operators.politeness import schedule_fetches
-from podcast_plow_spark.operators.seen import build_bloom, seen_filter_exact
+from podcast_plow_spark.crawl.engine import CrawlConfig, CrawlEngine
+from podcast_plow_spark.sources.snapshots import SnapshotStore
 
 __all__ = ["synthetic_frontier", "frontier_throughput", "kernel_control"]
+
+# the candidate columns ``CrawlEngine.ingest`` admits
+_CANDIDATE_COLS = ("url", "seq_key", "priority")
+_CANDIDATE_SCHEMA = "url string, seq_key long, priority int"
 
 
 def synthetic_frontier(spark: SparkSession, n: int, partitions: int = 64, salt: int = 0, host_mod: int | None = None):
@@ -45,11 +54,9 @@ def synthetic_frontier(spark: SparkSession, n: int, partitions: int = 64, salt: 
     (the single hot host carries ~10% of URLs).
 
     ``host_mod``: modulus of the host universe (default ``n//1000+1``).
-    Passing the PARENT frontier's modulus when synthesizing a fresh
-    candidate batch keeps both in the same host universe, so a salt
-    divisible by lcm(3, 10, host_mod) makes candidate URL i map
-    byte-identically onto frontier URL i+salt — i.e. an
-    already-seen candidate stream (the heavy seen-filter workload)."""
+    Passing the PARENT frontier's modulus with ``salt=0`` makes
+    candidate row i byte-identical to frontier URL i — an already-seen
+    candidate stream (the heavy seen-filter workload)."""
     if host_mod is None:
         host_mod = n // 1000 + 1
     base = spark.range(0, n, 1, partitions)
@@ -142,215 +149,98 @@ def frontier_throughput(
     partitions: int | None = None,
     warmup: bool = True,
 ) -> dict[str, float]:
-    """One full crawl epoch over a synthetic frontier: politeness-capped
-    dequeue → fetch+process (decode + PSNR invariant) → Bloom+exact
-    seen-filter of fresh candidates → enqueue. Measured steady-state
+    """The crawl engine's own epoch over a synthetic frontier:
+    ``CrawlEngine.run_epoch`` (politeness-capped dequeue, schedule,
+    crawl_log, commit) → fetch+process (decode + PSNR invariant) of
+    its crawl_log rows → ``CrawlEngine.ingest`` of a candidate stream
+    (robots gate, seen filter, enqueue, commit). Measured steady-state
     (one warm-up epoch first: JVM JIT + Python-worker spin-up are
     cluster amortized costs, not per-epoch costs).
 
     Returns ``{"urls_per_sec": best fresh-candidate throughput,
     "urls_per_sec_overlap": throughput with a ~100% already-seen
-    candidate stream (heaviest seen-filter path)}``."""
-    import datetime as dt
+    candidate stream (heaviest seen-filter path)}``.
 
+    The store compacts its frontier deltas once they pass
+    ``CrawlConfig.delta_compact_rows`` (100k). A fresh epoch writes 2k
+    delta rows (its finished batch, then its admitted candidates), an
+    overlap epoch only k. So at the frozen n=300k (k=75k) every fresh
+    epoch compacts inside its ``ingest``, while the overlap reps
+    alternate: the first compacts nothing, the second compacts inside
+    its ``run_epoch``. The best overlap rep is then usually one without
+    a compaction."""
     if partitions is None:
-        partitions = 128
+        partitions = spark.sparkContext.defaultParallelism
     k = max(1, int(n_urls * batch_frac))
-
-    # --- build the frontier (not timed: input setup)
-    raw = synthetic_frontier(spark, n_urls, partitions)
-    cand0 = raw.withColumn("url_canon", canonicalize_url_udf(F.col("url"))).withColumn(
-        "fingerprint", F.sha2(F.col("url_canon"), 256)
-    )
-    frontier = fr.cluster_by_host(
-        fr.enqueue(cand0, epoch=0, num_partitions=partitions, seq_mode="keyed"), partitions
-    ).cache()
-    frontier.count()
-    # seen filter is maintained incrementally in steady state (the
-    # engine ORs in each epoch's insertions) — build once at setup
-    seen = frontier.select("url_canon")
-    bloom = build_bloom(seen, expected_items=n_urls)
-    # threshold presample, collected ONCE at setup: in steady state
-    # the order-key sample rides the previous epoch's frontier-merge
-    # write for free (dequeue_batch_polite presample contract), so a
-    # per-epoch sampling job is not a steady-state cost. The frontier
-    # here is static across reps — setup IS "the previous epoch".
-    presample = (
-        frontier.select("priority", "run_at", "seq")
-        .sample(False, min(1.0, 20_000 / max(n_urls, 1)), seed=42)
-        .collect()
-    )
-
-    def run_epoch(salt: int, host_mod: int | None = None) -> tuple[int, int]:
-        """One crawl epoch, PIPELINED the way a production crawler runs:
-        the fetch/decode of this epoch's batch and the seen-filter +
-        enqueue of the discovery stream are INDEPENDENT job trees (the
-        candidates come from previously fetched pages, not from this
-        batch's still-in-flight fetches), so they execute as concurrent
-        job groups sharing the executor pool — fetch never idles the
-        cluster while frontier maintenance runs, exactly as a real
-        frontier service overlaps the two. The maintenance tree starts
-        FIRST so the dequeue's probe jobs (a narrow filter+cache over
-        the frontier that underutilizes the pool on its own) interleave
-        with it instead of running alone. Throughput still counts both
-        streams fully processed within the epoch; total work is
-        unchanged, only the serial job-after-job dead time is gone."""
-        from pyspark import InheritableThread
-
-        # frontier maintenance in its own job group, started first:
-        # seen-filter the discovery stream (candidates extracted from
-        # PREVIOUSLY fetched pages — independent of this batch's
-        # in-flight work) and enqueue the survivors
-        maint_out: dict = {}
-
-        def _maintenance_job():
-            try:
-                fresh = synthetic_frontier(
-                    spark, k, partitions, salt=salt, host_mod=host_mod
-                ).withColumn("url_canon", canonicalize_url_udf(F.col("url"))).withColumn(
-                    "fingerprint", F.sha2(F.col("url_canon"), 256)
-                )
-                # cache_registry: the canonicalize+probe python stages
-                # would otherwise re-run for each broadcast subjob
-                # (maybe_keys, hits) and again in the main job —
-                # measured ~30% of the epoch
-                caches: list = []
-                unseen, _stats = seen_filter_exact(fresh, seen, bloom, cache_registry=caches)
-                new_rows = fr.enqueue(
-                    unseen, epoch=1, num_partitions=partitions, seq_base=n_urls, seq_mode="keyed"
-                )
-                maint_out["n_new"] = new_rows.count()
-                maint_out["caches"] = caches
-            except BaseException as exc:  # noqa: BLE001 — re-raised on join
-                maint_out["err"] = exc
-
-        t = InheritableThread(target=_maintenance_job)
-        t.start()
-
-        def _cleanup_after_error():
-            # if the main-thread dequeue/schedule/decode raises, still
-            # join the maintenance thread and release every cache both
-            # streams registered — otherwise the cached DataFrames (and
-            # a running job tree) leak into subsequent reps
-            t.join()
-            for h in dq_caches + maint_out.get("caches", []):
-                try:
-                    h.unpersist()
-                except Exception:  # noqa: BLE001 — best-effort release
-                    pass
-
-        # politeness-capped dequeue via the sampled global-order
-        # PREFIX (dequeue_batch_polite): the per-host window ranks only
-        # the ~k·safety-row prefix, never the full frontier — round 1
-        # windowed all N rows here, a memory-bandwidth-flat stage that
-        # capped single-box scaling
-        dq_caches: list = []
-        try:
-            dequeued = fr.dequeue_batch_polite(
-                frontier,
-                k,
-                now=dt.datetime(2024, 1, 1),
-                per_host_cap=1000,
-                n_hint=n_urls,
-                safety=1.3,
-                with_rank=False,
-                cache_registry=dq_caches,
-                presample=presample,
-            )
-            # narrow to the columns the schedule + decode actually
-            # use — the two downstream shuffles then move 3 short
-            # columns, not full frontier rows
-            batch = schedule_fetches(
-                dequeued.select("url_canon", "host", "seq"), crawl_delay_sec=0.01, rank_col="seq"
-            )
-            # fetch+process: decode payload, verify PSNR invariant,
-            # phash — the per-URL CPU an image crawl actually spends.
-            # In registry mode the batch is a filter over the
-            # host-partitioned prefix cache — already `partitions`
-            # well-balanced partitions (the per-host cap bounds the hot
-            # host's contribution), so feeding the decode directly
-            # skips a pure-overhead exchange (measured ~3 s/epoch at
-            # local[32]). The guard repartitions only if a fallback
-            # dequeue path handed us a degenerate layout (e.g. the
-            # single-partition TakeOrdered shape), where AQE-less
-            # narrow plans would otherwise serialize this
-            # embarrassingly-parallel stage.
-            # dq_caches non-empty ⟺ the sampled registry path
-            # engaged and the batch IS a cut over the well-partitioned
-            # prefix cache
-            decode_src = batch if dq_caches else batch.repartition(partitions)
-            # fetch/decode on the main thread, concurrent with the
-            # maintenance job group: Spark's scheduler interleaves the
-            # two trees' tasks on the shared executor pool (one tree's
-            # tasks fill slots the other leaves free and vice versa)
-            n_batch = _decode_psnr_stage(decode_src).where(F.col("invariant_ok")).count()
-        except BaseException:
-            _cleanup_after_error()
-            raise
-
-        t.join()
-        if "err" in maint_out:
-            for h in dq_caches:
-                h.unpersist()
-            raise maint_out["err"]
-        n_new = maint_out["n_new"]
-        assert n_batch == k, f"invariant failed for {k - n_batch} rows"
-        # release per-epoch caches only after BOTH streams are done
-        # (the decode reads the dequeue's eligible-prefix cache)
-        for h in dq_caches:
-            h.unpersist()
-        for h in maint_out.get("caches", []):
-            h.unpersist()
-        return n_batch, n_new
-
-    if warmup:
-        run_epoch(salt=n_urls // 3)
-
     # best-of-N (default 3): the sandbox VM's clock/steal variance is
     # large; peak steady-state throughput is the stable statistic.
     # SPARK_GRAFT_EPOCH_REPS trims reps for long multi-pair sessions.
-    import os as _os
+    reps = int(os.environ.get("SPARK_GRAFT_EPOCH_REPS", "3"))
 
-    reps = int(_os.environ.get("SPARK_GRAFT_EPOCH_REPS", "3"))
-    best = 0.0
-    # ONE fixed salt for all timed reps (distinct from the warm-up's):
-    # production steady-state epochs read candidates from tables, so
-    # their plan shapes — and Catalyst/codegen caches — are constant
-    # across epochs. The synthetic generator bakes the salt into plan
-    # literals, so a per-rep fresh salt would time a Janino recompile
-    # of every stage each rep (~2-4 s of driver time at any data
-    # scale) instead of the job. Nothing else carries across reps: the
-    # per-epoch caches are unpersisted inside run_epoch and each rep
-    # builds new DataFrames (no shuffle or exchange reuse across jobs).
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        n_batch, _ = run_epoch(salt=n_urls // 2 + n_urls)
-        dt_sec = time.perf_counter() - t0
-        best = max(best, (n_batch + k) / dt_sec)
+    with tempfile.TemporaryDirectory(prefix="frontier_bench_") as root:
+        # --- setup (not timed). No sites/ under root: no robots rules
+        # and no crawl-delay overrides. On the empty store the ingest
+        # writes the bucketed frontier and seeds the seen filter.
+        engine = CrawlEngine(
+            spark,
+            SnapshotStore(root),
+            root,
+            config=CrawlConfig(
+                batch_size=k,
+                per_host_cap=1000,
+                num_partitions=partitions,
+                crawl_delay_sec=0.01,
+                clock=lambda: dt.datetime(2024, 1, 1),
+            ),
+        )
+        engine.ingest(synthetic_frontier(spark, n_urls, partitions).select(*_CANDIDATE_COLS))
 
-    # Overlap rep (ADVICE r3): a timed epoch whose candidate stream is
-    # ~100% ALREADY-SEEN URLs — the heaviest seen-filter path (every
-    # candidate is Bloom-positive and goes through the exact broadcast
-    # backstop; near-zero enqueue). Same host universe as the frontier
-    # (host_mod) + a salt divisible by lcm(3, 10, host_mod) make
-    # candidate i byte-identical to frontier URL i+salt. Reported
-    # separately: the standard reps keep the fresh-candidate workload
-    # the round-over-round series has always measured.
-    host_mod = n_urls // 1000 + 1
-    step = math.lcm(3, 10, host_mod)
-    t_mult = max(1, (n_urls - k) // step)
-    overlap_salt = t_mult * step
-    best_overlap = 0.0
-    for _ in range(max(1, reps - 1)):
-        t0 = time.perf_counter()
-        n_batch, n_new = run_epoch(salt=overlap_salt, host_mod=host_mod)
-        dt_sec = time.perf_counter() - t0
-        best_overlap = max(best_overlap, (n_batch + k) / dt_sec)
-    frontier.unpersist()
+        # Each epoch's candidate stream is written here and read back in
+        # its timed epoch, so the timed plans are the same text every
+        # rep: the synthetic generator bakes its salt into plan
+        # literals, and a changed plan recompiles the generated code of
+        # every stage (~2-4 s of driver time at any data scale).
+        def stream(name: str, df) -> str:
+            path = os.path.join(root, "candidates", name)
+            df.select(*_CANDIDATE_COLS).write.parquet(path)
+            return path
+
+        # fresh: ids past the frontier and every earlier stream, so no
+        # candidate was admitted before. Overlap: ids below k in the
+        # frontier's host universe, so candidate j is frontier URL j
+        # byte for byte — every candidate is Bloom-positive and goes
+        # through the exact backstop, and nothing is enqueued.
+        fresh = [
+            stream(f"fresh{i}", synthetic_frontier(spark, k, partitions, salt=n_urls + i * k))
+            for i in range(int(warmup) + reps)
+        ]
+        overlap = stream("overlap", synthetic_frontier(spark, k, partitions, host_mod=n_urls // 1000 + 1))
+
+        def timed_epoch(candidates: str) -> float:
+            """One timed epoch; returns its URLs/s."""
+            t0 = time.perf_counter()
+            engine.run_epoch()
+            # fetch+process: the crawl_log rows are the epoch's fetch
+            # record; their part's file layout is not a task layout
+            log = engine.store.read_table(spark, "crawl_log").where(
+                F.col("epoch") == engine.store.latest_epoch()
+            )
+            n_batch = _decode_psnr_stage(log.repartition(partitions)).where(F.col("invariant_ok")).count()
+            assert n_batch == k, f"invariant failed for {k - n_batch} rows"
+            engine.ingest(spark.read.schema(_CANDIDATE_SCHEMA).parquet(candidates))
+            return (n_batch + k) / (time.perf_counter() - t0)
+
+        # epochs run in sequence: each commits into the one store
+        if warmup:
+            timed_epoch(fresh.pop(0))
+        best = max(timed_epoch(path) for path in fresh)
+        # reported separately: the fresh reps keep the workload the
+        # round-over-round series has always measured
+        best_overlap = max(timed_epoch(overlap) for _ in range(max(1, reps - 1)))
     return {"urls_per_sec": best, "urls_per_sec_overlap": best_overlap}
 
 
-def kernel_control(spark, n: int = 250_000, partitions: int = 128, reps: int = 2) -> float:
+def kernel_control(spark, n: int = 250_000, partitions: int | None = None, reps: int = 2) -> float:
     """Same-kernel ceiling measured IN-PROCESS: the crawl's dominant
     stage (the decode kernel) run zero-shuffle over a trivially
     parallel cached input, in the SAME JVM/python-worker pool as the
@@ -360,6 +250,8 @@ def kernel_control(spark, n: int = 250_000, partitions: int = 128, reps: int = 2
     job it normalizes — the in-process control makes each process's
     (epoch throughput, ceiling) pair mode-matched, and the pairwise
     normalized efficiency cancels the mode."""
+    if partitions is None:
+        partitions = spark.sparkContext.defaultParallelism
     base = (
         spark.range(0, n, 1, partitions)
         .select(

@@ -28,10 +28,11 @@ own, so a stream-built and a batch-built frontier crawl identically
 (tests/test_streaming.py).
 
 Scale design notes (10^10 frontier — these are now code, not notes):
-- the frontier is a BUCKETED store table (``bucket(host_hash)``);
-  an epoch rewrites only the buckets its batch/discoveries touch —
+- the frontier is a BUCKETED store table (``bucket(host_hash)``).
+  An epoch rewrites no bucket: it writes one delta part (below), and
+  only compaction rewrites buckets — those its folded parts touch;
   every other bucket carries forward as a manifest pointer
-  (``SnapshotStore.merge_buckets``; tested bucket-pruned in
+  (``SnapshotStore.compact_deltas``; tested bucket-pruned in
   tests/test_snapshot_store.py).
 - dequeue = ``dequeue_batch_polite``: runnable filter (pushed to the
   scan) → sampled global-order threshold → politeness window over the
@@ -383,12 +384,12 @@ class CrawlEngine:
                 ),
             )
             # frontier is BUCKETED by host_hash (Iceberg bucket(N, host)
-            # analog) — epochs later rewrite only the buckets they touch —
-            # and WRITE ORDERED BY the dequeue key: row-group min/max
-            # stats then let the dequeue's pushed order-key prefix filter
-            # skip nearly the whole store instead of scanning it (the
-            # frontier scan was the last O(frontier) term in the epoch;
-            # see BENCH/EPOCH_SCALING.md)
+            # analog) — compaction later rewrites only the buckets its
+            # parts touch — and WRITE ORDERED BY the dequeue key:
+            # row-group min/max stats then let the dequeue's pushed
+            # order-key prefix filter skip nearly the whole store instead
+            # of scanning it (the frontier scan was the last O(frontier)
+            # term in the epoch; see BENCH/EPOCH_SCALING.md)
             self.store.write_bucketed(
                 "frontier",
                 rows,

@@ -5,7 +5,4 @@ input_hint forbids row-at-a-time Python UDFs) or, where possible, as
 pure Column expressions that stay inside whole-stage codegen.
 """
 
-from podcast_plow_spark.functions.urls import (  # noqa: F401
-    canonicalize_url_udf,
-    host_hash_col,
-)
+from podcast_plow_spark.functions.urls import host_hash_col  # noqa: F401

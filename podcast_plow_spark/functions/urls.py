@@ -34,12 +34,9 @@ from urllib.parse import parse_qsl, quote, urlencode, urlparse, urlunparse
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
 
 __all__ = [
     "canonicalize_url",
-    "canonicalize_url_udf",
     "extract_host",
     "host_hash_col",
     "normalize_youtube_url",
@@ -290,11 +287,6 @@ def _canonicalize_series(urls: pd.Series) -> pd.Series:
     slow = ~mask
     out[slow] = urls[slow].map(canonicalize_url, na_action="ignore")
     return out
-
-
-@pandas_udf(StringType())
-def canonicalize_url_udf(urls: pd.Series) -> pd.Series:
-    return _canonicalize_series(urls)
 
 
 def host_hash_col(host: Column, num_buckets: int | None = None) -> Column:

@@ -55,7 +55,6 @@ __all__ = [
     "STATUS_FINISHED",
     "STATUS_FAILED",
     "enqueue",
-    "cluster_by_host",
     "runnable",
     "exact_dequeue_cutoff",
     "dequeue_batch_polite",
@@ -147,23 +146,6 @@ def enqueue(
         .withColumn("error", F.lit(None).cast("string"))
     )
     return df.select([f.name for f in FRONTIER_SCHEMA.fields])
-
-
-def cluster_by_host(frontier: DataFrame, num_partitions: int) -> DataFrame:
-    """Physical layout for the stored frontier: hash-partitioned by
-    host, sorted within partitions by (host, dequeue key).
-
-    This is the parquet-fallback analog of an Iceberg table with
-    ``PARTITIONED BY (bucket(N, host))`` + ``WRITE ORDERED BY
-    (priority DESC, run_at, seq)`` (SURVEY.md §4 "queue composite
-    index"). With this layout the per-host politeness window needs
-    neither an exchange nor a sort — Catalyst sees the child's
-    hashpartitioning(host) and ordering already satisfy the window's
-    requirements, so dequeue degenerates to a streaming scan.
-    """
-    return frontier.repartition(num_partitions, F.col("host")).sortWithinPartitions(
-        F.col("host").asc(), F.col("priority").desc(), F.col("run_at").asc(), F.col("seq").asc()
-    )
 
 
 def runnable(frontier: DataFrame, now: dt.datetime) -> DataFrame:

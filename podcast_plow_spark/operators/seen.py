@@ -583,7 +583,7 @@ def seen_filter_exact(
     bloom_pos) stats for lineage are computed, each row carrying the
     probe's total ``false_pos_total`` (flagged candidates the exact
     join found unseen) — this runs an extra action, so it's opt-in
-    (the engine turns it on; the throughput bench leaves it off).
+    (the engine turns it on).
 
     ``cache_registry``: when given, the probed-candidates DataFrame is
     cached and the handle appended for the CALLER to unpersist after

@@ -21,6 +21,26 @@ def fixtures(tmp_path_factory):
     return make_fixtures(FixtureSpec(root=root, n_feeds=3, entries_per_feed=4))
 
 
+def _spy(monkeypatch, name, record):
+    """Wrap the engine module's ``name``; each call appends ``record(kwargs)``."""
+    import podcast_plow_spark.crawl.engine as engine_mod
+
+    calls: list = []
+    real = getattr(engine_mod, name)
+
+    def spy(*args, **kwargs):
+        calls.append(record(kwargs))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(engine_mod, name, spy)
+    return calls
+
+
+def _cold_bloom_spy(monkeypatch):
+    """True per ``build_bloom`` over the whole frontier (no ``like=``)."""
+    return _spy(monkeypatch, "build_bloom", lambda kw: kw.get("like") is None)
+
+
 def _run(spark, fixtures, store_dir, max_epochs=100, resume=False, **cfg):
     """The fixture crawl (batch 8, per-host cap 2, 4 partitions; ``cfg``
     overrides any CrawlConfig field) into a store at ``store_dir``."""
@@ -44,15 +64,20 @@ def _outputs(spark, eng):
     )
 
 
-def test_resume_after_kill_is_byte_identical(spark, fixtures, tmp_path_factory):
+def test_resume_after_kill_is_byte_identical(spark, fixtures, tmp_path_factory, monkeypatch):
     """Kill mid-crawl at epoch k, resume, final state identical to an
-    uninterrupted run (SURVEY.md §7 M5)."""
+    uninterrupted run (SURVEY.md §7 M5). Batch 2 leaves the third feed
+    for epoch 2, so the resumed process still parses a feed: it
+    rebuilds the seen filter once and probes it."""
     d1 = str(tmp_path_factory.mktemp("uninterrupted"))
-    full = _run(spark, fixtures, d1)
+    full = _run(spark, fixtures, d1, batch_size=2)
 
     d2 = str(tmp_path_factory.mktemp("interrupted"))
-    partial = _run(spark, fixtures, d2, max_epochs=2)  # "crash" after epoch 2
-    resumed = _run(spark, fixtures, d2, resume=True)
+    _run(spark, fixtures, d2, max_epochs=1, batch_size=2)  # "crash" after epoch 1
+    cold = _cold_bloom_spy(monkeypatch)
+    probes = _spy(monkeypatch, "seen_filter_exact", lambda kw: True)
+    resumed = _run(spark, fixtures, d2, resume=True, batch_size=2)
+    assert sum(cold) == 1 and probes, (cold, probes)
 
     assert resumed.crawl_order() == full.crawl_order()
     assert resumed.seen_set() == full.seen_set()
@@ -416,17 +441,22 @@ class TestHotTierFold:
         )
         assert _outputs(spark, default) == _outputs(spark, sharded_hot)
 
-    def test_resume_with_hot_tier_is_byte_identical(self, spark, fixtures, tmp_path_factory):
+    def test_resume_with_hot_tier_is_byte_identical(self, spark, fixtures, tmp_path_factory, monkeypatch):
         """Kill mid-crawl with an UNFOLDED hot tier, resume in a fresh
         engine: the tier is process-local state, so the invariant
         (bloom ∪ hot ⊇ seen) must be re-established from the store —
-        the resumed process rebuilds the full Bloom on first probe.
-        Final state must equal an uninterrupted amortized run AND the
-        fold-every-epoch run."""
-        full = _run(spark, fixtures, str(tmp_path_factory.mktemp("hot_uninterrupted")), bloom_fold_epochs=4)
+        the resumed process rebuilds the full Bloom once, on its first
+        probe, and its inserts land in a new tier (batch 2 leaves the
+        third feed for after the kill). Final state must equal an
+        uninterrupted amortized run."""
+        cfg = {"batch_size": 2, "bloom_fold_epochs": 4}
+        full = _run(spark, fixtures, str(tmp_path_factory.mktemp("hot_uninterrupted")), **cfg)
         d2 = str(tmp_path_factory.mktemp("hot_interrupted"))
-        _run(spark, fixtures, d2, max_epochs=2, bloom_fold_epochs=4)  # killed with tier state lost
-        resumed = _run(spark, fixtures, d2, resume=True, bloom_fold_epochs=4)
+        _run(spark, fixtures, d2, max_epochs=1, **cfg)  # killed with tier state lost
+        cold = _cold_bloom_spy(monkeypatch)
+        hot_inserts = _spy(monkeypatch, "build_cuckoo", lambda kw: True)
+        resumed = _run(spark, fixtures, d2, resume=True, **cfg)
+        assert sum(cold) == 1 and hot_inserts, (cold, hot_inserts)
         assert resumed.crawl_order() == full.crawl_order()
         assert resumed.seen_set() == full.seen_set()
         assert resumed.fetched_image_ids() == full.fetched_image_ids()
@@ -498,32 +528,15 @@ class TestEpochWork:
     pass ``like=``), and leaves no epoch cache behind."""
 
     @staticmethod
-    def _spy(monkeypatch, name, record):
-        """Wrap the engine's ``name``; each call appends ``record(kwargs)``."""
-        import podcast_plow_spark.crawl.engine as engine_mod
-
-        calls: list = []
-        real = getattr(engine_mod, name)
-
-        def spy(*args, **kwargs):
-            calls.append(record(kwargs))
-            return real(*args, **kwargs)
-
-        monkeypatch.setattr(engine_mod, name, spy)
-        return calls
-
-    def _salt_spy(self, monkeypatch):
-        return self._spy(monkeypatch, "salt_hot_hosts", lambda kw: kw.get("hot_threshold"))
-
-    def _dense_bloom_spy(self, monkeypatch):
-        return self._spy(monkeypatch, "build_bloom", lambda kw: kw.get("like") is None)
+    def _salt_spy(monkeypatch):
+        return _spy(monkeypatch, "salt_hot_hosts", lambda kw: kw.get("hot_threshold"))
 
     @pytest.fixture(scope="class")
     def crawl(self, spark, fixtures, tmp_path_factory):
         jsc = spark.sparkContext._jsc
         before = set(jsc.getPersistentRDDs().keys())
         with pytest.MonkeyPatch.context() as mp:
-            salt_calls, dense = self._salt_spy(mp), self._dense_bloom_spy(mp)
+            salt_calls, dense = self._salt_spy(mp), _cold_bloom_spy(mp)
             eng = _run(spark, fixtures, str(tmp_path_factory.mktemp("epoch_work")))
         left = set(jsc.getPersistentRDDs().keys()) - before
         return eng, salt_calls, dense, left
@@ -550,7 +563,7 @@ class TestEpochWork:
     def test_cold_process_builds_seen_filter_once(self, spark, fixtures, tmp_path_factory, monkeypatch):
         d = str(tmp_path_factory.mktemp("cold"))
         _run(spark, fixtures, d, max_epochs=0)  # bootstrap, then "crash"
-        dense = self._dense_bloom_spy(monkeypatch)
+        dense = _cold_bloom_spy(monkeypatch)
         _run(spark, fixtures, d, resume=True)
         assert sum(dense) == 1, dense
 
@@ -564,3 +577,38 @@ class TestEpochWork:
         )
         assert eng.run(seeds_path=f"{fixtures.root}/feeds.txt", max_epochs=1) == 1
         assert salt_calls == [2]
+
+
+def test_frontier_throughput_runs_the_engine_epoch(spark, monkeypatch):
+    """The frontier benchmark times the engine's own epoch: one
+    bootstrap ``ingest``, then per epoch one ``run_epoch`` that logs k
+    fetches and one ``ingest`` of k candidates. A fresh stream commits
+    a snapshot; the overlap stream is all seen and commits none."""
+    from podcast_plow_spark.crawl.bench import frontier_throughput
+
+    monkeypatch.setenv("SPARK_GRAFT_EPOCH_REPS", "1")  # warm-up, one fresh, one overlap
+    calls: list = []
+    real_epoch, real_ingest = CrawlEngine.run_epoch, CrawlEngine.ingest
+
+    def run_epoch(self):
+        out = real_epoch(self)
+        log = self.store.read_table(self.spark, "crawl_log")
+        calls.append(("run_epoch", log.where(F.col("epoch") == self.store.latest_epoch()).count()))
+        return out
+
+    def ingest(self, raw):
+        before = self.store.latest_epoch()
+        real_ingest(self, raw)
+        calls.append(("ingest", before, self.store.latest_epoch()))
+
+    monkeypatch.setattr(CrawlEngine, "run_epoch", run_epoch)
+    monkeypatch.setattr(CrawlEngine, "ingest", ingest)
+    out = frontier_throughput(spark, n_urls=400, partitions=2)
+
+    assert out["urls_per_sec"] > 0 and out["urls_per_sec_overlap"] > 0, out
+    assert [c[0] for c in calls] == ["ingest"] + ["run_epoch", "ingest"] * 3, calls
+    assert [c[1] for c in calls if c[0] == "run_epoch"] == [100] * 3, calls
+    bootstrap, warm, fresh, overlap = [c[1:] for c in calls if c[0] == "ingest"]
+    assert bootstrap == (None, 0)
+    assert warm[1] == warm[0] + 1 and fresh[1] == fresh[0] + 1, calls
+    assert overlap[1] == overlap[0], calls

@@ -34,8 +34,8 @@ def test_docs_name_only_existing_scripts():
 def test_frontier_bench_job_prints_one_json_line():
     """The keys ``scripts/executor_scaling_bench.py`` reads from each
     submitted run, from a direct single-JVM run of the job."""
-    # one timed epoch per candidate workload: every stage runs 128
-    # partitions whatever the input size, so each epoch costs minutes
+    # one timed epoch per candidate workload: a warm-up, one fresh and
+    # one overlap engine epoch, at the session's default parallelism
     env = dict(os.environ, SPARK_GRAFT_EPOCH_REPS="1")
     proc = subprocess.run(
         [sys.executable, "jobs/frontier_bench_job.py", "--master", "local[2]", "--n-urls", "4000", "--inproc-control"],

@@ -63,26 +63,6 @@ def test_dequeue_is_take_ordered_not_global_sort(spark):
     assert "TakeOrderedAndProject" in plan, plan
 
 
-def test_politeness_window_needs_no_exchange_on_clustered_frontier(spark):
-    from pyspark.sql import Window
-
-    from podcast_plow_spark.crawl.bench import synthetic_frontier
-    from podcast_plow_spark.operators import frontier as fr
-
-    raw = synthetic_frontier(spark, 10_000, 8).withColumn("url_canon", F.col("url")).withColumn(
-        "fingerprint", F.sha2(F.col("url"), 256)
-    )
-    frontier = fr.cluster_by_host(fr.enqueue(raw, epoch=0, seq_mode="keyed"), 8).cache()
-    frontier.count()
-    w = Window.partitionBy("host").orderBy(*fr.DEQUEUE_ORDER())
-    eligible = frontier.withColumn("__hr", F.row_number().over(w))
-    plan = _plan(eligible)
-    # the only Exchange allowed is inside the cached build plan
-    above_cache = plan.split("InMemoryRelation")[0]
-    assert "Exchange" not in above_cache, above_cache
-    frontier.unpersist()
-
-
 def test_one_shard_probe_computes_no_host_bucket(spark):
     """With one shard every key is in bucket 0: the probe plan carries
     a constant bucket, not parse_url + crc32 of the host per candidate
