@@ -61,16 +61,9 @@ Scale design notes (10^10 frontier — these are now code, not notes):
   batch-sized number of tasks, not ``spark.sql.shuffle.partitions``.
 - the ``bytes`` image column is touched only by the payload join and
   the invariant job — column pruning keeps every other scan narrow.
-- the seen filter is one ``ShardedBloom`` (``bloom_shards`` shards by
-  host bucket; 1 = monolithic), seeded at bootstrap from the first
-  frontier's rows, then maintained incrementally: each insert runs on
-  the driver over keys the JVM computes (no Python worker). Only a
-  cold process (``resume``, or ``ingest`` on an existing store)
-  rebuilds it, with one distributed pass over the stored frontier.
-  With ``bloom_fold_epochs > 1`` each epoch's insertions land in a
-  batch-sized cuckoo hot tier (O(batch)) and the O(filter-size) Bloom
-  OR-fold is amortized across epochs — the exact anti-join backstop
-  is unchanged either way.
+- the URL-seen filter is ``operators/seen.py::SeenFilter``: seeded
+  at bootstrap, folded at epoch start, probed and inserted into by
+  ``_admit``.
 """
 
 from __future__ import annotations
@@ -91,13 +84,7 @@ from podcast_plow_spark.operators.politeness import (
     salt_hot_hosts,
     schedule_fetches,
 )
-from podcast_plow_spark.operators.seen import (
-    CuckooFilter,
-    ShardedBloom,
-    build_bloom,
-    build_cuckoo,
-    seen_filter_exact,
-)
+from podcast_plow_spark.operators.seen import SeenFilter
 from podcast_plow_spark.sources.feeds import fetch_and_parse_feeds, load_seeds
 from podcast_plow_spark.sources.snapshots import SnapshotStore
 
@@ -117,7 +104,6 @@ class CrawlConfig:
     per_host_cap: int = 2
     user_agent: str = "plow-spark"
     num_partitions: int = 8
-    bloom_bits_per_item: int = 12
     #: shards of the URL-seen filter, by the frontier's crc32-host
     #: bucket (the 10^10 SCALE_DESIGN layout, where a 15 GB monolithic
     #: filter cannot be broadcast whole). 1 = one monolithic filter.
@@ -163,10 +149,6 @@ class CrawlConfig:
     #: bloom OR hot; crawl output is bit-identical either way
     #: (tests/test_crawl_engine.py::test_engine_run_identical_with_hot_tier).
     bloom_fold_epochs: int = 1
-    #: hot-tier capacity (slots). Sized ~2× the expected insertions
-    #: between folds; the load-triggered early fold makes undersizing
-    #: safe (correctness never depends on the sizing).
-    hot_tier_capacity: int = 65_536
 
 
 class CrawlEngine:
@@ -185,24 +167,7 @@ class CrawlEngine:
         self.cfg = config or CrawlConfig()
         self._robots_bodies: dict[str, str] | None = None
         self._crawl_delays: dict[str, float] | None = None
-        # incremental seen-filter: seeded by the bootstrap that writes
-        # the first frontier (else built once from the stored frontier
-        # on a cold process's first probe), then only each epoch's
-        # insertions are OR-merged in (never a full rescan; saturation
-        # beyond sizing is safe — the exact backstop keeps
-        # correctness, only fpr degrades)
-        self._bloom = None
-        self._bloom_capacity = 1_000_000
-        # cuckoo hot tier: insertions newer than the last Bloom fold
-        # (None while bloom_fold_epochs == 1 or before the first probe).
-        # Invariant: bloom ∪ hot ⊇ all frontier URLs — guaranteed
-        # because the Bloom covers the FULL seen set before a process
-        # first probes (seeded at bootstrap, or built from the store
-        # after resume), and every later insertion lands in the hot
-        # tier until folded.
-        self._hot = None
-        self._epochs_since_fold = 0
-        self._last_fold_epoch = 0
+        self._seen = SeenFilter(self.cfg.bloom_shards, self.cfg.bloom_fold_epochs)
         # dequeue threshold presample, refreshed every
         # cfg.presample_epochs (see run_epoch); None = sample inline
         self._presample: list | None = None
@@ -241,25 +206,6 @@ class CrawlEngine:
         c = c.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") == 1).drop("__rn")
         return c.withColumn("fingerprint", F.sha2(F.col("url_canon"), 256))
 
-    def _fold_hot_tier(self, frontier: DataFrame, epoch: int) -> None:
-        """Amortized Bloom fold (cuckoo hot tier → big Bloom), run at
-        epoch start: the freshly-read frontier holds every row the hot
-        tier covers (discovered_epoch > last fold), so the fold is one
-        pushed-down scan of just those rows; the tier is then dropped
-        and rebuilt from this epoch's inserts. The load-triggered early
-        fold bounds tier fpr regardless of how hot_tier_capacity was
-        sized."""
-        if self._hot is not None and (
-            self._epochs_since_fold >= self.cfg.bloom_fold_epochs or self._hot.load > 0.8
-        ):
-            fold_rows = frontier.where(
-                F.col("discovered_epoch") > F.lit(int(self._last_fold_epoch))
-            ).select("url_canon")
-            self._bloom = self._bloom.merge(build_bloom(fold_rows, "url_canon", like=self._bloom))
-            self._hot = None
-            self._epochs_since_fold = 0
-            self._last_fold_epoch = epoch - 1
-
     def _admit(
         self, cand: DataFrame, frontier: DataFrame, epoch: int, next_seq: int, caches: list
     ) -> tuple[DataFrame, int, DataFrame]:
@@ -267,25 +213,7 @@ class CrawlEngine:
         seen filter's per-partition stats): seen filter, enqueue with
         ``seq`` continuing from ``next_seq``, then the new URLs go into
         the seen filter. The new rows are cached in ``caches``."""
-        seen = frontier.select("url_canon")
-        if self._bloom is None:
-            # a cold process: the frontier was written elsewhere
-            self._bloom = build_bloom(
-                seen,
-                "url_canon",
-                expected_items=self._bloom_capacity,
-                bits_per_item=self.cfg.bloom_bits_per_item,
-                n_shards=self.cfg.bloom_shards,
-            )
-            # the full build covers every row in the frontier
-            # read this epoch (all discovered_epoch ≤ epoch-1)
-            self._last_fold_epoch = epoch - 1
-        unseen, stats = seen_filter_exact(
-            cand, seen, self._bloom, "url_canon",
-            measure_fpr=True,
-            cache_registry=caches,
-            hot=self._hot,
-        )
+        unseen, stats = self._seen.unseen(cand, frontier, epoch, caches)
         new_rows = fr.enqueue(
             unseen,
             epoch=epoch,
@@ -296,21 +224,7 @@ class CrawlEngine:
         caches.append(new_rows)
         n_new = new_rows.count()
         if n_new:
-            if self.cfg.bloom_fold_epochs > 1:
-                # O(batch) maintenance: insertions land in the cuckoo
-                # hot tier; the O(filter-size) Bloom OR + full
-                # re-broadcast are deferred to the amortized fold at
-                # epoch start. The tier is one batch-sized cuckoo for
-                # any shard count; probes OR it in after the Bloom.
-                if self._hot is None:
-                    self._hot = CuckooFilter.sized_for(self.cfg.hot_tier_capacity)
-                self._hot = self._hot.merge(
-                    build_cuckoo(new_rows.select("url_canon"), "url_canon", like=self._hot)
-                )
-                self._epochs_since_fold += 1
-            else:
-                delta = build_bloom(new_rows.select("url_canon"), "url_canon", like=self._bloom)
-                self._bloom = self._bloom.merge(delta)
+            self._seen.insert(new_rows)
         return new_rows, n_new, stats
 
     def _commit_epoch(
@@ -373,16 +287,7 @@ class CrawlEngine:
                 seq_base=0,
             ).cache()  # the count, the seen filter and the write share one evaluation
             n = rows.count()
-            # this process wrote the whole frontier, so it seeds the
-            # seen filter from these rows: no epoch rebuilds it from
-            # the store
-            self._bloom = build_bloom(
-                rows.select("url_canon"),
-                "url_canon",
-                like=ShardedBloom.sized_for(
-                    self._bloom_capacity, self.cfg.bloom_shards, self.cfg.bloom_bits_per_item
-                ),
-            )
+            self._seen.seed(rows)
             # frontier is BUCKETED by host_hash (Iceberg bucket(N, host)
             # analog) — compaction later rewrites only the buckets its
             # parts touch — and WRITE ORDERED BY the dequeue key:
@@ -411,7 +316,7 @@ class CrawlEngine:
         meta = self.store.latest_metadata()
         epoch = int(meta.get("epoch", 0)) + 1
         frontier = self.store.read_table(self.spark, "frontier")
-        self._fold_hot_tier(frontier, epoch)
+        self._seen.fold_if_due(frontier, epoch)
         caches: list = []
         new_rows, n_new, stats = self._admit(
             cand, frontier, epoch, int(meta.get("next_seq", 1)), caches
@@ -429,7 +334,7 @@ class CrawlEngine:
         next_seq = int(meta.get("next_seq", 1))
         frontier = self.store.read_table(self.spark, "frontier")
         assert frontier is not None, "bootstrap first"
-        self._fold_hot_tier(frontier, epoch)
+        self._seen.fold_if_due(frontier, epoch)
 
         # --- dequeue with politeness cap. Full Q2 predicate
         # (status=='queued' AND run_at <= now, so backoff-requeued rows

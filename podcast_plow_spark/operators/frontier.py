@@ -103,33 +103,21 @@ def enqueue(
     num_partitions: int = 32,
     seq_base: int = 0,
     run_at: dt.datetime | None = None,
-    seq_mode: str = "dense",
 ) -> DataFrame:
     """Turn candidate rows (url, url_canon, host, fingerprint,
     [priority], [run_at], [seq_key...]) into frontier rows.
 
     ``seq`` is assigned deterministically — never
     ``monotonically_increasing_id`` (partition-layout dependent;
-    SURVEY.md §4.3). Two modes:
-
-    - ``dense``: ``row_number`` over the insertion-order key
-      (``seq_key`` if present, else ``url_canon``). Exactly mirrors the
-      reference's SERIAL ids, but the global window is a single-reducer
-      sort — only for parity-critical, bounded batches.
-    - ``keyed``: ``seq = seq_base + seq_key`` — order-isomorphic to
-      dense (seq only ever participates in ORDER BY, so any strictly
-      monotone mapping of the insertion key preserves the crawl
-      ordering) with **zero shuffle**. This is the 10^10-rows path; the
-      caller advances ``seq_base`` past the epoch's max key.
+    SURVEY.md §4.3): ``seq_base`` + the ``row_number`` over the
+    insertion-order key (``seq_key`` if present, else ``url_canon``).
+    This mirrors the reference's SERIAL ids exactly; the global window
+    is a single-reducer sort over the batch being enqueued.
     """
     cols = candidates.columns
-    if seq_mode == "keyed":
-        assert "seq_key" in cols, "keyed seq mode requires a unique seq_key column"
-        df = candidates.withColumn("seq", F.col("seq_key").cast("long") + F.lit(seq_base))
-    else:
-        order = [F.col("seq_key").asc()] if "seq_key" in cols else [F.col("url_canon").asc()]
-        w = Window.orderBy(*order)
-        df = candidates.withColumn("seq", F.row_number().over(w).cast("long") + F.lit(seq_base))
+    order = [F.col("seq_key").asc()] if "seq_key" in cols else [F.col("url_canon").asc()]
+    w = Window.orderBy(*order)
+    df = candidates.withColumn("seq", F.row_number().over(w).cast("long") + F.lit(seq_base))
     if "priority" not in cols:
         df = df.withColumn("priority", F.lit(default_priority))
     if "run_at" not in cols:

@@ -11,13 +11,14 @@ O(filter-size) pass (~15 GB at 12 bits/key) — doing it every epoch
 makes filter maintenance a flat per-epoch cost independent of batch
 size. With the hot tier, per-epoch maintenance is O(batch) (build +
 merge a batch-sized cuckoo) and the expensive Bloom fold is amortized
-over ``bloom_fold_epochs`` epochs (engine knob). A probe is
-bloom-OR-hot; the no-false-negative invariant (bloom ∪ hot ⊇ seen) is
-what keeps the exact-backstop bypass sound, and it holds by
+over ``fold_epochs`` epochs (``CrawlConfig.bloom_fold_epochs``). A
+probe is bloom-OR-hot; the no-false-negative invariant (bloom ∪ hot ⊇
+seen) is what keeps the exact-backstop bypass sound, and it holds by
 construction: the Bloom covers the full seen set from a process's
 first probe on (seeded from the first frontier when the process wrote
 it, else built from the store), and every later insertion lands in
-the hot tier until folded.
+the hot tier until folded. :class:`SeenFilter` owns that state and
+policy: the geometry, the tier, when to fold, and the cold build.
 
 Reference semantics are **exact** keyed lookups (podcast by rss_url,
 episode by guid-else-url, job by fingerprint — reference
@@ -54,6 +55,7 @@ from pyspark.sql import functions as F
 __all__ = [
     "BloomFilter",
     "CuckooFilter",
+    "SeenFilter",
     "ShardedBloom",
     "build_bloom",
     "build_cuckoo",
@@ -63,6 +65,15 @@ __all__ = [
 ]
 
 _BLOCK_WORDS = 8  # 8 × 64 = 512-bit blocks
+# SeenFilter geometry: the Bloom is sized for _CAPACITY keys at
+# _BITS_PER_KEY in every process, so a resumed process builds the same
+# geometry as an uninterrupted one; past _CAPACITY only the fpr grows
+# (the exact backstop keeps the answer exact). The hot tier is sized
+# ~2× the insertions expected between folds, and the load-triggered
+# early fold makes undersizing safe.
+_CAPACITY = 1_000_000
+_BITS_PER_KEY = 12
+_HOT_CAPACITY = 65_536
 
 
 def _splitmix64(x: np.ndarray) -> np.ndarray:
@@ -193,15 +204,17 @@ class CuckooFilter:
     public construction, re-implemented in numpy): 16-bit fingerprints,
     4-way buckets, the alternate bucket derived from the CURRENT bucket
     and the fingerprint alone (``i2 = i1 XOR h(fp)``), which is what
-    makes the filter mergeable and deletable without the original keys.
+    makes the filter mergeable without the original keys.
 
     Role here: the HOT tier of the URL-seen filter — the current
     window's insertions, batch-sized, rebuilt O(batch) per epoch and
     cleared on each Bloom fold. A cuckoo (vs a second Bloom) gives
-    (a) deletion — an aborted epoch's insertions can be retracted
-    without rebuilding, (b) better space/fpr at the small sizes the
-    hot tier lives at, (c) exact slot accounting (``load``), which
-    the engine uses to trigger an early fold before saturation.
+    (a) better space/fpr at the small sizes the hot tier lives at,
+    (b) exact slot accounting (``load``), which :class:`SeenFilter`
+    uses to trigger an early fold before saturation. The
+    construction's deletion is not implemented: nothing retracts an
+    insertion, since a killed epoch's tier dies with its process and
+    the resumed process rebuilds the filter from the store.
 
     Determinism: hashing is splitmix64 on the same int64 key column
     the Bloom uses; eviction order is a counter-derived slot choice —
@@ -312,33 +325,6 @@ class CuckooFilter:
             return
         fp, i1, _ = self._fp_i1_i2(keys)
         self._bulk_place(i1, fp)
-
-    def delete_many(self, keys: np.ndarray) -> int:
-        """Remove ONE stored occurrence per key (the cuckoo capability
-        a Bloom lacks). Only delete keys that were inserted — deleting
-        an absent key may evict another key's colliding fingerprint
-        (standard cuckoo-filter caveat). Returns #removed."""
-        if len(keys) == 0:
-            return 0
-        fp, i1, i2 = self._fp_i1_i2(keys)
-        removed = 0
-        for j in range(len(keys)):
-            f = int(fp[j])
-            done = False
-            for b in (int(i1[j]), int(i2[j])):
-                s = np.nonzero(self.buckets[b] == f)[0]
-                if len(s):
-                    self.buckets[b, s[0]] = 0
-                    removed += 1
-                    done = True
-                    break
-            if not done:
-                for si, (bi, sf) in enumerate(self.stash):
-                    if sf == f and bi in (int(i1[j]), int(i2[j])):
-                        self.stash.pop(si)
-                        removed += 1
-                        break
-        return removed
 
     # -- queries --------------------------------------------------------
 
@@ -566,12 +552,11 @@ def seen_filter_exact(
     candidates: DataFrame,
     seen: DataFrame,
     bloom: ShardedBloom,
+    cache_registry: "list[DataFrame]",
     key_col: str = "url_canon",
-    measure_fpr: bool = False,
-    cache_registry: "list[DataFrame] | None" = None,
     hot: "CuckooFilter | None" = None,
-) -> tuple[DataFrame, DataFrame | None]:
-    """Returns (unseen_candidates, fpr_stats-or-None).
+) -> tuple[DataFrame, DataFrame]:
+    """Returns (unseen_candidates, fpr_stats).
 
     ``hot``: optional cuckoo hot tier covering insertions newer than
     the last Bloom fold (probe = bloom OR hot; the union must cover
@@ -579,32 +564,27 @@ def seen_filter_exact(
     definite-unseen bypass sound).
 
     Path: bloom probe → definite-unseen bypass ∪ (maybe-seen ∖ exact
-    anti-join). With ``measure_fpr`` the per-partition (urls_in,
-    bloom_pos) stats for lineage are computed, each row carrying the
-    probe's total ``false_pos_total`` (flagged candidates the exact
-    join found unseen) — this runs an extra action, so it's opt-in
-    (the engine turns it on).
+    anti-join). The stats are the per-partition (urls_in, bloom_pos)
+    rows for lineage, each carrying the probe's total
+    ``false_pos_total`` (flagged candidates the exact join found
+    unseen); counting that total runs one extra action.
 
-    ``cache_registry``: when given, the probed-candidates DataFrame is
-    cached and the handle appended for the CALLER to unpersist after
-    materializing the result. Without it, the broadcast subjobs
+    The probed-candidates DataFrame is cached and its handle appended
+    to ``cache_registry`` for the CALLER to unpersist after
+    materializing the result. Without the cache, the broadcast subjobs
     (maybe_keys, hits) and the main job each re-evaluate the candidate
     subtree — for UDF-synthesized candidates that's the canonicalize +
     probe python stages run 3×, a measured ~30% of the epoch.
     """
-    probed = probe_bloom(candidates, bloom, key_col, hot=hot)
-    if measure_fpr or cache_registry is not None:
-        probed = probed.cache()
-        # Materialize NOW: the maybe_keys/hits broadcast exchanges
-        # below execute as concurrent async subjobs of the caller's
-        # action, and Spark cache fills are not locked — racing
-        # readers of a cold cache each recompute the full candidate
-        # subtree (canonicalize + probe UDFs ran 2× per epoch,
-        # verified in SQL-node metrics). One narrow count here pins
-        # the cache before any branch can race.
-        probed.count()
-        if cache_registry is not None:
-            cache_registry.append(probed)
+    probed = probe_bloom(candidates, bloom, key_col, hot=hot).cache()
+    # Materialize NOW: the maybe_keys/hits broadcast exchanges below
+    # execute as concurrent async subjobs of the caller's action, and
+    # Spark cache fills are not locked — racing readers of a cold cache
+    # each recompute the full candidate subtree (canonicalize + probe
+    # UDFs ran 2× per epoch, verified in SQL-node metrics). One narrow
+    # count here pins the cache before any branch can race.
+    probed.count()
+    cache_registry.append(probed)
     definite_new = probed.where(~F.col("maybe_seen")).drop("maybe_seen")
     maybe = probed.where(F.col("maybe_seen")).drop("maybe_seen")
     # Exact backstop WITHOUT shuffling the (huge) seen side: the Bloom
@@ -619,9 +599,6 @@ def seen_filter_exact(
     truly_new = maybe.join(F.broadcast(hits), key_col, "left_anti")
     unseen = definite_new.unionByName(truly_new)
 
-    if not measure_fpr:
-        return unseen, None
-
     stats = (
         probed.withColumn("partition_id", F.spark_partition_id())
         .groupBy("partition_id")
@@ -632,3 +609,90 @@ def seen_filter_exact(
     )
     fp = truly_new.groupBy().agg(F.count(F.lit(1)).alias("__survived")).collect()[0]["__survived"]
     return unseen, stats.withColumn("false_pos_total", F.lit(fp).cast("long"))
+
+
+class SeenFilter:
+    """The crawl's URL-seen filter over ``url_canon``: the
+    :class:`ShardedBloom` cold set, the optional :class:`CuckooFilter`
+    hot tier and the fold policy between them, behind the four calls an
+    epoch makes — :meth:`seed`, :meth:`fold_if_due`, :meth:`unseen` and
+    :meth:`insert`.
+
+    ``fold_epochs`` > 1 sends each insertion to the hot tier (O(batch))
+    and folds the tier into the Bloom (an O(filter-size) OR) every
+    ``fold_epochs`` epochs, or early once the tier passes 0.8 load; the
+    tier is the sliding window of insertions since the last fold.
+    ``fold_epochs`` = 1 ORs every insertion into the Bloom and keeps no
+    tier. Either way the exact backstop keeps the unseen set exact.
+    """
+
+    def __init__(self, n_shards: int = 1, fold_epochs: int = 1):
+        self.n_shards = n_shards
+        self.fold_epochs = fold_epochs
+        #: None until :meth:`seed`, or in a cold process until its first probe
+        self.bloom: ShardedBloom | None = None
+        #: insertions newer than the last fold; None when there are none
+        self.hot: CuckooFilter | None = None
+        #: the last ``discovered_epoch`` the Bloom covers
+        self.last_fold_epoch = 0
+        self._epochs_since_fold = 0
+
+    def seed(self, rows: DataFrame) -> None:
+        """Cover ``rows``, the first frontier, written by this process:
+        no later probe of this process rebuilds the filter from the
+        store."""
+        self.bloom = build_bloom(
+            rows.select("url_canon"),
+            "url_canon",
+            like=ShardedBloom.sized_for(_CAPACITY, self.n_shards, _BITS_PER_KEY),
+        )
+
+    def fold_if_due(self, frontier: DataFrame, epoch: int) -> None:
+        """At the start of ``epoch``: fold the hot tier into the Bloom
+        when due. ``frontier``, read for this epoch, holds every row the
+        tier covers (``discovered_epoch`` past the last fold), so the
+        fold is one pushed-down scan of just those rows."""
+        if self.hot is not None and (
+            self._epochs_since_fold >= self.fold_epochs or self.hot.load > 0.8
+        ):
+            fold_rows = frontier.where(
+                F.col("discovered_epoch") > F.lit(int(self.last_fold_epoch))
+            ).select("url_canon")
+            self.bloom = self.bloom.merge(build_bloom(fold_rows, "url_canon", like=self.bloom))
+            self.hot = None
+            self._epochs_since_fold = 0
+            self.last_fold_epoch = epoch - 1
+
+    def unseen(
+        self, cand: DataFrame, frontier: DataFrame, epoch: int, caches: "list[DataFrame]"
+    ) -> tuple[DataFrame, DataFrame]:
+        """:func:`seen_filter_exact` of ``cand`` against ``frontier``.
+        A cold process (the frontier was written elsewhere) first builds
+        the Bloom, in one distributed pass over ``frontier``; an epoch
+        that probes nothing never builds it."""
+        seen = frontier.select("url_canon")
+        if self.bloom is None:
+            self.bloom = build_bloom(
+                seen,
+                "url_canon",
+                expected_items=_CAPACITY,
+                bits_per_item=_BITS_PER_KEY,
+                n_shards=self.n_shards,
+            )
+            # every row read for this epoch has discovered_epoch ≤ epoch - 1
+            self.last_fold_epoch = epoch - 1
+        return seen_filter_exact(cand, seen, self.bloom, caches, hot=self.hot)
+
+    def insert(self, new_rows: DataFrame) -> None:
+        """Cover ``new_rows``, just admitted to the frontier: into the
+        hot tier while ``fold_epochs`` > 1, else OR-merged into the
+        Bloom. Each insert runs on the driver over keys the JVM
+        computes."""
+        keys = new_rows.select("url_canon")
+        if self.fold_epochs > 1:
+            if self.hot is None:
+                self.hot = CuckooFilter.sized_for(_HOT_CAPACITY)
+            self.hot = self.hot.merge(build_cuckoo(keys, "url_canon", like=self.hot))
+            self._epochs_since_fold += 1
+        else:
+            self.bloom = self.bloom.merge(build_bloom(keys, "url_canon", like=self.bloom))

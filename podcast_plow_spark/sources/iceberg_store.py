@@ -237,9 +237,6 @@ class IcebergStore:
         self.spark.sql(compact_sql(self.catalog, self.namespace, name))
         return []
 
-    def carry_forward(self, name: str) -> None:
-        """No-op: Iceberg tables persist across snapshots by default."""
-
     # -- snapshots / metadata -------------------------------------------
 
     def _table_names(self) -> list[str]:

@@ -365,12 +365,6 @@ class SnapshotStore:
             return manifest["tables"][name]
         return None
 
-    def carry_forward(self, name: str) -> None:
-        """Stage the current committed version of ``name`` unchanged."""
-        manifest = self._latest_manifest()
-        if manifest and name in manifest["tables"]:
-            self._staged[name] = manifest["tables"][name]
-
     # -- commit / read -------------------------------------------------
 
     def commit(self, epoch: int, metadata: dict | None = None) -> None:

@@ -7,6 +7,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+import podcast_plow_spark.crawl.engine as engine_mod
+import podcast_plow_spark.operators.seen as seen_mod
 from podcast_plow_spark.crawl.engine import CrawlConfig, CrawlEngine
 from podcast_plow_spark.operators.politeness import schedule_fetches
 from podcast_plow_spark.operators.seen import BloomFilter, build_bloom, seen_filter_exact
@@ -21,24 +23,22 @@ def fixtures(tmp_path_factory):
     return make_fixtures(FixtureSpec(root=root, n_feeds=3, entries_per_feed=4))
 
 
-def _spy(monkeypatch, name, record):
-    """Wrap the engine module's ``name``; each call appends ``record(kwargs)``."""
-    import podcast_plow_spark.crawl.engine as engine_mod
-
+def _spy(monkeypatch, module, name, record):
+    """Wrap ``module.name``; each call appends ``record(kwargs)``."""
     calls: list = []
-    real = getattr(engine_mod, name)
+    real = getattr(module, name)
 
     def spy(*args, **kwargs):
         calls.append(record(kwargs))
         return real(*args, **kwargs)
 
-    monkeypatch.setattr(engine_mod, name, spy)
+    monkeypatch.setattr(module, name, spy)
     return calls
 
 
 def _cold_bloom_spy(monkeypatch):
     """True per ``build_bloom`` over the whole frontier (no ``like=``)."""
-    return _spy(monkeypatch, "build_bloom", lambda kw: kw.get("like") is None)
+    return _spy(monkeypatch, seen_mod, "build_bloom", lambda kw: kw.get("like") is None)
 
 
 def _run(spark, fixtures, store_dir, max_epochs=100, resume=False, **cfg):
@@ -75,7 +75,7 @@ def test_resume_after_kill_is_byte_identical(spark, fixtures, tmp_path_factory, 
     d2 = str(tmp_path_factory.mktemp("interrupted"))
     _run(spark, fixtures, d2, max_epochs=1, batch_size=2)  # "crash" after epoch 1
     cold = _cold_bloom_spy(monkeypatch)
-    probes = _spy(monkeypatch, "seen_filter_exact", lambda kw: True)
+    probes = _spy(monkeypatch, seen_mod, "seen_filter_exact", lambda kw: True)
     resumed = _run(spark, fixtures, d2, resume=True, batch_size=2)
     assert sum(cold) == 1 and probes, (cold, probes)
 
@@ -126,7 +126,7 @@ class TestBloom:
             [(f"https://h{i}.com/p",) for i in range(400, 900)], "url_canon string"
         )
         bloom = build_bloom(seen, "url_canon")
-        unseen, _stats = seen_filter_exact(cand, seen, bloom)
+        unseen, _stats = seen_filter_exact(cand, seen, bloom, [])
         got = {r["url_canon"] for r in unseen.collect()}
         want = {f"https://h{i}.com/p" for i in range(500, 900)}
         assert got == want  # exact despite the probabilistic fast path
@@ -321,7 +321,7 @@ class TestShardedBloom:
         seen = spark.createDataFrame(self._urls(0, 500), "url_canon string")
         cand = spark.createDataFrame(self._urls(400, 900), "url_canon string")
         sb = build_bloom(seen, "url_canon", n_shards=8)
-        unseen, _ = seen_filter_exact(cand, seen, sb)
+        unseen, _ = seen_filter_exact(cand, seen, sb, [])
         got = {r["url_canon"] for r in unseen.collect()}
         want = {u for (u,) in self._urls(500, 900)}
         assert got == want
@@ -346,7 +346,7 @@ class TestShardedBloom:
         seen = spark.createDataFrame(self._urls(0, 200), "url_canon string")
         cand = spark.createDataFrame(self._urls(100, 300), "url_canon string")
         sb = build_bloom(seen, "url_canon", n_shards=4)
-        unseen, stats = seen_filter_exact(cand, seen, sb, measure_fpr=True)
+        unseen, stats = seen_filter_exact(cand, seen, sb, [])
         assert unseen.count() == 100
         rows = stats.collect()
         assert rows and all(r["urls_in"] >= 0 and r["bloom_pos"] >= 0 for r in rows)
@@ -429,7 +429,41 @@ class TestHotTierFold:
         # after the final fold it may be None again, so check the fold
         # bookkeeping advanced past the initial state
         eng = engines[3]
-        assert eng._hot is not None or eng._last_fold_epoch > 0
+        assert eng._seen.hot is not None or eng._seen.last_fold_epoch > 0
+
+    def test_seen_filter_unseen_exact_across_a_fold(self, spark):
+        """``SeenFilter`` alone, no store or engine: A seeds the Bloom
+        and B lands in the hot tier over three epochs (at
+        ``fold_epochs=3`` the fold is due at the start of the fourth).
+        The unseen part of A ∪ B ∪ C is exactly C both before the fold,
+        when only the tier covers B, and after it, when the tier is
+        gone."""
+        urls = lambda lo, hi: [f"https://h{i % 7}.example.com/p{i}" for i in range(lo, hi)]
+        df = lambda rows: spark.createDataFrame(rows, "url_canon string, discovered_epoch long")
+        a, c = urls(0, 100), urls(190, 250)
+        bs = [urls(100, 130), urls(130, 160), urls(160, 190)]
+        cand = spark.createDataFrame([(u,) for u in a + sum(bs, []) + c], "url_canon string")
+        stored = [(u, 0) for u in a]
+        sf = seen_mod.SeenFilter(n_shards=1, fold_epochs=3)
+
+        def unseen(epoch):
+            caches: list = []
+            got = sorted(r["url_canon"] for r in sf.unseen(cand, df(stored), epoch, caches)[0].collect())
+            for h in caches:
+                h.unpersist()
+            return got
+
+        sf.seed(df(stored))
+        for epoch, b in enumerate(bs, start=1):
+            sf.fold_if_due(df(stored), epoch)
+            new = [(u, epoch) for u in b]
+            sf.insert(df(new))
+            stored += new
+        assert sf.hot is not None and sf.last_fold_epoch == 0
+        assert unseen(4) == sorted(c)
+        sf.fold_if_due(df(stored), 4)
+        assert sf.hot is None and sf.last_fold_epoch == 3
+        assert unseen(4) == sorted(c)
 
     def test_sharded_bloom_with_hot_tier_identical(self, spark, fixtures, tmp_path_factory):
         """The 10^10 flagship config — sharded Bloom + cuckoo hot tier
@@ -454,7 +488,7 @@ class TestHotTierFold:
         d2 = str(tmp_path_factory.mktemp("hot_interrupted"))
         _run(spark, fixtures, d2, max_epochs=1, **cfg)  # killed with tier state lost
         cold = _cold_bloom_spy(monkeypatch)
-        hot_inserts = _spy(monkeypatch, "build_cuckoo", lambda kw: True)
+        hot_inserts = _spy(monkeypatch, seen_mod, "build_cuckoo", lambda kw: True)
         resumed = _run(spark, fixtures, d2, resume=True, **cfg)
         assert sum(cold) == 1 and hot_inserts, (cold, hot_inserts)
         assert resumed.crawl_order() == full.crawl_order()
@@ -529,7 +563,7 @@ class TestEpochWork:
 
     @staticmethod
     def _salt_spy(monkeypatch):
-        return _spy(monkeypatch, "salt_hot_hosts", lambda kw: kw.get("hot_threshold"))
+        return _spy(monkeypatch, engine_mod, "salt_hot_hosts", lambda kw: kw.get("hot_threshold"))
 
     @pytest.fixture(scope="class")
     def crawl(self, spark, fixtures, tmp_path_factory):

@@ -4,8 +4,8 @@ cuckoo-filter hot tier merged via treeAggregate").
 Public construction: Fan/Andersen/Kaminsky/Mitzenmacher, CoNEXT 2014 —
 16-bit partial keys, 4-way buckets, XOR alternate bucket. These tests
 pin the properties the engine's exactness bypass depends on (no false
-negatives), the merge/delete capabilities, and distributed-build
-parity with a local build.
+negatives), the merge capability, and distributed-build parity with
+a local build.
 """
 
 from __future__ import annotations
@@ -54,20 +54,6 @@ class TestCuckooLocal:
         # originals untouched (merge returns a new filter)
         assert not b.contains_many(a_keys).all()
 
-    def test_delete_removes_without_false_negatives_elsewhere(self):
-        ks = _keys(0, 10_000, seed=6)
-        cf = CuckooFilter.sized_for(len(ks))
-        cf.add_many(ks)
-        gone, keep = ks[:2_000], ks[2_000:]
-        removed = cf.delete_many(gone)
-        assert removed == len(gone)
-        # survivors: never a false negative
-        assert cf.contains_many(keep).all()
-        # most deleted keys now read absent (a few may still hit via
-        # another key's colliding fingerprint — that's the documented
-        # cuckoo semantics, false POSITIVES only)
-        assert cf.contains_many(gone).mean() < 0.01
-
     def test_eviction_path_and_stash_keep_membership(self):
         # overfill well past the sizing target to force eviction chains
         # (and possibly stash entries); membership must still be exact
@@ -112,7 +98,7 @@ class TestCuckooDistributed:
         cand = spark.createDataFrame(mk(400, 900), "url_canon string")
         bloom = build_bloom(cold, expected_items=500)
         hot = build_cuckoo(hot_rows, expected_items=200)
-        unseen, _ = seen_filter_exact(cand, seen, bloom, hot=hot)
+        unseen, _ = seen_filter_exact(cand, seen, bloom, [], hot=hot)
         got = sorted(r["url_canon"] for r in unseen.collect())
         want = sorted(u for (u,) in mk(700, 900))
         assert got == want
@@ -128,7 +114,7 @@ class TestCuckooDistributed:
         seen = cold.unionByName(hot_rows)
         cand = spark.createDataFrame(mk(600, 800), "url_canon string")
         bloom = build_bloom(cold, expected_items=500)
-        unseen, _ = seen_filter_exact(cand, seen, bloom)  # hot omitted
+        unseen, _ = seen_filter_exact(cand, seen, bloom, [])  # hot omitted
         got = {r["url_canon"] for r in unseen.collect()}
         dupes_let_through = got & {u for (u,) in mk(600, 700)}
         assert dupes_let_through, "bypass should misclassify unfolded seen rows"

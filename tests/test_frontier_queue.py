@@ -174,7 +174,7 @@ class TestDequeueBatchPolite:
                 for i in range(n)
             ],
         )
-        return fr.enqueue(cand, epoch=0, run_at=NOW - dt.timedelta(hours=1), seq_mode="keyed")
+        return fr.enqueue(cand, epoch=0, run_at=NOW - dt.timedelta(hours=1))
 
     def test_exact_path_matches_greedy(self, spark):
         frontier = self._frontier(spark, n=400)

@@ -84,7 +84,7 @@ def test_exact_seen_backstop_uses_broadcast_not_shuffle(spark):
     seen = spark.createDataFrame([(f"https://h{i}.com/p",) for i in range(2000)], "url_canon string")
     cand = spark.createDataFrame([(f"https://h{i}.com/p",) for i in range(1500, 2500)], "url_canon string")
     bloom = build_bloom(seen, expected_items=2000)
-    unseen, _ = seen_filter_exact(cand, seen, bloom)
+    unseen, _ = seen_filter_exact(cand, seen, bloom, [])
     plan = _plan(unseen)
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
@@ -124,7 +124,7 @@ def test_polite_dequeue_store_read_no_full_frontier_exchange(spark, tmp_path_fac
         .withColumn("url_canon", F.col("url"))
         .withColumn("fingerprint", F.sha2(F.col("url"), 256))
     )
-    store.write_bucketed("frontier", fr.enqueue(raw, epoch=0, seq_mode="keyed"))
+    store.write_bucketed("frontier", fr.enqueue(raw, epoch=0))
     store.commit(0)
 
     frontier = store.read_table(spark, "frontier")  # plain parquet scan — no partitioning info
@@ -175,7 +175,7 @@ def test_prefix_filter_pushed_through_mor_overlay(spark, tmp_path_factory):
     )
     store.write_bucketed(
         "frontier",
-        fr.enqueue(raw, epoch=0, seq_mode="keyed"),
+        fr.enqueue(raw, epoch=0),
         order_by=[["priority", "desc"], ["run_at", "asc"], ["seq", "asc"]],
     )
     store.commit(0)
@@ -389,7 +389,7 @@ def test_cached_small_dequeue_batch_is_coalesced(spark):
         F.concat(F.lit("h"), (F.col("id") % 40).cast("string"), F.lit(".com")).alias("host"),
         F.col("id").alias("seq_key"),
     ).withColumn("url_canon", F.col("url")).withColumn("fingerprint", F.sha2(F.col("url"), 256))
-    frontier = fr.enqueue(raw, epoch=0, seq_mode="keyed")
+    frontier = fr.enqueue(raw, epoch=0)
     # without the global crawl_rank window, the batch keeps the
     # partitioning of the per-host politeness window's shuffle
     batch = fr.dequeue_batch_polite(
